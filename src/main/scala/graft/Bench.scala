@@ -143,26 +143,20 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // CC-loop pipelines compile >100 distinct codegen classes and the
-      // round-robin pass order needs the WHOLE suite's classes resident
-      // for pass 2 to stay warm; the default 100-entry cache thrashes
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      // a long GC pause must not escalate into executor-heartbeat RPC
-      // timeouts mid-query (observed once in a driver-side run)
-      .config("spark.network.timeout", "300s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
-    spark
-  }
+  /** The bench session's overrides of [[GraftSession.local]]'s defaults;
+    * ProfileQuery and ExplainQuery build the same session.
+    */
+  private[graft] val sessionConf: Map[String, String] = Map(
+    // CC-loop pipelines compile >100 distinct codegen classes and the
+    // round-robin pass order needs the WHOLE suite's classes resident
+    // for pass 2 to stay warm; the default 100-entry cache thrashes
+    "spark.sql.codegen.cache.maxEntries" -> "8000",
+    // a long GC pause must not escalate into executor-heartbeat RPC
+    // timeouts mid-query (observed once in a driver-side run)
+    "spark.network.timeout" -> "300s")
+
+  private def newSession(cores: Int): SparkSession =
+    GraftSession.local("graft-bench", cores, sessionConf)
 
   /** Times `names` in this JVM; returns (name, min-of-passes | -1 on failure).
     *
@@ -251,7 +245,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
     val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
     // SPARK_GRAFT_ONLY=q20_dedup_content,q23_... restricts the run to a
@@ -270,7 +264,7 @@ object Bench {
 
     val results: Seq[(String, Double)] =
       if (isChild) {
-        val spark = newSession(cpus)
+        val spark = newSession(cores)
         val rs = timeQueries(spark, sfDir, passes, names)
         rs.foreach { case (n, s) => println(s"BENCHQ\t$n\t${num(s, 4)}") }
         Console.out.flush()
@@ -282,27 +276,21 @@ object Bench {
         // stopped afterwards (its non-daemon threads would otherwise keep
         // this JVM alive past main).
         var fallback: Option[SparkSession] = None
-        def fb: SparkSession = { if (fallback.isEmpty) fallback = Some(newSession(cpus)); fallback.get }
+        def fb: SparkSession = { if (fallback.isEmpty) fallback = Some(newSession(cores)); fallback.get }
         val rs = names.grouped(chunkSize).toSeq.flatMap { chunk =>
           forkChunk(chunk).getOrElse(timeQueries(fb, sfDir, passes, chunk))
         }
         fallback.foreach(_.stop())
         rs
       } else {
-        val spark = newSession(cpus)
+        val spark = newSession(cores)
         val rs = timeQueries(spark, sfDir, passes, names)
         spark.stop()
         rs
       }
 
     val calPost = calibrate()
-    // local[$cpus] is always numeric here (the env default is "32");
-    // degrade to the physical core count rather than crash the run if
-    // someone exports a non-numeric value like "*"
-    val calMt = calibrateMt(
-      try cpus.toInt
-      catch { case _: NumberFormatException =>
-        Runtime.getRuntime.availableProcessors })
+    val calMt = calibrateMt(cores)
     val cal = math.min(calPre match { case v if v < 0 => calPost; case v => v },
       calPost)
     val calStr = s""""calibration":${num(cal, 3)},"calibration_pre":${

@@ -2,15 +2,31 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended defaults.
+/** Session factory with the engine's recommended defaults — the one place
+  * graft builds a `SparkSession` (`lintCheck` rejects any other builder).
   *
   * Local mode is for dev/test only; on a real cluster the same settings
   * arrive via spark-submit conf. AQE stays on everywhere: it gives runtime
   * join re-selection, skew-join splitting and partition coalescing, which
   * is our first line of defense at 100 TB (SURVEY.md §4).
+  *
+  * Artifact isolation is off. With Spark's default (on), every cloned
+  * session — each streaming run clones one — gets its own executor
+  * classloader, and the codegen cache, keyed by (classloader, code), then
+  * misses and recompiles every generated class on every run, while the old
+  * loaders and their classes stay reachable from the cache. graft never
+  * adds a jar or artifact to a session, so one shared loader loses nothing.
+  * A Spark Connect deployment, whose clients do add per-session artifacts,
+  * builds its session from spark-submit conf rather than through `local`
+  * (whose builder setting would win) and re-enables isolation there:
+  * `--conf spark.sql.artifact.isolation.enabled=true`.
   */
 object GraftSession {
-  def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
+  /** `conf` entries are applied after (and so override) the defaults; each
+    * entry point passes only what it needs beyond them.
+    */
+  def local(appName: String = "graft", cores: Int = defaultCores,
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -27,6 +43,9 @@ object GraftSession {
       // thrashes and re-pays janino compiles on every execution (static
       // conf: applies to the first session built in the JVM)
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // one executor classloader for every (cloned) session: see above
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // native SQL functions + the null-guard pruning optimizer rule --

@@ -36,7 +36,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val targetRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "2000000").toLong
     val batches = math.max(2, sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "8").toInt)
     // mode "events" (default): the dedup→enrich→window ingest chain.
@@ -60,22 +60,14 @@ object StreamBench {
     // per microbatch; docs/sec of the FULL incremental-dedup path, the
     // most state-coupled member of the ingest tier.
     val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "events")
-    if (mode == "family") { familyMain(sfDir, cpus, batches); return }
-    if (mode == "bm25") { bm25Main(sfDir, cpus, batches); return }
-    if (mode == "span") { spanMain(sfDir, cpus, batches); return }
-    if (mode == "phash") { phashMain(sfDir, cpus, batches); return }
-    if (mode == "embed") { embedMain(sfDir, cpus, batches); return }
-    if (mode == "quota") { quotaMain(sfDir, cpus, batches); return }
+    if (mode == "family") { familyMain(sfDir, cores, batches); return }
+    if (mode == "bm25") { bm25Main(sfDir, cores, batches); return }
+    if (mode == "span") { spanMain(sfDir, cores, batches); return }
+    if (mode == "phash") { phashMain(sfDir, cores, batches); return }
+    if (mode == "embed") { embedMain(sfDir, cores, batches); return }
+    if (mode == "quota") { quotaMain(sfDir, cores, batches); return }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true") // batch plans only; SS ignores AQE
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench", cores)
 
     val work = graft.queries.Scratch.dir("graft-streambench")
     val events = Tables.events(spark, sfDir)
@@ -141,9 +133,9 @@ object StreamBench {
     * counts non-representative members — every replicated doc must
     * have joined its copy family.
     */
-  private def familyMain(sfDir: String, cpus: String, batches: Int): Unit =
+  private def familyMain(sfDir: String, cores: Int, batches: Int): Unit =
     indexIngest("family_ingest_throughput", "graft-streambench-family",
-      sfDir, cpus, batches)(
+      sfDir, cores, batches)(
       (b, idx) =>
         graft.llm.FamilyIndex.build(
           graft.llm.MinHashDedup.nearDupPairs(b, "doc_id", "text",
@@ -206,9 +198,9 @@ object StreamBench {
     * search proves the built index answers queries. Docs default to
     * SPARK_GRAFT_STREAM_DOCS (100k ≈ 20x the sf0.1 corpus).
     */
-  private def bm25Main(sfDir: String, cpus: String, batches: Int): Unit =
+  private def bm25Main(sfDir: String, cores: Int, batches: Int): Unit =
     indexIngest("bm25_ingest_throughput", "graft-streambench-bm25",
-      sfDir, cpus, batches)(
+      sfDir, cores, batches)(
       (b, idx) => graft.llm.Bm25Index.build(b, idx, "doc_id", "text"),
       (s, b, idx) => graft.llm.Bm25Index.addBatch(s, idx, b, "doc_id", "text"),
       (s, idx, docs) => {
@@ -226,9 +218,9 @@ object StreamBench {
     * copies are VERBATIM duplicates, so every base doc ≥ minSpan tokens
     * must come back fully cut (dup_tokens > 0 rows is the assert).
     */
-  private def spanMain(sfDir: String, cpus: String, batches: Int): Unit =
+  private def spanMain(sfDir: String, cores: Int, batches: Int): Unit =
     indexIngest("span_ingest_throughput", "graft-streambench-span",
-      sfDir, cpus, batches)(
+      sfDir, cores, batches)(
       (b, idx) => graft.llm.SpanDedupIndex.build(b, idx, "doc_id", "text"),
       (s, b, idx) =>
         graft.llm.SpanDedupIndex.addBatch(s, idx, b, "doc_id", "text"),
@@ -248,17 +240,9 @@ object StreamBench {
     * interleaved, so cross-batch probing does real work; the decision
     * count is the proof the loop found them.
     */
-  private def phashMain(sfDir: String, cpus: String, batches: Int): Unit = {
+  private def phashMain(sfDir: String, cores: Int, batches: Int): Unit = {
     val targetDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench", cores)
     import spark.implicits._
 
     val work = graft.queries.Scratch.dir("graft-streambench-phash")
@@ -332,18 +316,10 @@ object StreamBench {
     * the correlated-plane bug (decaying batch rates at tiny data =
     * collapsed signature entropy; see rademacherPlanes).
     */
-  private def embedMain(sfDir: String, cpus: String, batches: Int): Unit = {
+  private def embedMain(sfDir: String, cores: Int, batches: Int): Unit = {
     val targetDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "100000").toLong
     val planes = sys.env.getOrElse("SPARK_GRAFT_STREAM_EMBED_PLANES", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench", cores)
 
     val work = graft.queries.Scratch.dir("graft-streambench-embed")
     val nFiles = batches * 2
@@ -414,7 +390,7 @@ object StreamBench {
     * do work). Weights are deterministic (xxhash64 mod 100 + 1), so
     * the admitted count is a fixed object run-to-run.
     */
-  private def quotaMain(sfDir: String, cpus: String, batches: Int): Unit = {
+  private def quotaMain(sfDir: String, cores: Int, batches: Int): Unit = {
     val targetDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "500000").toLong
     val nSources = sys.env.getOrElse("SPARK_GRAFT_STREAM_SOURCES", "1000").toInt
     val quota = sys.env.getOrElse("SPARK_GRAFT_STREAM_QUOTA", "12500").toLong
@@ -427,15 +403,7 @@ object StreamBench {
     // is invisible in the admission stream, which is exactly why the
     // telemetry must come from inside the state machine.
     val zipf = sys.env.get("SPARK_GRAFT_STREAM_ZIPF").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench", cores)
 
     val work = graft.queries.Scratch.dir("graft-streambench-quota")
     val nFiles = batches * 2
@@ -526,7 +494,7 @@ object StreamBench {
     * covers planning + every fold; output contract matches [[Bench]].
     */
   private def indexIngest(metric: String, scratch: String, sfDir: String,
-      cpus: String, batches: Int)(
+      cores: Int, batches: Int)(
       build: (org.apache.spark.sql.DataFrame, String) => Unit,
       add: (SparkSession, org.apache.spark.sql.DataFrame, String) => Unit,
       prove: (SparkSession, String, org.apache.spark.sql.DataFrame) => Long,
@@ -550,15 +518,7 @@ object StreamBench {
       // a measured ~30% materialization tax for nothing
       cacheBatch: Boolean = false): Unit = {
     val targetDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench", cores)
 
     val work = graft.queries.Scratch.dir(scratch)
     val nFiles = batches * 2

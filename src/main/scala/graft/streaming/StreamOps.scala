@@ -666,11 +666,13 @@ object StreamOps {
   /** Scope the RocksDB state store provider (required by
     * `transformWithState`) to `body`, restoring the previous provider
     * after — streaming confs are read at query START, so the conf only
-    * needs to hold while the query inside `body` starts and runs.
+    * needs to hold while the query inside `body` starts and runs. A key
+    * that was unset before is unset again (`getOption` would return
+    * Spark's default and pin it as an explicit setting).
     */
   def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body

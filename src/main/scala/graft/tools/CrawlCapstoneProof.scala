@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.{NGramJaccard, TextPipeline, TokenBudget}
@@ -37,18 +36,8 @@ object CrawlCapstoneProof {
       graft.queries.Scratch.dir("graft-capstoneproof"))
     val legs = args.lift(2).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 10, 100))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local("graft-capstoneproof", cores)
 
     legs.foreach { copies =>
       val dir =

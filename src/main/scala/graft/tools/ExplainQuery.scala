@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `explain("formatted")` for the named queries to
   * `<outDir>/<query>_<suffix>.txt` — the plan-evidence artifact the
   * optimization rounds commit under plans/rNN/.
@@ -16,21 +14,11 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(sys.error("set SPARK_GRAFT_ONLY=<query,...>"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.GraftSession.local("graft-explain", cores, conf = graft.Bench.sessionConf)
     new java.io.File(outDir).mkdirs()
     for (name <- names) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

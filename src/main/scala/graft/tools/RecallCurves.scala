@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Iterate.MaterializeOps
 
@@ -37,18 +36,10 @@ object RecallCurves {
     String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(d))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_RECALL_DOCS", "50000").toLong
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_RECALL_VECS", "50000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-recallcurves", cores)
     val work = graft.queries.Scratch.dir("graft-recallcurves")
 
     // ---------------- MinHash banding ----------------

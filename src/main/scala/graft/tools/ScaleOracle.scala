@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 ORACLE dataset — a 10× replica of every sf0.1 table with
@@ -43,16 +43,7 @@ object ScaleOracle {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1-oracle")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.GraftSession.defaultCores}]")
-      .appName("graft-scale-oracle")
-      .config("spark.sql.shuffle.partitions",
-        graft.GraftSession.defaultCores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-scale-oracle")
 
     def table(name: String): DataFrame =
       spark.read.parquet(s"$sfDir/$name.parquet")

@@ -245,17 +245,8 @@ object ScaleProof {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = args.lift(1).getOrElse(
       graft.queries.Scratch.dir("graft-scaleproof"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local("graft-scaleproof", cores)
     // SPARK_GRAFT_CHECKPOINT_DIR flips every Iterate.materialize in the
     // run to RELIABLE checkpoints (operators/Iterate.scala: dir set ⇒
     // reliable) — the knob for measuring reliable-mode overhead on an

@@ -439,6 +439,16 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(batch.except(streamed).count() == 0)
   }
 
+  test("withRocksDbStateStore leaves the session conf exactly as it found it") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getAll.toSet
+    val inside = StreamOps.withRocksDbStateStore(spark)(spark.conf.get(key))
+    assert(inside.endsWith("RocksDBStateStoreProvider"))
+    val after = spark.conf.getAll.toSet
+    assert(after -- before == Set.empty[(String, String)])
+    assert(before -- after == Set.empty[(String, String)])
+  }
+
   test("userRunningStatsTws (transformWithState): equals the mapGroupsWithState operator and batch") {
     StreamOps.withRocksDbStateStore(spark) {
       val stream = StreamOps.readStream(spark, Tables.path(sfDir, "events"))

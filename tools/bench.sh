@@ -7,20 +7,12 @@ set -e
 cd "$(dirname "$0")/.."
 REPO="$PWD"
 WORK="${1:-$(mktemp -d /tmp/graft-bench-XXXX)}"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$REPO/tools/jvm_flags.sh"
 MEM="${SPARK_DRIVER_MEM:-16g}"
 cd "$WORK"
-java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+java "${GRAFT_JVM_FLAGS[@]}" \
   -Xmx$MEM -Xms$MEM -XX:+AlwaysPreTouch -XX:ReservedCodeCacheSize=1g \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench
+  -cp "$GRAFT_CP" graft.Bench
 RC=$?
 [ $RC -ne 0 ] && exit $RC
 # Quiet-window gate (round 13): the in-band calibration probes bracket the

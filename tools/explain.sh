@@ -8,17 +8,9 @@ OUT="${1:?outdir}"
 SUFFIX="${2:?suffix}"
 mkdir -p "$OUT"
 OUT="$(cd "$OUT" && pwd)"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$REPO/tools/jvm_flags.sh"
 cd "$(mktemp -d /tmp/graft-explain-XXXX)"
-exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+exec java "${GRAFT_JVM_FLAGS[@]}" \
   -Xmx8g -XX:ReservedCodeCacheSize=512m \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$GRAFT_CP" \
   graft.tools.ExplainQuery "$OUT" "$SUFFIX"

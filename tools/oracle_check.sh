@@ -9,17 +9,9 @@ REPO="$PWD"
 OUT="${ORACLE_OUT:-/tmp/oracle_subset}"
 SF="${ORACLE_SF:-/root/testdata/sf0.01}"
 rm -rf "$OUT"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx8g \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
+. "$REPO/tools/jvm_flags.sh"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" java "${GRAFT_JVM_FLAGS[@]}" -Xmx8g \
+  -cp "$GRAFT_CP" \
   graft.Verify "$SF" "$OUT" 2>/dev/null
 python3 - "$OUT" "$SF" <<'EOF'
 import duckdb, json, hashlib, sys, os
