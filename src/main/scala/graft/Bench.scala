@@ -19,38 +19,20 @@ import org.apache.spark.sql.SparkSession
   * the JIT backlog to drain ([[quiesceJit]]) so a suite entry measures
   * its own plan, not the compiler debt of the 150 queries before it.
   *
-  * == Sharded execution (opt-in) ==
-  * A 100+-query suite in ONE JVM accumulates generated classes and can
-  * inflate individual late entries under code-cache pressure (measured:
-  * one simhash query 10.2 s in-suite vs 4.1 s alone). Setting
-  * SPARK_GRAFT_BENCH_CHUNK=N shards the suite into N-query chunks, each
-  * timed in a freshly forked child JVM (same classpath and JVM flags),
-  * bounding per-JVM class volume. Measured on this suite, that trade is
-  * NET-NEGATIVE as a default: a fresh JVM is cold for Spark-core JIT and
-  * stays cold through min-of-2 passes (an iterative CC query: 2.4 s warm
-  * suite, 9.9 s fresh JVM with 25 s of background JIT still running in
-  * pass 2), so a chunked full run measured 181 s vs ~95 s single-JVM —
-  * uniform ~1.8x cold-start inflation swamps the few entries code-cache
-  * pressure helps. Default is therefore 0 (single JVM, 1g code cache);
-  * use chunking to ADJUDICATE whether a specific suite entry is plan
-  * cost or cache contention. Chunks fall back to in-process timing if
-  * forking fails. `SPARK_GRAFT_ONLY` runs stay single-JVM in-process.
-  *
   * == Output contract ==
   * The result-harness side captures a bounded tail of stdout, and the
   * full per-query JSON line can exceed it (a 102-query line is ~3 KB; a
-  * truncated line parses as nothing). The parent therefore prints the
+  * truncated line parses as nothing). Bench therefore prints the
   * full line first and a short summary line (no `queries` map) LAST —
   * the summary always fits in any tail window, so the run's total stays
   * machine-readable even when the long line gets clipped.
   */
 object Bench {
 
-  // All machine-parsed numbers (BENCHQ lines, JSON totals) must format
-  // with a '.' decimal separator regardless of default locale — Scala's
-  // f interpolator is locale-sensitive, and under a comma-decimal locale
-  // the parent's toDouble would throw on every child line (reporting
-  // "fork failed") and the JSON line would be unparseable.
+  // The machine-parsed JSON numbers must format with a '.' decimal
+  // separator regardless of default locale — Scala's f interpolator is
+  // locale-sensitive, and under a comma-decimal locale the JSON line
+  // would be unparseable.
   private def num(d: Double, prec: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(d))
 
@@ -206,48 +188,10 @@ object Bench {
     }
   }
 
-  /** Runs one chunk in a forked child JVM (fresh code cache); the child
-    * re-enters this main with SPARK_GRAFT_BENCH_CHILD=1 and prints one
-    * `BENCHQ <name> <sec>` line per query. Returns None if the fork
-    * fails or reports an incomplete result set.
-    */
-  private def forkChunk(chunk: Seq[String]): Option[Seq[(String, Double)]] = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val javaBin = new java.io.File(
-        new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_ONLY", chunk.mkString(","))
-      // child stderr (per-pass diagnostics) flows through; stdout is ours
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines()
-        .filter(_.startsWith("BENCHQ\t")).map { l =>
-          val parts = l.split("\t")
-          parts(1) -> parts(2).toDouble
-        }.toMap
-      val code = proc.waitFor()
-      if (code == 0 && chunk.forall(out.contains)) Some(chunk.map(n => n -> out(n)))
-      else { System.err.println(
-        s"[bench] child exit=$code results=${out.size}/${chunk.size}; " +
-          "falling back to in-process"); None }
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] fork failed: ${e.getMessage}; in-process fallback")
-      None
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
-    val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
     // SPARK_GRAFT_ONLY=q20_dedup_content,q23_... restricts the run to a
     // comma-separated subset — for isolating one query's timing without
     // the full-suite wall clock
@@ -255,44 +199,19 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "0").toInt
 
     // calibration brackets the suite: a degraded window shows up as a
     // high min; a degradation that STARTED mid-run shows up as pre/post
     // divergence
-    val calPre = if (isChild) -1.0 else calibrate()
+    val calPre = calibrate()
 
-    val results: Seq[(String, Double)] =
-      if (isChild) {
-        val spark = newSession(cores)
-        val rs = timeQueries(spark, sfDir, passes, names)
-        rs.foreach { case (n, s) => println(s"BENCHQ\t$n\t${num(s, 4)}") }
-        Console.out.flush()
-        spark.stop()
-        return
-      } else if (only.isEmpty && chunkSize > 0 && names.size > chunkSize) {
-        // full-suite run: shard across fresh JVMs (see scaladoc). The
-        // fallback session is created only if a fork fails, and must be
-        // stopped afterwards (its non-daemon threads would otherwise keep
-        // this JVM alive past main).
-        var fallback: Option[SparkSession] = None
-        def fb: SparkSession = { if (fallback.isEmpty) fallback = Some(newSession(cores)); fallback.get }
-        val rs = names.grouped(chunkSize).toSeq.flatMap { chunk =>
-          forkChunk(chunk).getOrElse(timeQueries(fb, sfDir, passes, chunk))
-        }
-        fallback.foreach(_.stop())
-        rs
-      } else {
-        val spark = newSession(cores)
-        val rs = timeQueries(spark, sfDir, passes, names)
-        spark.stop()
-        rs
-      }
+    val spark = newSession(cores)
+    val results = timeQueries(spark, sfDir, passes, names)
+    spark.stop()
 
     val calPost = calibrate()
     val calMt = calibrateMt(cores)
-    val cal = math.min(calPre match { case v if v < 0 => calPost; case v => v },
-      calPost)
+    val cal = math.min(calPre, calPost)
     val calStr = s""""calibration":${num(cal, 3)},"calibration_pre":${
       num(calPre, 3)},"calibration_post":${num(calPost, 3)},"calibration_mt":${
       num(calMt, 3)}"""

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Iterate.MaterializeOps
+import graft.operators.Iterate
 
 /** Distributed byte-pair-encoding merge learning (Sennrich et al.,
   * ACL'16) — the tokenizer-training step of an LLM data pipeline, over
@@ -29,8 +29,9 @@ import graft.operators.Iterate.MaterializeOps
   * Scale shape: each round is one explode + two-phase weighted count
   * over the VOCABULARY (not the corpus), a driver-side 1-row winner
   * collect (the learned merge table is bounded model state, like the
-  * k-means centroids), and one map-only replace. The working frame is
-  * `localCheckpoint`ed per round to keep lineage flat.
+  * k-means centroids), and one map-only replace. The rounds run through
+  * [[graft.operators.Iterate.fixpoint]] (materialize and release per
+  * round).
   */
 object BpeTrainer {
 
@@ -52,13 +53,10 @@ object BpeTrainer {
     * merge table; stops early if no adjacent pair remains.
     */
   def train(words: DataFrame, rounds: Int): Seq[Merge] = {
-    var cur = words
-      .select(col("word"), col("freq"), wrap(col("word")).as("s"))
-      .materialized
-    val merges = Seq.newBuilder[Merge]
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+    val last = Iterate.fixpoint(
+      words.select(col("word"), col("freq"), wrap(col("word")).as("s")),
+      rounds) { cur =>
       val withPairs = cur
         .withColumn("arr", symbols(col("s")))
         .withColumn("prs",
@@ -76,20 +74,18 @@ object BpeTrainer {
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1)
         .collect()
-      if (win.isEmpty) done = true
+      if (win.isEmpty) cur // no adjacent pair left: the loop stops
       else {
         val (a, b, c) =
           (win(0).getString(0), win(0).getString(1), win(0).getLong(2))
-        merges += Merge(r, a, b, c)
-        cur = cur
-          .withColumn("s",
-            replace(col("s"), lit(L + a + R + L + b + R),
-              lit(L + a + b + R)))
-          .materialized
-        r += 1
+        merges += Merge(merges.size + 1, a, b, c)
+        cur.withColumn("s",
+          replace(col("s"), lit(L + a + R + L + b + R), lit(L + a + b + R)))
       }
-    }
-    merges.result()
+    }.result
+    // only the merge table is returned: the last state's blocks are dead
+    Iterate.release(last)
+    merges.toSeq
   }
 
   /** Apply an ordered merge table to a word column: wrap, then replay

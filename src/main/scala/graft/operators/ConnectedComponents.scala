@@ -22,17 +22,13 @@ import graft.operators.Iterate.MaterializeOps
   * partially aggregable, so a high-degree hub (every near-dup of a viral
   * boilerplate doc) map-side combines instead of hot-keying a reducer.
   *
-  * Each round's result is `localCheckpoint`ed: iterative plans otherwise
-  * grow lineage exponentially (every round re-plans all prior rounds).
-  * On a production cluster prefer a reliable `checkpoint()` directory so
-  * executor loss doesn't force a driver-side restart; local mode has no
-  * executor-loss failure domain, and the driver contract here runs
-  * single-JVM.
+  * The rounds run through [[Iterate.fixpoint]] (materialize and release
+  * per round), stopping when the edge set's checksum repeats.
   */
 object ConnectedComponents {
 
   /** Order-insensitive fingerprint of an edge set (count, xor of row
-    * hashes); used as the fixpoint test between rounds.
+    * hashes): the loop's signature.
     */
   private def checksum(edges: DataFrame): (Long, Long) = {
     val r = edges
@@ -93,30 +89,19 @@ object ConnectedComponents {
       .union(e0.select(col(dstCol).as("id")))
       .distinct()
     // canonical orientation big→small; drop self-loops and duplicates
-    var cur = e0
+    val canonical = e0
       .select(
         greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .materialized
-    var sum = checksum(cur)
-    var converged = sum._1 == 0L
-    var it = 0
-    while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(cur)).materialized
-      val nextSum = checksum(next)
-      converged = nextSum == sum
-      // the superseded round's blocks are dead once `next` has landed;
-      // release eagerly instead of waiting for a driver GC (§5). The
-      // INPUT checkpoint e0 is NOT released: the returned plan's verts
-      // leg still reads it lazily.
-      Iterate.release(cur)
-      cur = next
-      sum = nextSum
-      it += 1
+    // an empty edge set is its own fixpoint: no round runs. The INPUT
+    // checkpoint e0 is NOT released: the returned plan's verts leg still
+    // reads it lazily.
+    val fp = Iterate.fixpoint(canonical, maxIter, checksum) { (cur, sum) =>
+      if (sum._1 == 0L) cur else smallStar(largeStar(cur))
     }
-    if (!converged)
+    if (!fp.converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds " +
           s"(O(log^2 n) expected; raise maxIter)")
@@ -125,7 +110,7 @@ object ConnectedComponents {
     // two stars, keeping the output a function of id; the verts join
     // restores edge-incident vertices the loop dropped (self-loop-only
     // and other singletons) as their own representative.
-    val assigned = cur
+    val assigned = fp.result
       .groupBy(col("u").as("id")).agg(min(col("v")).as("component"))
     verts.join(assigned, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))

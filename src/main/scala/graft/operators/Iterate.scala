@@ -34,8 +34,76 @@ import org.apache.spark.sql.Dataset
   * where blocks LIVE, never what they contain — pinned by
   * IterateSpec (same hashes in both modes, plus a blocks-killed test
   * proving reliable mode survives what local mode cannot).
+  *
+  * == The fixpoint loop ==
+  * Every iterative operator except HITS (PageRank, ConnectedComponents,
+  * KCore, LabelPropagation, TreePaths, BpeTrainer) runs its rounds
+  * through [[fixpoint]], which owns the whole loop contract:
+  *
+  *   - materialize: `init` and each round's `step` result are landed
+  *     with [[materialize]] before the next round plans on them, so the
+  *     plan stays one round deep instead of doubling per round;
+  *   - release: a superseded state is [[release]]d once its successor
+  *     has landed. The combinator created every state it releases, so
+  *     it never frees a caller's blocks; an input the step reads (an
+  *     edge list) stays the caller's to release after the loop;
+  *   - stop, on the first of three rules: the `maxRounds` budget is
+  *     spent; the caller's signature of the new state (CC's
+  *     `(count, xor)` checksum, KCore's edge count) equals the previous
+  *     state's, each state's signature computed once and carried
+  *     forward; or `step` returns its input unchanged (`eq`), meaning no
+  *     work is left, which runs no round and materializes nothing.
+  *
+  * The returned [[Iterate.Fixpoint]] says how many rounds ran and
+  * whether a rule other than the budget stopped the loop.
+  *
+  * [[Hits]] keeps its own loop: each round lands two checkpoints (the
+  * authority and hub sums) and the last round's PAIR is its result, so
+  * moving it here would make the combinator branch on its caller.
   */
 object Iterate {
+
+  /** A finished [[fixpoint]] loop: the last landed state, the number of
+    * rounds that produced a new state, and whether the signature or
+    * `eq` rule (not the budget) stopped the loop.
+    */
+  final case class Fixpoint[T](result: Dataset[T], rounds: Int, converged: Boolean)
+
+  /** Iterate `step` from `init` for at most `maxRounds` rounds with no
+    * signature: only the budget and `eq` rules stop the loop.
+    */
+  def fixpoint[T](init: Dataset[T], maxRounds: Int)(
+      step: Dataset[T] => Dataset[T]): Fixpoint[T] =
+    // a fresh object per state never equals the previous one
+    fixpoint(init, maxRounds, (_: Dataset[T]) => new Object)((s, _) => step(s))
+
+  /** Iterate `step` from `init` for at most `maxRounds` rounds, also
+    * stopping when `signature` repeats. `step` receives its input's
+    * signature, so it can return its input when the signature already
+    * shows a fixpoint (CC's empty edge set) and end the loop without a
+    * round.
+    */
+  def fixpoint[T, S](init: Dataset[T], maxRounds: Int, signature: Dataset[T] => S)(
+      step: (Dataset[T], S) => Dataset[T]): Fixpoint[T] = {
+    var cur = materialize(init)
+    var sig = signature(cur)
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      val next = step(cur, sig)
+      if (next eq cur) converged = true
+      else {
+        val landed = materialize(next)
+        release(cur)
+        val nextSig = signature(landed)
+        converged = nextSig == sig
+        cur = landed
+        sig = nextSig
+        rounds += 1
+      }
+    }
+    Fixpoint(cur, rounds, converged)
+  }
 
   /** True when [[materialize]] will write reliable checkpoints. */
   def reliable(ds: Dataset[_]): Boolean = {

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.Iterate.MaterializeOps
+import graft.operators.Iterate.Fixpoint
 
 /** k-core decomposition by bounded peeling (Seidman '83; the
   * Batagelj–Zaveršnik sequential algorithm's bulk-synchronous form):
@@ -14,17 +14,14 @@ import graft.operators.Iterate.MaterializeOps
   * neighbors are themselves peripheral.
   *
   * Each round is one degree aggregation (explode both endpoints +
-  * count) and two semi-joins filtering the edge list, with
-  * `localCheckpoint` truncating lineage per round — the
-  * [[ConnectedComponents]]/[[TreePaths]] fixpoint idiom: plan size
-  * stays linear in rounds and the shuffles are all keyed on node ids.
-  * Peeling stops EARLY when a round deletes nothing (the fixpoint —
-  * each round's edge count is free: the round already materializes via
-  * `localCheckpoint`), so `rounds` is a budget, not a cost;
-  * [[peelToFixpoint]] additionally reports how many rounds ran and
-  * whether the fixpoint was reached within the budget. Peeling depth
-  * in practice is small (at most the degeneracy ordering's longest
-  * cascade, not graph diameter).
+  * count) and two semi-joins filtering the edge list; the shuffles are
+  * all keyed on node ids. The rounds run through [[Iterate.fixpoint]]
+  * with the edge count as the signature, so peeling stops EARLY when a
+  * round deletes nothing: `rounds` is a budget, not a cost, and
+  * [[peelToFixpoint]] reports how many rounds ran and whether the
+  * fixpoint was reached within the budget. Peeling depth in practice is
+  * small (at most the degeneracy ordering's longest cascade, not graph
+  * diameter).
   *
   * Input convention: undirected simple graph, one row per edge —
   * self-loops dropped, and duplicate rows INCLUDING reversed
@@ -41,41 +38,30 @@ object KCore {
     * degree in the final surviving subgraph.
     */
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    peelToFixpoint(edges, k, rounds)._1
+    peelToFixpoint(edges, k, rounds).result
 
   /** Peel to the fixpoint or the `maxRounds` budget, whichever comes
-    * first. Returns `(survivors, roundsRun, converged)`: `converged`
-    * is true iff some round within the budget deleted zero edges —
-    * i.e. the result IS the exact k-core, not a partial peel. A
+    * first. `result` holds the surviving `(node, degree)` rows;
+    * `converged` is true iff some round within the budget deleted zero
+    * edges — i.e. the result IS the exact k-core, not a partial peel. A
     * `converged=false` return means the budget was exhausted while
     * deletions were still happening; raise `maxRounds`.
     */
-  def peelToFixpoint(edges: DataFrame, k: Int,
-      maxRounds: Int): (DataFrame, Int, Boolean) = {
+  def peelToFixpoint(edges: DataFrame, k: Int, maxRounds: Int): Fixpoint[Row] = {
     require(k >= 1 && maxRounds >= 1 && maxRounds <= 20)
     def degrees(e: DataFrame): DataFrame = e
       .select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-    var e = edges
+    val canonical = edges
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .materialized
-    var prev = e.count()
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    val fp = Iterate.fixpoint(canonical, maxRounds, (e: DataFrame) => e.count()) { (e, _) =>
       val keep = degrees(e).filter(col("degree") >= k).select("node")
-      e = e
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
+      e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .materialized
-      round += 1
-      val now = e.count()
-      converged = now == prev
-      prev = now
     }
-    (degrees(e), round, converged)
+    fp.copy(result = degrees(fp.result))
   }
 }

@@ -26,9 +26,8 @@ import graft.operators.Iterate.MaterializeOps
   * edge list, shuffle on node id) and one two-phase aggregation —
   * `min(struct(-cnt, label))` is partially aggregable, so a hub node's
   * vote tally map-side combines instead of hot-keying a reducer (same
-  * posture as CC's min). The label frame is `localCheckpoint`ed per
-  * round — iterative plans otherwise re-plan all prior rounds (see
-  * [[ConnectedComponents]] for the production `checkpoint()` caveat).
+  * posture as CC's min). The rounds run through [[Iterate.fixpoint]]
+  * (materialize and release per round).
   */
 object LabelPropagation {
 
@@ -47,25 +46,24 @@ object LabelPropagation {
       .distinct()
       .materialized
 
-    var labels = sym.select(col("u").as("node")).distinct()
+    val init = sym.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
-      .materialized
-
-    for (_ <- 1 to iters) {
+    val labels = Iterate.fixpoint(init, iters) { prev =>
       // neighbor votes: node u hears the previous label of each neighbor v
       val votes = sym
-        .join(labels.withColumnRenamed("node", "v"), "v")
+        .join(prev.withColumnRenamed("node", "v"), "v")
         .groupBy(col("u").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       // winner per node: max count, then smallest label — one struct-min,
       // partially aggregable (no per-node window sort)
-      labels = votes
+      votes
         .groupBy("node")
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("lb")))
           .as("w"))
         .select(col("node"), col("w").getField("lb").as("label"))
-        .materialized
-    }
+    }.result
+    // the returned labels checkpoint no longer reads the symmetrized edges
+    Iterate.release(sym)
     labels
   }
 }

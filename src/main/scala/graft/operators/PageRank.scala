@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Iterate.MaterializeOps
 
@@ -21,14 +21,8 @@ import graft.operators.Iterate.MaterializeOps
   * shuffles on the edge key — the same cost profile as one grouped
   * count. Convergence for analytics use is typically <20 iterations;
   * no per-iteration driver sync means a 100 TB edge set pipelines
-  * through AQE like any other join chain. Each iteration's rank table
-  * is `localCheckpoint`ed (mirroring [[ConnectedComponents]]): without
-  * lineage truncation the analyzed plan doubles per round and at ~20
-  * iterations analysis time dominates. Where the blocks live is the
-  * [[Iterate.materialize]] policy: executor-local by default, reliable
-  * `checkpoint` files when a checkpoint dir (or
-  * `spark.graft.checkpoint.reliable=true`) is configured — set that on
-  * any real cluster so executor loss can't kill iteration 18 of 20.
+  * through AQE like any other join chain. The rounds run through
+  * [[Iterate.fixpoint]] (materialize and release per round).
   */
 object PageRank {
 
@@ -62,33 +56,12 @@ object PageRank {
       .distinct()
     val n = nodes.agg(count(lit(1)).as("n"))
     // every node once, with its out-degree (0 for sinks) and N alongside
-    var ranks = nodes
+    val init = nodes
       .join(deg, nodes("node") === deg("u"), "left")
       .crossJoin(broadcast(n))
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"), col("n"),
         expr(s"$scale div n").as("r"))
-      .materialized
-    for (_ <- 1 to iters) {
-      // deg-0 nodes contribute nothing (and would divide by zero): only
-      // source nodes join the edge list
-      val prev = ranks
-      val contrib = ranks.filter(col("deg") > 0)
-        .join(e, ranks("node") === e("u"))
-        .select(col("v"), expr("r div deg").as("share"))
-        .groupBy("v").agg(sum("share").as("c"))
-      ranks = ranks.join(contrib, ranks("node") === contrib("v"), "left")
-        .select(col("node"), col("deg"), col("n"),
-          (expr(s"(3 * $scale) div (20 * n)") +
-            expr("(17 * coalesce(c, 0L)) div 20")).as("r"))
-        .materialized
-      // the superseded round's blocks are dead once the new checkpoint
-      // has landed — release eagerly instead of waiting for a driver GC
-      Iterate.release(prev)
-    }
-    // the returned plan reads only the FINAL ranks checkpoint; the edge
-    // blocks are no longer referenced by anything the caller can execute
-    Iterate.release(e)
-    ranks.select(col("node"), col("deg"), col("r").as("rank_fp"))
+    damped(e, init, iters, expr(s"(3 * $scale) div (20 * n)"))
   }
 
   /** Personalized PageRank: teleport mass lands on `seeds` (one `node`
@@ -97,9 +70,8 @@ object PageRank {
     * integer arithmetic as [[run]] with two changes: the initial rank
     * splits `scale` over the seed set, and the per-round teleport term
     * `(3·scale) div (20·|seeds|)` is paid ONLY to seed nodes (everyone
-    * else gets pure damped in-flow). Same per-iteration cost profile and
-    * localCheckpoint lineage discipline as the uniform form; |seeds|
-    * rides along as a broadcast scalar just like N.
+    * else gets pure damped in-flow). Same rounds as the uniform form;
+    * |seeds| rides along as a broadcast scalar just like N.
     */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int,
       scale: Long = 1000000L): DataFrame = {
@@ -113,28 +85,35 @@ object PageRank {
     val sd = seeds.select(col("node")).distinct()
       .withColumn("is_seed", lit(1L))
     val ns = sd.agg(count(lit(1)).as("ns"))
-    var ranks = nodes
+    val init = nodes
       .join(deg, nodes("node") === deg("u"), "left")
       .join(sd, Seq("node"), "left")
       .crossJoin(broadcast(ns))
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"),
         coalesce(col("is_seed"), lit(0L)).as("is_seed"), col("ns"),
         expr(s"is_seed * ($scale div ns)").as("r"))
-      .materialized
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      val contrib = ranks.filter(col("deg") > 0)
-        .join(e, ranks("node") === e("u"))
+    damped(e, init, iters, expr(s"is_seed * ((3 * $scale) div (20 * ns))"))
+  }
+
+  /** The damped rounds both forms share: each round every source node
+    * splits its rank over its out-edges (deg-0 nodes contribute nothing
+    * and would divide by zero, so only sources join the edge list) and
+    * every node's new rank is `teleport` plus 17/20 of its in-flow. The
+    * rank table's other columns ride along unchanged. Releases the edge
+    * checkpoint `e`, which the returned plan no longer reads.
+    */
+  private def damped(e: DataFrame, init: DataFrame, iters: Int,
+      teleport: Column): DataFrame = {
+    val ranks = Iterate.fixpoint(init, iters) { cur =>
+      val contrib = cur.filter(col("deg") > 0)
+        .join(e, cur("node") === e("u"))
         .select(col("v"), expr("r div deg").as("share"))
         .groupBy("v").agg(sum("share").as("c"))
-      ranks = ranks.join(contrib, ranks("node") === contrib("v"), "left")
-        .select(col("node"), col("deg"), col("is_seed"), col("ns"),
-          (expr(s"is_seed * ((3 * $scale) div (20 * ns))") +
-            expr("(17 * coalesce(c, 0L)) div 20")).as("r"))
-        .materialized
-      Iterate.release(prev) // superseded round — see run()
-    }
-    Iterate.release(e) // returned plan reads only the final checkpoint
+      cur.join(contrib, cur("node") === contrib("v"), "left")
+        .select(cur.columns.filter(_ != "r").map(col).toSeq :+
+          (teleport + expr("(17 * coalesce(c, 0L)) div 20")).as("r"): _*)
+    }.result
+    Iterate.release(e)
     ranks.select(col("node"), col("deg"), col("r").as("rank_fp"))
   }
 }

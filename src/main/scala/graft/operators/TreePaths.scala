@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Iterate.MaterializeOps
 
 /** Hierarchy flattening by pointer doubling (path doubling — the
   * O(log depth) rounds / O(E log d) work scheme classic in PRAM and
@@ -29,29 +28,25 @@ import graft.operators.Iterate.MaterializeOps
   */
 object TreePaths {
 
-  /** Resolve to `(node, root, depth)` in `rounds` doubling steps.
-    *
-    * Each round `localCheckpoint`s the state before self-joining it (the
-    * [[ConnectedComponents]] idiom): without truncation the self-join
-    * doubles the logical plan per round — 2^rounds copies of the input
-    * scan — and the analyzer, not the data, becomes the bottleneck long
-    * before cluster scale. With truncation the plan is one join+project
-    * per round regardless of depth.
+  /** Resolve to `(node, root, depth)` in `rounds` doubling steps, run
+    * through [[Iterate.fixpoint]]: without a materialized state per
+    * round the self-join doubles the logical plan per round — 2^rounds
+    * copies of the input scan — and the analyzer, not the data, becomes
+    * the bottleneck long before cluster scale. With it the plan is one
+    * join+project per round regardless of depth.
     */
   def resolve(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20)
-    var s = edges.select(
+    val init = edges.select(
       col("node"),
       col("parent").as("anc"),
       when(col("parent") === col("node"), 0L).otherwise(1L).as("dist"))
-      .materialized
-    (1 to rounds).foreach { _ =>
-      s = s.as("a")
+    val resolved = Iterate.fixpoint(init, rounds) { s =>
+      s.as("a")
         .join(s.as("b"), col("a.anc") === col("b.node"))
         .select(col("a.node").as("node"), col("b.anc").as("anc"),
           (col("a.dist") + col("b.dist")).as("dist"))
-        .materialized
-    }
-    s.select(col("node"), col("anc").as("root"), col("dist").as("depth"))
+    }.result
+    resolved.select(col("node"), col("anc").as("root"), col("dist").as("depth"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -48,6 +49,42 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("empty edge set yields an empty assignment") {
     assert(runCc(Seq.empty[(Long, Long)]).isEmpty)
+  }
+
+  test("throws when the round budget runs out before the fixpoint") {
+    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ex = intercept[IllegalStateException] {
+      ConnectedComponents.run(chain, maxIter = 1)
+    }
+    assert(ex.getMessage.contains("did not converge in 1 rounds"))
+  }
+
+  test("an edge set empty after canonicalization returns without running a round") {
+    // a round would release the superseded canonical edge checkpoint,
+    // so no round means no unpersist of an RDD the call created
+    val sc = spark.sparkContext
+    val floor = sc.emptyRDD[Int].id
+    val unpersisted = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId > floor) unpersisted.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "cc-marker"))
+          marker.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val cc = runCc(Seq((5L, 5L), (6L, 6L), (5L, 5L)))
+      // one listener queue delivers in post order: once the marker job
+      // is seen, every unpersist the call posted has been counted
+      sc.setJobDescription("cc-marker")
+      spark.range(1).count()
+      sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(cc == Map(5L -> 5L, 6L -> 6L))
+      assert(unpersisted.get == 0, s"${unpersisted.get} superseded states released")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("random graphs match union-find") {

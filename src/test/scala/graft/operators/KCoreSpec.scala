@@ -47,17 +47,12 @@ class KCoreSpec extends AnyFunSuite {
     assert(run(Seq((1L, 1L)), k = 1, rounds = 1).isEmpty)
   }
 
-  test("peelToFixpoint: early stop equals fixed-round peel, reports convergence") {
+  // the rounds/converged report is pinned in IterateFixpointSpec
+  test("peelToFixpoint: early stop equals fixed-round peel") {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
-    val (survivors, roundsRun, converged) =
-      KCore.peelToFixpoint(chain, k = 2, maxRounds = 20)
-    assert(converged && roundsRun <= 3) // far below the 20-round budget
-    // early-stopped result == exhaustive fixed-round result
+    val early = KCore.peelToFixpoint(chain, k = 2, maxRounds = 20).result
     val fixed = KCore.peel(chain, k = 2, rounds = 5).collect().toSet
-    assert(survivors.collect().toSet == fixed)
-    // budget too small to converge -> reported honestly
-    val (_, ran, conv) = KCore.peelToFixpoint(chain, k = 2, maxRounds = 1)
-    assert(!conv && ran == 1)
+    assert(early.collect().toSet == fixed)
   }
 
   test("k=degree+1 empties any graph; k=1 keeps every non-isolated node") {
