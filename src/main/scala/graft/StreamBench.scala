@@ -179,7 +179,7 @@ object StreamBench {
         // regime where compaction amortizes. The policy triggers
         // ITSELF (live deltas ≥ 4, or tail bytes rivaling the
         // snapshot) instead of a hand-placed counter; idempotent on
-        // replay (compact rewrites the same snapshot version; vacuum
+        // replay (a compact with no live delta commits nothing; vacuum
         // of already-gone dirs is 0).
         val t1 = System.nanoTime()
         graft.llm.DeltaChain.maybeCompact(s, s"$idx/fam",

@@ -13,17 +13,20 @@ import org.apache.spark.sql.functions._
   * batches are doc-disjoint (a re-delivered doc would double its
   * postings; same contract as LineDedupIndex). The moving parts:
   *
-  *  - `post/v=N`, `dlen/v=N`: batch N's (did, t, tf) postings and
+  *  - `post`, `dlen`: version N's (did, t, tf) postings and
   *    (did, len) lengths. APPEND-shaped — disjoint batches mean the
   *    full tables are the plain union of all versions, so adding a
   *    batch writes only that batch (the corpus is never rescanned and
   *    never rewritten; at 100 TB the postings ARE the big table and
   *    copy-on-write would be a full-corpus write per batch).
-  *  - `df/v=N`, `stats/v=N`: cumulative document-frequency
+  *  - `df`, `stats`: version N's cumulative document-frequency
   *    (vocabulary-sized) and 1-row corpus stats. Merge is addition, so
   *    these are copy-on-write like LineDedupIndex's df table — small by
   *    construction, and reading ONLY the latest version gives the
   *    whole-corpus values without touching the postings.
+  *
+  * Each build, addBatch and deleteDocs commits ONE [[IndexLog]] entry
+  * listing the tables it wrote (plus `del`, a delete's tombstoned ids).
   *
   * Search loads the union of postings, latest df/stats, and runs the
   * SAME scoring join as the one-shot path (`Bm25.score`), so
@@ -32,49 +35,64 @@ import org.apache.spark.sql.functions._
   */
 object Bm25Index {
 
-  /** Latest COMMITTED version: a version exists only once its df dir is
-    * fully written (`_SUCCESS` present — [[IndexVersions]]); df is the
-    * last dir a fold writes ([[writeAggregates]]), making it the
-    * commit marker.
+  /** Latest committed version ([[IndexLog]]): build commits 1, every
+    * addBatch and deleteDocs commits +1.
     */
   def latestVersion(path: String): Option[Int] =
-    IndexVersions.latest(s"$path/df")
+    IndexLog.read(path).latestVersion
 
-  /** Commit protocol: `df/v=N` is the COMMIT MARKER — it is written
-    * LAST, and `latestVersion` / `search` treat a version as existing
-    * only once its df dir is complete (`_SUCCESS` present, so even a
-    * crash mid-df-write leaves the version uncommitted). A crash
-    * mid-batch leaves orphan post/dlen/stats (or torn df) dirs for an
-    * uncommitted version; `search` ignores them (it reads only
-    * committed versions by explicit path) and a retried `addBatch`
-    * overwrites them — overwrite of a version number `latestVersion`
-    * never returned cannot clobber readable data.
-    *
-    * Evaluate-once (round 13, guide §2.4): the batch's postings and
-    * lengths are TOKENIZED EXACTLY ONCE — post/dlen land first, and the
-    * df/stats aggregates are computed FROM THE JUST-WRITTEN FILES
-    * (`postWritten`/`dlenWritten`), not from the logical plan a second
-    * time. The durable write IS the materialization, so the old form's
-    * second tokenize+explode pass per fold (2x the batch at any scale)
-    * is gone with zero extra I/O; the caller derives df/stats from the
-    * frames this returns. Content is identical by construction — the
-    * aggregate reads back the very rows that were written.
+  private def head(log: IndexLog.Log, path: String): IndexLog.Entry =
+    log.entries.lastOption.getOrElse(
+      throw new IllegalStateException(s"no Bm25Index at $path"))
+
+  /** Union of table `t` over the entries committed through version `v`,
+    * or None when none of them carries it.
     */
-  private def writePostings(path: String, v: Int,
-      tf: DataFrame, len: DataFrame): (DataFrame, DataFrame) = {
-    val spark = tf.sparkSession
-    tf.write.mode("overwrite").parquet(s"$path/post/v=$v")
-    len.write.mode("overwrite").parquet(s"$path/dlen/v=$v")
-    (spark.read.parquet(s"$path/post/v=$v"),
-      spark.read.parquet(s"$path/dlen/v=$v"))
+  private def unionThrough(spark: SparkSession, log: IndexLog.Log, v: Int,
+      t: String): Option[DataFrame] =
+    log.entries.filter(_.version <= v).flatMap(_.adds.get(t))
+      .map(spark.read.parquet(_)).reduceOption(_ unionByName _)
+
+  /** The postings and lengths through version `v`, minus the
+    * tombstoned dids (the tombstones are read once for both).
+    */
+  private def liveThrough(spark: SparkSession, log: IndexLog.Log,
+      v: Int): (DataFrame, DataFrame) = {
+    val del = unionThrough(spark, log, v, "del")
+    def live(t: String) = {
+      val u = unionThrough(spark, log, v, t).get
+      del.map(dd => u.join(broadcast(dd), Seq("did"), "left_anti")).getOrElse(u)
+    }
+    (live("post"), live("dlen"))
   }
 
-  /** stats then df — df is the commit marker and must land LAST. */
-  private def writeAggregates(path: String, v: Int,
-      df: DataFrame, stats: DataFrame): Unit = {
-    stats.write.mode("overwrite").parquet(s"$path/stats/v=$v")
-    df.write.mode("overwrite").parquet(s"$path/df/v=$v")
+  /** Write one fold's tables into `log`'s fresh directories and propose
+    * the entry listing them as the next version.
+    *
+    * Evaluate-once (round 13, guide §2.4): the batch is TOKENIZED
+    * EXACTLY ONCE — post/dlen land first, and `merge` derives df/stats
+    * FROM THE JUST-WRITTEN FILES, not from the logical plan a second
+    * time. The durable write IS the materialization: no second
+    * tokenize+explode pass (2x the batch at any scale), zero extra I/O,
+    * and content identical by construction.
+    */
+  private def writeFold(log: IndexLog.Log, kind: String,
+      tf: DataFrame, len: DataFrame)(
+      merge: (DataFrame, DataFrame) => (DataFrame, DataFrame)): IndexLog.Entry = {
+    val spark = tf.sparkSession
+    val dirs = Seq("post", "dlen", "stats", "df").map(t => t -> log.newDir(t)).toMap
+    tf.write.parquet(dirs("post"))
+    len.write.parquet(dirs("dlen"))
+    val (df, stats) = merge(spark.read.parquet(dirs("post")),
+      spark.read.parquet(dirs("dlen")))
+    stats.write.parquet(dirs("stats"))
+    df.write.parquet(dirs("df"))
+    log.propose(log.nextVersion, kind, dirs)
   }
+
+  private def batchAggregates(tfW: DataFrame, lenW: DataFrame) =
+    (tfW.groupBy("t").agg(count(lit(1)).as("df")),
+      lenW.agg(count(lit(1)).as("n_docs"), sum("len").as("total_len")))
 
   /** Start the index (v=1) from an initial document batch.
     *
@@ -83,57 +101,50 @@ object Bm25Index {
     * second write re-executes the source scan. Batches are bounded
     * (admission-controlled) by contract, so the cache is
     * executor-memory-safe. df/stats derive from the WRITTEN files (see
-    * [[writePostings]]) — the batch is tokenized exactly once.
+    * [[writeFold]]) — the batch is tokenized exactly once.
     */
   def build(docs: DataFrame, path: String,
       idCol: String, textCol: String): Unit = {
     val cached = docs.persist()
-    try {
+    try IndexLog.commit(path) { log =>
+      require(log.entries.isEmpty, s"a Bm25Index already exists at $path")
       val (tf, len) = Bm25.postings(cached, idCol, textCol)
-      val (tfW, lenW) = writePostings(path, 1, tf, len)
-      val df = tfW.groupBy("t").agg(count(lit(1)).as("df"))
-      val stats = lenW.agg(count(lit(1)).as("n_docs"),
-        sum("len").as("total_len"))
-      writeAggregates(path, 1, df, stats)
+      writeFold(log, "build", tf, len)(batchAggregates)
     } finally cached.unpersist()
   }
 
   /** Fold a new DOC-DISJOINT batch into the index: postings/lengths
-    * appended as the new version's partition, df and stats merged by
-    * addition into a new cumulative version.
+    * appended as the new version's tables, df and stats merged by
+    * addition with the head's into a new cumulative version.
     */
   def addBatch(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no Bm25Index at $path"))
     val cached = docs.persist() // see build() — multiple consumers, one scan
-    try {
+    try IndexLog.commit(path) { log =>
+      val h = head(log, path)
       // enforce (not just document) the no-re-add-while-tombstoned
       // contract: a violating re-add would both hide the new postings
       // (the search anti-join filters them) and inflate df/stats with
       // contributions scoring never sees — a silent parity break. The
-      // check costs nothing on the common no-deletes path (tombstones
-      // is None) and one small broadcast semi-join count otherwise.
-      tombstones(spark, path,
-          IndexVersions.committed(s"$path/df").sorted.filter(_ <= v))
-        .foreach { dd =>
-          val n = cached.select(col(idCol).cast("long").as("did")).distinct()
-            .join(broadcast(dd), Seq("did"), "left_semi").count()
-          require(n == 0L, s"addBatch: $n batch doc ids are live-" +
-            s"tombstoned at $path — re-adding while the tombstone is " +
-            "live silently breaks scoring parity (compact first to " +
-            "materialize the deletes and free the ids)")
-        }
+      // check costs nothing on the common no-deletes path (no del
+      // table) and one small broadcast semi-join count otherwise.
+      unionThrough(spark, log, h.version, "del").foreach { dd =>
+        val n = cached.select(col(idCol).cast("long").as("did")).distinct()
+          .join(broadcast(dd), Seq("did"), "left_semi").count()
+        require(n == 0L, s"addBatch: $n batch doc ids are live-" +
+          s"tombstoned at $path — re-adding while the tombstone is " +
+          "live silently breaks scoring parity (compact first to " +
+          "materialize the deletes and free the ids)")
+      }
       val (tf, len) = Bm25.postings(cached, idCol, textCol)
-      val (tfW, lenW) = writePostings(path, v + 1, tf, len)
-      val df = tfW.groupBy("t").agg(count(lit(1)).as("df"))
-        .unionByName(spark.read.parquet(s"$path/df/v=$v"))
-        .groupBy("t").agg(sum("df").as("df"))
-      val stats = lenW.agg(count(lit(1)).as("n_docs"),
-          sum("len").as("total_len"))
-        .unionByName(spark.read.parquet(s"$path/stats/v=$v"))
-        .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total_len"))
-      writeAggregates(path, v + 1, df, stats)
+      writeFold(log, "add", tf, len) { (tfW, lenW) =>
+        val (df, stats) = batchAggregates(tfW, lenW)
+        (df.unionByName(spark.read.parquet(h.adds("df")))
+          .groupBy("t").agg(sum("df").as("df")),
+          stats.unionByName(spark.read.parquet(h.adds("stats")))
+            .agg(sum("n_docs").as("n_docs"),
+              sum("total_len").as("total_len")))
+      }
     } finally cached.unpersist()
   }
 
@@ -153,61 +164,32 @@ object Bm25Index {
       queries: DataFrame, k: Int = 5,
       emitEmpty: Boolean = false,
       asOf: Option[Int] = None): DataFrame = {
-    val latest = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no Bm25Index at $path"))
-    val v = asOf match {
-      case None => latest
-      case Some(a) =>
-        require(IndexVersions.committed(s"$path/df").contains(a),
-          s"asOf version $a is not committed at $path (latest=$latest)")
-        a
-    }
-    // the union of all COMMITTED versions IS the full table (batches
-    // are doc-disjoint). Versions are enumerated from the df commit
-    // markers and read by explicit path, so orphan post/dlen dirs left
-    // by a crashed addBatch are never scored against stale df/stats.
-    val committed = IndexVersions.committed(s"$path/df").sorted.filter(_ <= v)
-    val del = tombstones(spark, path, committed)
-    def live(t: DataFrame) =
-      del.map(dd => t.join(broadcast(dd), Seq("did"), "left_anti")).getOrElse(t)
-    val tf = live(committed.map(i => spark.read.parquet(s"$path/post/v=$i"))
-      .reduce(_ unionByName _))
-    val len = live(committed.map(i => spark.read.parquet(s"$path/dlen/v=$i"))
-      .reduce(_ unionByName _))
-    val df = spark.read.parquet(s"$path/df/v=$v")
-    val stats = spark.read.parquet(s"$path/stats/v=$v")
-    Bm25.withEmpty(Bm25.score(tf, len, df, stats, queries, k),
+    val log = IndexLog.read(path)
+    val latest = head(log, path).version
+    val v = asOf.getOrElse(latest)
+    val at = log.at(v).getOrElse(throw new IllegalArgumentException(
+      s"asOf version $v is not committed at $path (latest=$latest)"))
+    // the union of the committed versions' postings IS the full table
+    // (batches are doc-disjoint); directories no entry names are never
+    // read
+    val (tf, len) = liveThrough(spark, log, v)
+    Bm25.withEmpty(Bm25.score(tf, len, spark.read.parquet(at.adds("df")),
+        spark.read.parquet(at.adds("stats")), queries, k),
       queries, emitEmpty)
-  }
-
-  /** Union of the tombstone tables (`del/v=i`) among `versions`, or
-    * None when no delete was ever committed in that range. A del dir
-    * is complete whenever its version's df commit marker is ([[deleteDocs]]
-    * writes df last), so a plain existence check suffices here.
-    */
-  private def tombstones(spark: SparkSession, path: String,
-      versions: Seq[Int]): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/del")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs = versions.map(i => s"$path/del/v=$i")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (dirs.isEmpty) None
-    else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _))
   }
 
   /** TOMBSTONE-delete documents from the index — the takedown/GDPR
     * path. At 100 TB the postings ARE the big table and a physical
     * delete would rewrite the corpus, so deletion is a new version
-    * carrying (a) the tombstoned ids (`del/v=N+1`, anti-joined —
+    * carrying (a) the tombstoned ids (a `del` table, anti-joined —
     * broadcast, the set is small by construction — against the
     * postings/lengths union at search time), and (b) cumulative
     * df/stats with the deleted docs' contributions SUBTRACTED
     * (computed from the index's own postings — the raw corpus is never
     * touched), so scoring stays parity-EXACT with a one-shot build
-    * over the surviving corpus. `post/dlen` for the delete version are
-    * empty placeholders keeping the every-version-has-all-tables
-    * layout uniform. [[compact]] materializes tombstones (filters the
-    * postings, drops the del dirs); `search(asOf)` on a pre-delete
+    * over the surviving corpus. The delete's entry lists only
+    * del/stats/df. [[compact]] materializes tombstones (filters the
+    * postings, drops the del tables); `search(asOf)` on a pre-delete
     * version still sees the document — deletion is itself versioned.
     *
     * Ids never indexed, or already tombstoned, are ignored
@@ -219,46 +201,38 @@ object Bm25Index {
     * guard). After a [[compact]] the tombstone is gone and the id is
     * free again.
     */
-  def deleteDocs(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no Bm25Index at $path"))
-    val committed = IndexVersions.committed(s"$path/df").sorted.filter(_ <= v)
-    def union(sub: String) = committed
-      .map(i => spark.read.parquet(s"$path/$sub/v=$i"))
-      .reduce(_ unionByName _)
-    val lens = union("dlen")
-    val requested = ids
-      .select(col(ids.columns.head).cast("long").as("did")).distinct()
-      .join(lens.select("did"), Seq("did"), "semi")
-    val target = tombstones(spark, path, committed)
-      .fold(requested)(dd => requested.join(dd, Seq("did"), "left_anti"))
-      .persist() // three consumers below; Scratch-sized by contract
-    try {
-      val dfDelta = union("post").join(target, Seq("did"), "semi")
-        .groupBy("t").agg(count(lit(1)).as("ddf"))
-      val newDf = spark.read.parquet(s"$path/df/v=$v")
-        .join(dfDelta, Seq("t"), "left")
-        .select(col("t"),
-          (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
-        .filter(col("df") > 0)
-      val newStats = spark.read.parquet(s"$path/stats/v=$v")
-        .crossJoin(lens.join(target, Seq("did"), "semi")
-          .agg(count(lit(1)).as("dn"),
-            coalesce(sum("len"), lit(0L)).as("dl")))
-        .select((col("n_docs") - col("dn")).as("n_docs"),
-          (col("total_len") - col("dl")).as("total_len"))
-      // same commit ordering as the fold path: df lands LAST
-      union("post").limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/post/v=${v + 1}")
-      lens.limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/dlen/v=${v + 1}")
-      target.coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/del/v=${v + 1}")
-      newStats.coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/stats/v=${v + 1}")
-      newDf.write.mode("overwrite").parquet(s"$path/df/v=${v + 1}")
-    } finally { target.unpersist(); () }
-  }
+  def deleteDocs(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    IndexLog.commit(path) { log =>
+      val h = head(log, path)
+      val lens = unionThrough(spark, log, h.version, "dlen").get
+      val requested = ids
+        .select(col(ids.columns.head).cast("long").as("did")).distinct()
+        .join(lens.select("did"), Seq("did"), "semi")
+      val target = unionThrough(spark, log, h.version, "del")
+        .fold(requested)(dd => requested.join(dd, Seq("did"), "left_anti"))
+        .persist() // three consumers below; Scratch-sized by contract
+      try {
+        val dfDelta = unionThrough(spark, log, h.version, "post").get
+          .join(target, Seq("did"), "semi")
+          .groupBy("t").agg(count(lit(1)).as("ddf"))
+        val newDf = spark.read.parquet(h.adds("df"))
+          .join(dfDelta, Seq("t"), "left")
+          .select(col("t"),
+            (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
+          .filter(col("df") > 0)
+        val newStats = spark.read.parquet(h.adds("stats"))
+          .crossJoin(lens.join(target, Seq("did"), "semi")
+            .agg(count(lit(1)).as("dn"),
+              coalesce(sum("len"), lit(0L)).as("dl")))
+          .select((col("n_docs") - col("dn")).as("n_docs"),
+            (col("total_len") - col("dl")).as("total_len"))
+        val dirs = Seq("del", "stats", "df").map(t => t -> log.newDir(t)).toMap
+        target.coalesce(1).write.parquet(dirs("del"))
+        newStats.coalesce(1).write.parquet(dirs("stats"))
+        newDf.write.parquet(dirs("df"))
+        log.propose(log.nextVersion, "delete", dirs)
+      } finally { target.unpersist(); () }
+    }
 
   /** Compact the whole version chain into a SUCCESSOR index at
     * `outPath` (v=1, `targetFiles` files per table), contents
@@ -270,46 +244,35 @@ object Bm25Index {
     * committed post/dlen version stays LIVE forever (search unions
     * them all), so a streamed ingest accumulates one
     * shuffle-partition-count of small files per microbatch AND an
-    * O(versions) directory listing per search. Compaction folds the
+    * O(versions) union per search. Compaction folds the
     * union back to one version. Superseded df/stats versions — dead
     * weight in the original — simply don't carry over.
     *
     * Successor-directory semantics, not an in-place swap (the
     * [[IndexMaintenance]] contract): the original is never written, a
-    * crashed/retried compact just overwrites the half-built successor,
+    * crashed compact leaves the successor uncommitted ([[IndexLog]]),
     * and callers flip their index pointer (then drop the predecessor
     * directory — that drop IS this index's vacuum) only after compact
-    * returns. In-place vacuum of superseded df/stats versions is
-    * deliberately NOT offered: `df/v=N` doubles as the commit marker
-    * for `post/v=N`, so deleting an old df dir would orphan a live
-    * postings version.
+    * returns. In-place vacuum of superseded df/stats versions is not
+    * offered: `search(asOf)` reads them.
     */
   def compact(spark: SparkSession, path: String, outPath: String,
       targetFiles: Int = 1): Unit = {
     require(targetFiles >= 1)
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no Bm25Index at $path"))
-    val committed = IndexVersions.committed(s"$path/df").sorted.filter(_ <= v)
-    val del = tombstones(spark, path, committed)
-    def union(sub: String) = {
-      val t = committed
-        .map(i => spark.read.parquet(s"$path/$sub/v=$i"))
-        .reduce(_ unionByName _)
-      // compaction MATERIALIZES tombstones: deleted dids are filtered
-      // out of the rewrite and no del dirs carry over — the successor
-      // starts with a clean chain (df/stats already exclude them)
-      del.map(dd => t.join(broadcast(dd), Seq("did"), "left_anti"))
-        .getOrElse(t)
+    val log = IndexLog.read(path)
+    val h = head(log, path)
+    // compaction MATERIALIZES tombstones: deleted dids are filtered out
+    // of the rewrite and no del table carries over — the successor
+    // starts with a clean chain (df/stats already exclude them)
+    val (tf, len) = liveThrough(spark, log, h.version)
+    IndexLog.commit(outPath) { succ =>
+      require(succ.entries.isEmpty, s"a Bm25Index already exists at $outPath")
+      val dirs = Seq("post", "dlen", "stats", "df").map(t => t -> succ.newDir(t)).toMap
+      tf.coalesce(targetFiles).write.parquet(dirs("post"))
+      len.coalesce(targetFiles).write.parquet(dirs("dlen"))
+      spark.read.parquet(h.adds("stats")).coalesce(1).write.parquet(dirs("stats"))
+      spark.read.parquet(h.adds("df")).coalesce(targetFiles).write.parquet(dirs("df"))
+      succ.propose(1, "build", dirs)
     }
-    // df last: the successor is committed (visible to latestVersion)
-    // only once all four tables are fully written
-    union("post").coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$outPath/post/v=1")
-    union("dlen").coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$outPath/dlen/v=1")
-    spark.read.parquet(s"$path/stats/v=$v").coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/stats/v=1")
-    spark.read.parquet(s"$path/df/v=$v").coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$outPath/df/v=1")
   }
 }

@@ -61,21 +61,16 @@ object CmsIndex {
   def latestVersion(path: String): Option[Int] = DeltaChain.latest(path)
 
   /** Build the index from an initial batch of poly-hashed tokens
-    * (column `h`); starts the version chain at v=1. Overwrite mode
-    * heals a torn `v=1` left by a crashed earlier attempt.
+    * (column `h`); starts the version chain at v=1.
     */
   def build(toks: DataFrame, path: String): Unit =
-    DeltaChain.writeBase(cells(toks), path, 1)
+    DeltaChain.build(cells(toks), path)
 
   /** Fold a new batch into the index: the batch's cells alone become
-    * the next delta. Exact — see the scaladoc. A retry after a crash
-    * overwrites only the torn, never-readable directory.
+    * the next delta. Exact — see the scaladoc.
     */
-  def addBatch(spark: SparkSession, path: String, toks: DataFrame): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no CmsIndex at $path"))
-    DeltaChain.writeDelta(cells(toks), path, v + 1)
-  }
+  def addBatch(spark: SparkSession, path: String, toks: DataFrame): Unit =
+    DeltaChain.appendDelta(path)(_ => cells(toks))
 
   /** The composed cell table (snapshot ⊕ live deltas, elementwise). */
   def cellTable(spark: SparkSession, path: String): DataFrame =

@@ -18,18 +18,15 @@ import org.apache.spark.sql.functions._
   * into one snapshot. Per-batch WRITE ∝ batch; read cost ∝ snapshot +
   * live deltas (bounded by compaction cadence).
   *
-  * Layout: `path/base/v=B` full snapshots, `path/delta/v=K` per-batch
-  * deltas, one monotone version sequence shared by both dirs (v=1 is
+  * Layout: `path/base/<dir>` full snapshots, `path/delta/<dir>` per-batch
+  * deltas, one monotone version sequence shared by both (1 is
   * the build snapshot; each fold takes the next number as a delta;
   * compaction re-uses the number of the last folded delta as its
   * snapshot version — "composed through K"). The live view is the
   * HIGHEST committed base plus every committed delta ABOVE it; deltas
   * at or below the base are superseded ([[vacuum]] reclaims them, plus
-  * older bases). Commit discipline is [[IndexVersions]]' `_SUCCESS`
-  * marker on every dir, so a torn snapshot OR a torn delta is
-  * invisible and healed by the retry's overwrite — and crucially a
-  * torn COMPACTION leaves the previous base + deltas authoritative
-  * (the successor never supersedes anything until its marker lands).
+  * older bases). Every build, fold and compaction is one [[IndexLog]]
+  * commit.
   *
   * The exactness argument carries over unchanged for the count tables:
   * their merge is addition, which is associative and commutative, so
@@ -39,60 +36,84 @@ import org.apache.spark.sql.functions._
   */
 object DeltaChain {
 
-  /** Latest committed full snapshot, if any. */
-  def latestBase(path: String): Option[Int] =
-    IndexVersions.latest(s"$path/base")
-
-  /** Latest committed version of the chain — base or delta, whichever
-    * is newest. This is the number the foldOnce exactly-once invariant
-    * tracks: build commits 1, every fold commits +1, compaction never
-    * advances it (it re-commits an existing number as a snapshot).
+  /** Latest committed version — the number foldOnce tracks: build
+    * commits 1, every fold +1, compaction never advances it.
     */
-  def latest(path: String): Option[Int] =
-    (IndexVersions.committed(s"$path/base") ++
-      IndexVersions.committed(s"$path/delta")).sorted.lastOption
+  def latest(path: String): Option[Int] = IndexLog.read(path).latestVersion
 
   /** Committed delta versions strictly above the latest base — the
     * live, not-yet-compacted tail (version order).
     */
-  def liveDeltaVersions(path: String): Seq[Int] = {
-    val b = latestBase(path).getOrElse(0)
-    IndexVersions.committed(s"$path/delta").filter(_ > b).sorted
-  }
+  def liveDeltaVersions(path: String): Seq[Int] =
+    capture(path).deltas.map(_.version)
 
-  def writeBase(df: DataFrame, path: String, v: Int): Unit =
-    df.write.mode("overwrite").parquet(s"$path/base/v=$v")
-
-  def writeDelta(df: DataFrame, path: String, v: Int): Unit =
-    df.write.mode("overwrite").parquet(s"$path/delta/v=$v")
-
-  /** One consistent capture of the chain's live shape: the latest base
-    * (if any) and the live delta versions above it, listed ONCE. Every
-    * consumer that both reads and labels (compaction) must work from a
-    * single capture — re-listing between "what version am I" and "what
-    * do I fold" lets a concurrently committed delta slip into a base
-    * labeled below it, after which reads double-count it forever.
+  /** The chain's live shape in one log snapshot: the latest base entry
+    * (if any) and the delta entries above it. Every consumer that both
+    * reads and labels (compaction, FamilyIndex's fold) works from one
+    * capture, so a delta committed concurrently can never fold under a
+    * label below it.
     */
-  final case class Capture(base: Option[Int], deltas: Seq[Int]) {
-    def version: Option[Int] = (base.toSeq ++ deltas).maxOption
+  private[llm] final case class Capture(base: Option[IndexLog.Entry],
+      deltas: Seq[IndexLog.Entry]) {
+    def version: Option[Int] = (base.toSeq ++ deltas).map(_.version).maxOption
   }
 
-  def capture(path: String): Capture = {
-    val b = latestBase(path)
-    Capture(b, IndexVersions.committed(s"$path/delta")
-      .filter(_ > b.getOrElse(0)).sorted)
+  private def captureOf(log: IndexLog.Log): Capture = {
+    val base = log.entries.filter(_.kind == "base").lastOption
+    Capture(base, log.entries
+      .filter(e => e.kind == "delta" && e.version > base.fold(0)(_.version))
+      .sortBy(_.version))
   }
 
-  private def segmentsOf(spark: SparkSession, path: String,
-      c: Capture): Seq[DataFrame] =
-    c.base.toSeq.map(v => spark.read.parquet(s"$path/base/v=$v")) ++
-      c.deltas.map(v => spark.read.parquet(s"$path/delta/v=$v"))
+  private[llm] def capture(path: String): Capture = captureOf(IndexLog.read(path))
 
-  /** The live segments (latest base snapshot, then live deltas in
-    * version order). Empty when the chain was never built.
+  /** Write `df` as one `kind` ("base" or "delta") directory of `log`'s
+    * attempt and propose it as `version`.
     */
-  def segments(spark: SparkSession, path: String): Seq[DataFrame] =
-    segmentsOf(spark, path, capture(path))
+  private def segment(log: IndexLog.Log, kind: String, version: Int,
+      df: DataFrame, supersedes: Seq[String] = Nil): IndexLog.Entry = {
+    val dir = log.newDir(kind)
+    df.write.parquet(dir)
+    log.propose(version, kind, Map(kind -> dir), supersedes)
+  }
+
+  /** Commit `df` as the chain's first snapshot (version 1). */
+  private[llm] def build(df: DataFrame, path: String): Unit =
+    IndexLog.commit(path) { log =>
+      require(log.entries.isEmpty, s"a delta chain already exists at $path")
+      segment(log, "base", 1, df)
+    }
+
+  /** Commit the next delta, `delta(capture)`, as the next version. A
+    * delta derived from the chain's current state reads it through the
+    * capture it is given, which is recomputed on a lost race.
+    */
+  private[llm] def appendDelta(path: String)(delta: Capture => DataFrame): Unit =
+    IndexLog.commit(path) { log =>
+      val c = captureOf(log)
+      if (c.version.isEmpty)
+        throw new IllegalStateException(s"no delta chain at $path")
+      segment(log, "delta", log.nextVersion, delta(c))
+    }
+
+  /** Fold the live deltas into a snapshot carrying the version of the
+    * last delta composed ("composed through K"), superseding the base
+    * and deltas it composed; a no-op returning the base version when
+    * nothing is live. Deltas committed while `compose` runs stay live
+    * above the new base (the capture is the attempt's own snapshot).
+    */
+  private[llm] def compact(path: String)(compose: Capture => DataFrame): Int =
+    IndexLog.commit(path) { log =>
+      val c = captureOf(log)
+      val v = c.version.getOrElse(
+        throw new IllegalStateException(s"no delta chain at $path"))
+      if (c.deltas.isEmpty) c.base.get
+      else segment(log, "base", v, compose(c),
+        (c.base.toSeq ++ c.deltas).flatMap(_.adds.values))
+    }.version
+
+  private def segmentsOf(spark: SparkSession, c: Capture): Seq[DataFrame] =
+    (c.base.toSeq ++ c.deltas).map(e => spark.read.parquet(e.adds.values.head))
 
   private def sumOf(segs: Seq[DataFrame], keys: Seq[String],
       cnt: String): DataFrame = {
@@ -109,32 +130,15 @@ object DeltaChain {
     */
   def composedSum(spark: SparkSession, path: String,
       keys: Seq[String], cnt: String): DataFrame = {
-    val segs = segments(spark, path)
+    val segs = segmentsOf(spark, capture(path))
     require(segs.nonEmpty, s"no delta chain at $path")
     sumOf(segs, keys, cnt)
   }
 
-  /** Fold the live deltas into a new snapshot carrying the version of
-    * the last delta composed ("composed through K"). No-op (returning
-    * the current base version) when there is nothing to fold. Torn
-    * compactions are invisible — the snapshot supersedes the deltas
-    * only once its `_SUCCESS` lands — and the retry overwrites.
-    * Returns the snapshot's version.
-    *
-    * The version list is captured ONCE and the snapshot is labeled with
-    * the max version actually folded — a delta committed concurrently
-    * with the compose stays live above the new base instead of being
-    * silently folded under a lower label and double-counted on read.
-    */
+  /** [[compact]] for the count tables: the snapshot is the composed sum. */
   def compactSum(spark: SparkSession, path: String,
-      keys: Seq[String], cnt: String): Int = {
-    val c = capture(path)
-    val v = c.version.getOrElse(
-      throw new IllegalStateException(s"no delta chain at $path"))
-    if (!c.base.contains(v))
-      writeBase(sumOf(segmentsOf(spark, path, c), keys, cnt), path, v)
-    v
-  }
+      keys: Seq[String], cnt: String): Int =
+    compact(path)(c => sumOf(segmentsOf(spark, c), keys, cnt))
 
   /** WHEN to fold the live tail back into a snapshot — the cadence
     * knob the round-8 measurements showed matters both ways: an
@@ -157,8 +161,7 @@ object DeltaChain {
 
   private def dirBytes(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    p.getFileSystem(spark.sessionState.newHadoopConf()).getContentSummary(p).getLength
   }
 
   /** Whether `policy` asks for a compaction now. False for an unbuilt
@@ -170,9 +173,8 @@ object DeltaChain {
     if (c.deltas.isEmpty) false
     else if (c.deltas.size >= policy.maxLiveDeltas) true
     else {
-      val base = c.base
-        .map(v => dirBytes(spark, s"$path/base/v=$v")).getOrElse(0L)
-      val tail = c.deltas.map(v => dirBytes(spark, s"$path/delta/v=$v")).sum
+      val base = c.base.map(e => dirBytes(spark, e.adds("base"))).getOrElse(0L)
+      val tail = c.deltas.map(e => dirBytes(spark, e.adds("delta"))).sum
       base == 0L || tail > policy.maxDeltaBytesRatio * base
     }
   }
@@ -181,8 +183,8 @@ object DeltaChain {
     * then `vacuumFn`) when [[shouldCompact]] fires, returning the new
     * snapshot version; None when the policy holds off. The single
     * cadence seam for streaming folds — idempotent on replay exactly
-    * like the underlying compact (same version re-written; vacuum of
-    * already-gone dirs is 0).
+    * like the underlying compact (nothing live, nothing committed;
+    * vacuum of already-gone dirs is 0).
     */
   def maybeCompact(spark: SparkSession, path: String,
       policy: CompactionPolicy = CompactionPolicy())(
@@ -194,25 +196,9 @@ object DeltaChain {
       Some(v)
     }
 
-  /** Reclaim superseded directories in place: every base below the
-    * latest committed base, every delta at or below it — committed or
-    * torn, they are equally dead (reads resolve through the latest
-    * base; a retry never targets an old number). Torn DELTAS above the
-    * base survive: they are an in-flight writer's target. Returns the
-    * number of directories removed; 0 for a missing chain.
+  /** Reclaim what committed compactions superseded ([[IndexLog.vacuum]]):
+    * older bases and the deltas they composed. Returns the number of
+    * directories removed; 0 for a missing chain.
     */
-  def vacuum(spark: SparkSession, path: String): Int = {
-    val b = latestBase(path).getOrElse(return 0)
-    val conf = spark.sessionState.newHadoopConf()
-    def drop(sub: String, dead: Int => Boolean): Int = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .filter(s => dead(s.getPath.getName.stripPrefix("v=").toInt))
-        .count(s => fs.delete(s.getPath, true))
-    }
-    drop("base", _ < b) + drop("delta", _ <= b)
-  }
+  def vacuum(spark: SparkSession, path: String): Int = IndexLog.vacuum(path)
 }

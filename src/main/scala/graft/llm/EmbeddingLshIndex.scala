@@ -194,35 +194,15 @@ object EmbeddingLshIndex {
       .write.mode("append").parquet(s"$path/bands")
   }
 
-  /** TOMBSTONE-forget indexed vectors — the takedown path for the
-    * band-key wing, mirroring [[Bm25Index.deleteDocs]] in the exact
-    * tier. The big tables (`bands/`, `vecs/`) are flat-append and at
-    * 100 TB a physical delete would rewrite them, so forgetting is an
-    * APPEND of the ids to a third flat table `_dels/`, and every probe
-    * anti-joins its history side against it (broadcast — the tombstone
-    * set is small by construction). [[compact]] materializes the
-    * tombstones: the successor's tables are physically filtered and
-    * carry no `_dels/`.
-    *
-    * Crash semantics extend the wing's "re-append on any doubt": a
-    * torn _dels append = a partially applied delete; retry re-appends,
-    * and duplicate tombstone rows are absorbed by the anti-join. A
-    * forgotten id must not be re-ingested while its tombstone is live
-    * (the anti-join would hide the new rows); after a compact the id
-    * is free again. `ids`' first column is taken as the vector id.
+  /** TOMBSTONE-forget indexed vectors: the ids (`ids`' first column,
+    * as a long) are appended to the `_dels/` sidecar that every probe
+    * anti-joins its history side against, and [[compact]] materializes
+    * — the wing's shared tombstone contract, crash semantics and
+    * re-ingest caveat included ([[IndexMaintenance.appendTombstones]]).
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/_dels")
-
-  /** `t` minus tombstoned ids (no-op when nothing was ever forgotten). */
-  private def minusDels(spark: SparkSession, path: String,
-      t: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_dels")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) t
-    else t.join(broadcast(spark.read.parquet(s"$path/_dels")),
-      Seq("id"), "left_anti")
-  }
+    IndexMaintenance.appendTombstones(path,
+      ids.select(col(ids.columns.head).cast("long")))
 
   /** Buckets whose cross-batch occupancy exceeds the cap — the
     * condition under which incremental results can diverge from a
@@ -279,9 +259,11 @@ object EmbeddingLshIndex {
       targetFiles: Int = 8): Unit = {
     // materialize tombstones during the rewrite: the successor's
     // tables physically exclude forgotten ids and carry no _dels/
-    minusDels(spark, path, spark.read.parquet(s"$path/vecs"))
+    IndexMaintenance
+      .minusTombstones(spark, path, spark.read.parquet(s"$path/vecs"))
       .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/vecs")
-    minusDels(spark, path, spark.read.parquet(s"$path/bands"))
+    IndexMaintenance
+      .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
       .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/bands")
     // the successor answers probes with the SAME signatures, so it
     // carries the same geometry record
@@ -311,7 +293,9 @@ object EmbeddingLshIndex {
     val (tablesR, planesPerTableR, dimR, seedR) =
       (g.tables, g.planesPerTable, g.dim, g.seed)
     val ref = broadcast(
-      minusDels(spark, path, spark.read.parquet(s"$path/bands")).as("b")
+      IndexMaintenance
+        .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
+        .as("b")
         .join(spark.read.parquet(s"$path/vecs").as("v"),
           col("b.id") === col("v.id"))
         .select(col("b.table"), col("b.sig"), col("v.v").as("rv")))
@@ -356,7 +340,8 @@ object EmbeddingLshIndex {
     // tombstoned ids leave the candidate space here: pairs only ever
     // form through a band join, so filtering the history bands is
     // sufficient (a forgotten id's stale vecs row can never be probed)
-    val oldBands = minusDels(spark, path, spark.read.parquet(s"$path/bands"))
+    val oldBands = IndexMaintenance
+      .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
     val newVsOld = broadcast(newBands.as("n"))
       .join(oldBands.as("o"),
         col("n.table") === col("o.table") && col("n.sig") === col("o.sig") &&

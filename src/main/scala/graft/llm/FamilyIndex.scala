@@ -64,19 +64,22 @@ object FamilyIndex {
     * CC itself.
     */
   def build(pairs: DataFrame, path: String): Unit =
-    DeltaChain.writeBase(
+    DeltaChain.build(
       graft.operators.ConnectedComponents.run(pairs, "id_a", "id_b")
-        .withColumnRenamed("component", "family"), path, 1)
+        .withColumnRenamed("component", "family"), path)
 
   /** Fold a new pair batch into the index. Pairs may touch old ids,
     * new ids, or bridge the two; old families linked by a batch edge
     * are merged to their common minimum. Writes only the batch-bounded
-    * delta (new-id assignments + rep remaps).
+    * delta (new-id assignments + rep remaps), derived from the
+    * assignment of the chain state it commits on top of.
     */
-  def addBatch(spark: SparkSession, path: String, pairs: DataFrame): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no FamilyIndex at $path"))
-    val cur = assignment(spark, path)
+  def addBatch(spark: SparkSession, path: String, pairs: DataFrame): Unit =
+    DeltaChain.appendDelta(path)(c => batchDelta(spark, path, c, pairs))
+
+  private def batchDelta(spark: SparkSession, path: String,
+      c: DeltaChain.Capture, pairs: DataFrame): DataFrame = {
+    val cur = assignmentOf(spark, path, c)
     val p = pairs.select("id_a", "id_b").materialized
     val ids = p.select(col("id_a").as("id"))
       .union(p.select(col("id_b").as("id"))).distinct()
@@ -108,7 +111,7 @@ object FamilyIndex {
       .select(col("id"), col("family"), lit("remap").as("kind"))
     val newRows = merged.join(broadcast(oldReps), Seq("id"), "left_anti")
       .select(col("id"), col("family"), lit("new").as("kind"))
-    DeltaChain.writeDelta(remapRows.unionByName(newRows), path, v + 1)
+    remapRows.unionByName(newRows)
   }
 
   /** Compose two rep-remap tables `(from, to)` in version order:
@@ -133,18 +136,17 @@ object FamilyIndex {
     assignmentOf(spark, path, DeltaChain.capture(path))
 
   /** [[assignment]] over ONE consistent capture of the chain shape —
-    * compaction reads and labels from the same capture (see
-    * [[DeltaChain.compactSum]]'s TOCTOU note).
+    * a fold or compaction reads and labels from the same capture (see
+    * [[DeltaChain.Capture]]).
     */
   private def assignmentOf(spark: SparkSession, path: String,
       c: DeltaChain.Capture): DataFrame = {
     val b = c.base.getOrElse(
       throw new IllegalStateException(s"no FamilyIndex at $path"))
-    val base = spark.read.parquet(s"$path/base/v=$b")
-    val dvs = c.deltas
-    if (dvs.isEmpty) base
+    val base = spark.read.parquet(b.adds("base"))
+    if (c.deltas.isEmpty) base
     else {
-      val deltas = dvs.map(dv => spark.read.parquet(s"$path/delta/v=$dv"))
+      val deltas = c.deltas.map(e => spark.read.parquet(e.adds("delta")))
       val rows = (base +: deltas.map(_.filter(col("kind") === "new")
         .select("id", "family"))).reduce(_ unionByName _)
       val remaps = deltas.map(_.filter(col("kind") === "remap")
@@ -161,17 +163,8 @@ object FamilyIndex {
   /** Fold the live deltas into a new snapshot carrying the latest
     * version ("composed through N"). Returns the snapshot version.
     */
-  def compact(spark: SparkSession, path: String): Int = {
-    // one capture feeds both the label and the compose: a delta
-    // committed mid-compact stays live above the new base rather than
-    // being folded under a lower label (and then applied twice)
-    val c = DeltaChain.capture(path)
-    val v = c.version.getOrElse(
-      throw new IllegalStateException(s"no FamilyIndex at $path"))
-    if (!c.base.contains(v))
-      DeltaChain.writeBase(assignmentOf(spark, path, c), path, v)
-    v
-  }
+  def compact(spark: SparkSession, path: String): Int =
+    DeltaChain.compact(path)(c => assignmentOf(spark, path, c))
 
   /** Reclaim superseded directories (see [[DeltaChain.vacuum]]). */
   def vacuum(spark: SparkSession, path: String): Int =

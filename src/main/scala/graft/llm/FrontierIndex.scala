@@ -12,10 +12,9 @@ import graft.functions.UrlFunctions
   * dedup every production crawler runs (the reference engine has no
   * crawl tier; this is the 100-TB surface on top of it).
   *
-  * Layout is the versioned-exact-index family's ([[IndexVersions]]'
-  * `v=N` + `_SUCCESS` commit discipline): `v=1` holds the seed
+  * Versions are [[IndexLog]] commits: version 1 holds the seed
   * round's distinct canonical URLs, each [[addBatch]] appends ONLY
-  * the batch's novel URLs as `v=N+1` — versions are disjoint by
+  * the batch's novel URLs as the next version — versions are disjoint by
   * construction, per-batch write ∝ batch's novelty (append-shaped:
   * every version stays live, like [[Bm25Index]]'s postings), and the
   * live set is the plain union of committed versions. Admission is
@@ -38,44 +37,51 @@ import graft.functions.UrlFunctions
   */
 object FrontierIndex {
 
-  def latestVersion(path: String): Option[Int] = IndexVersions.latest(path)
+  def latestVersion(path: String): Option[Int] = IndexLog.read(path).latestVersion
 
   private def urlsOf(df: DataFrame, urlCol: String): DataFrame =
     df.select(col(urlCol).as("url")).filter(col("url").isNotNull).distinct()
 
+  /** Commit `urls(log)` as the next version (`seed`: version 1). */
+  private def commitUrls(path: String, seed: Boolean)(
+      urls: IndexLog.Log => DataFrame): Int =
+    IndexLog.commit(path) { log =>
+      require(!seed || log.entries.isEmpty,
+        s"a FrontierIndex already exists at $path")
+      val dir = log.newDir("urls")
+      urls(log).write.parquet(dir)
+      log.propose(log.nextVersion, "urls", Map("urls" -> dir))
+    }.version
+
   /** Seed the index (v=1) with the first round's URLs. Returns the
     * committed version.
     */
-  def build(urls: DataFrame, path: String, urlCol: String): Int = {
-    urlsOf(urls, urlCol).write.mode("overwrite").parquet(s"$path/v=1")
-    1
-  }
+  def build(urls: DataFrame, path: String, urlCol: String): Int =
+    commitUrls(path, seed = true)(_ => urlsOf(urls, urlCol))
 
-  /** Append `urls`' NOVEL members (not in [[visited]]) as the next
-    * version. Torn writes heal by overwrite (the target version was
-    * never committed). Returns the committed version.
+  /** Append `urls`' NOVEL members (not in [[visited]] as of the version
+    * it commits on) as the next version. Returns the committed version.
     */
   def addBatch(spark: SparkSession, path: String, urls: DataFrame,
-      urlCol: String): Int = {
-    val v = latestVersion(path).getOrElse(0) + 1
-    urlsOf(urls, urlCol)
-      .join(visited(spark, path), Seq("url"), "left_anti")
-      .write.mode("overwrite").parquet(s"$path/v=$v")
-    v
-  }
+      urlCol: String): Int =
+    commitUrls(path, seed = false)(log => urlsOf(urls, urlCol)
+      .join(visitedOf(spark, path, log), Seq("url"), "left_anti"))
 
   /** The live visited set `(url)`: every committed version minus URL
     * and host tombstones.
     */
-  def visited(spark: SparkSession, path: String): DataFrame = {
-    val versions = IndexVersions.committed(path).sorted
-    if (versions.isEmpty)
+  def visited(spark: SparkSession, path: String): DataFrame =
+    visitedOf(spark, path, IndexLog.read(path))
+
+  private def visitedOf(spark: SparkSession, path: String,
+      log: IndexLog.Log): DataFrame = {
+    if (log.entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("url",
             org.apache.spark.sql.types.StringType))))
-    val all = versions.map(v => spark.read.parquet(s"$path/v=$v"))
+    val all = log.entries.map(e => spark.read.parquet(e.adds("urls")))
       .reduce(_ unionByName _)
     val minusUrls = sidecar(spark, s"$path/_dels")
       .map(d => all.join(broadcast(d.select(col("url"))), Seq("url"),
@@ -130,8 +136,8 @@ object FrontierIndex {
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetFiles: Int): Unit =
-    visited(spark, inPath).repartition(targetFiles)
-      .write.mode("overwrite").parquet(s"$outPath/v=1")
+    commitUrls(outPath, seed = true)(_ =>
+      visited(spark, inPath).repartition(targetFiles))
 
   // Deliberately NOT IndexMaintenance.tombstones/appendTombstones:
   // those hardcode the wing tables' long-`id` column and single

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * extend to a torn in-place swap, which could lose a whole table.
   * An immutable successor keeps recovery trivial (retry overwrites
   * it; the original is never written), and callers flip their index
-  * pointer only after the rewrite returns.
+  * pointer ([[commitLivePointer]]) only after the rewrite returns.
   */
 object IndexMaintenance {
 
@@ -60,17 +60,16 @@ object IndexMaintenance {
 
   /** Exactly-once guard for checkpointed foreachBatch folds into the
     * VERSIONED exact-index tier (Bm25Index, LineDedupIndex, CmsIndex,
-    * SpanDedupIndex, FamilyIndex). foreachBatch is at-least-once: a
-    * crash after the index committed version N+1 but before the
-    * streaming checkpoint committed batch N re-delivers batch N on
-    * restart, and a second fold would DOUBLE the batch's counts — the
-    * exact tier's torn-write healing (overwrite an uncommitted
-    * version) cannot see this case, because the replayed fold targets
-    * a fresh version number. The guard exploits that every fold bumps
-    * the version by exactly one, so with a fresh checkpoint the
-    * invariant is `version == batchId + 1` after folding batch
-    * `batchId`: a replayed batch finds `latest >= batchId + 1` already
-    * committed and skips. (The band-key wing doesn't need this —
+    * SpanDedupIndex, FamilyIndex, FrontierIndex). foreachBatch is
+    * at-least-once: a crash after the index committed version N+1 but
+    * before the streaming checkpoint committed batch N re-delivers
+    * batch N on restart, and a second fold would DOUBLE the batch's
+    * counts — the commit log ([[IndexLog]]) cannot see this case,
+    * because the replayed fold is a fresh, valid commit. The guard
+    * exploits that every fold bumps the version by exactly one, so with
+    * a fresh checkpoint the invariant is `version == batchId + 1` after
+    * folding batch `batchId`: a replayed batch finds
+    * `latest >= batchId + 1` already committed and skips. (The band-key wing doesn't need this —
     * re-appending band keys only adds candidate-join work, its
     * documented "re-append on any doubt" contract.)
     *
@@ -92,51 +91,23 @@ object IndexMaintenance {
     * some on-disk arbiter must say which directory is live — without
     * one, a crash between compact-return and the caller's pointer flip
     * leaves two plausible live dirs and nothing to break the tie. The
-    * pointer is itself a tiny versioned commit under `root/_live`
-    * (underscore ⇒ invisible to any parquet read of `root`): the `ptr`
-    * payload is written FIRST and the `_SUCCESS` marker LAST — the
-    * df-last idiom applied to a pointer — so a torn flip has no marker,
-    * [[livePointer]] skips it, and the PREDECESSOR stays authoritative.
-    * Returns the committed pointer version.
+    * pointer is an [[IndexLog]] under `root/_live` (underscore ⇒
+    * invisible to any parquet read of `root`) whose entries carry the
+    * live directory: a torn flip commits no entry and the PREDECESSOR
+    * stays authoritative. Returns the committed pointer version.
     */
   def commitLivePointer(spark: SparkSession, root: String,
-      dir: String): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val base = new org.apache.hadoop.fs.Path(s"$root/_live")
-    val fs = base.getFileSystem(conf)
-    val v = IndexVersions.latest(s"$root/_live").getOrElse(0) + 1
-    val vdir = new org.apache.hadoop.fs.Path(base, s"v=$v")
-    fs.mkdirs(vdir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(vdir, "ptr"), true)
-    try out.write(dir.getBytes("UTF-8")) finally out.close()
-    fs.create(new org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), true).close()
-    v
-  }
-
-  /** The committed live directory for `root`, or None if no flip was
-    * ever committed (torn flips — `ptr` without `_SUCCESS` — are
-    * invisible, see [[commitLivePointer]]).
-    */
-  def livePointer(spark: SparkSession, root: String): Option[String] =
-    IndexVersions.latest(s"$root/_live").map { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/_live/v=$v/ptr")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        var n = in.read(tmp)
-        while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    }
+      dir: String): Int =
+    IndexLog.commit(s"$root/_live")(log =>
+      log.propose(log.nextVersion, "live", Map("live" -> dir))).version
 
   /** Probe-side resolution: the committed pointer when one exists,
     * else `default` (the original pre-compaction directory).
     */
   def resolveLive(spark: SparkSession, root: String,
       default: String): String =
-    livePointer(spark, root).getOrElse(default)
+    IndexLog.read(s"$root/_live").entries.lastOption
+      .fold(default)(_.adds("live"))
 
   /** The `_dels` sidecar of a table, or None when nothing was ever
     * forgotten.
@@ -155,36 +126,4 @@ object IndexMaintenance {
     tombstones(spark, tablePath)
       .map(dd => t.join(broadcast(dd), Seq("id"), "left_anti"))
       .getOrElse(t)
-
-  /** Vacuum a COPY-ON-WRITE version chain (`path/v=N` dirs where every
-    * read touches only the latest committed version — [[LineDedupIndex]],
-    * [[CmsIndex]], [[SpanDedupIndex]]): delete every `v=i` directory,
-    * committed or torn, with `i` strictly below the latest committed
-    * version. Returns the number of directories removed.
-    *
-    * Those chains rewrite the FULL cumulative table each add, so the
-    * superseded versions are pure dead weight — after a thousand
-    * streamed microbatches the index holds a thousand copies of a
-    * growing table, and at 100 TB the disk bill is the difference
-    * between O(table) and O(table × batches). Safety comes from the
-    * read/write protocol, not from locking: readers resolve
-    * `latestVersion` and read ONLY that directory; writers target
-    * `latest + 1`; vacuum touches only `< latest`. Torn old dirs are
-    * equally dead (a retry targets `latest + 1`, never an old number).
-    * A crash mid-vacuum leaves some dead dirs for the next vacuum —
-    * removal is idempotent. The one chain this must NOT run on is
-    * [[Bm25Index]]'s: its post/dlen versions are append-shaped (all
-    * live) and its df dirs double as their commit markers — there,
-    * vacuum = `Bm25Index.compact` to a successor + drop the
-    * predecessor directory.
-    */
-  def vacuumChain(spark: SparkSession, path: String): Int = {
-    val latest = IndexVersions.latest(path).getOrElse(return 0)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(_.getPath.getName.stripPrefix("v=").toInt < latest)
-      .count(s => fs.delete(s.getPath, true))
-  }
 }

@@ -38,26 +38,20 @@ object LineDedupIndex {
   private def batchDf(docs: DataFrame, idCol: String, linesCol: Column) =
     LineDedup.lineDf(docs, idCol, linesCol)
 
-  /** Start the index (v=1 snapshot) from an initial document batch.
-    * Overwrite mode heals a torn `v=1` left by a crashed attempt.
-    */
+  /** Start the index (v=1 snapshot) from an initial document batch. */
   def build(docs: DataFrame, path: String, idCol: String,
       linesCol: Column): Unit =
-    DeltaChain.writeBase(batchDf(docs, idCol, linesCol), path, 1)
+    DeltaChain.build(batchDf(docs, idCol, linesCol), path)
 
   /** Fold a new DISJOINT document batch into the index (caller
     * guarantees no doc id was indexed before — re-delivery would
     * double-count df, same contract as WinnowIndex's precondition).
     * Writes ONLY the batch's own aggregate as the next delta; the
-    * cumulative table is never rewritten. A crash-retry overwrites
-    * only the torn, never-readable delta directory.
+    * cumulative table is never rewritten.
     */
   def addBatch(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, linesCol: Column): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no LineDedupIndex at $path"))
-    DeltaChain.writeDelta(batchDf(docs, idCol, linesCol), path, v + 1)
-  }
+      idCol: String, linesCol: Column): Unit =
+    DeltaChain.appendDelta(path)(_ => batchDf(docs, idCol, linesCol))
 
   /** The composed cumulative df table (snapshot + live deltas). */
   def dfTable(spark: SparkSession, path: String): DataFrame =

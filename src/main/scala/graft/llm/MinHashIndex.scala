@@ -34,8 +34,8 @@ import graft.operators.Iterate.MaterializeOps
   * doubt". A torn batch left WITHOUT retry costs recall on the torn
   * docs only (their keys are partial), never precision. The exact
   * indexes ([[LineDedupIndex]]/[[CmsIndex]]/[[Bm25Index]]), where a
-  * torn write would corrupt counts rather than recall, use versioned
-  * commit-marker writes instead ([[IndexVersions]]).
+  * torn write would corrupt counts rather than recall, commit each
+  * version through a log instead ([[IndexLog]]).
   */
 object MinHashIndex {
 

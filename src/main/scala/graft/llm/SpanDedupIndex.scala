@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
   * 4.5×-per-decade growth, the one upkeep term scaling with the
   * corpus instead of the batch. The table stays vocabulary-sized (one
   * row per distinct gram — the same table the one-shot pass shuffles
-  * to build); reads see only `_SUCCESS`-committed directories
-  * ([[IndexVersions]]), so a torn write is invisible and healed by
-  * the retry's overwrite.
+  * to build); commits go through [[IndexLog]].
   */
 object SpanDedupIndex {
 
@@ -45,23 +43,18 @@ object SpanDedupIndex {
     SpanDedup.gramPositions(docs, idCol, textCol, k)
       .groupBy("f").agg(count(lit(1)).as("n_occ"))
 
-  /** Start the index (v=1 snapshot) from an initial document batch.
-    * Overwrite mode heals a torn `v=1` left by a crashed attempt.
-    */
+  /** Start the index (v=1 snapshot) from an initial document batch. */
   def build(docs: DataFrame, path: String, idCol: String, textCol: String,
       k: Int = 8): Unit =
-    DeltaChain.writeBase(gramCounts(docs, idCol, textCol, k), path, 1)
+    DeltaChain.build(gramCounts(docs, idCol, textCol, k), path)
 
   /** Fold a new DISJOINT document batch into the index: aggregate the
     * batch alone, write it as the next delta — the cumulative table is
     * never rewritten.
     */
   def addBatch(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String, k: Int = 8): Unit = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no SpanDedupIndex at $path"))
-    DeltaChain.writeDelta(gramCounts(docs, idCol, textCol, k), path, v + 1)
-  }
+      idCol: String, textCol: String, k: Int = 8): Unit =
+    DeltaChain.appendDelta(path)(_ => gramCounts(docs, idCol, textCol, k))
 
   /** The composed cumulative gram-count table (snapshot + deltas). */
   def gramTable(spark: SparkSession, path: String): DataFrame =

@@ -7065,10 +7065,10 @@ object LlmQueries {
         EmbeddingLshIndex.append(b1, s"$dir/idx")
         EmbeddingLshIndex.compact(s, s"$dir/idx", s"$dir/idx2",
           targetFiles = 2)
-        // adoption is a COMMITTED pointer flip, not a caller convention:
-        // a crash between compact-return and this line leaves no
-        // committed pointer, so resolveLive keeps the predecessor
-        // authoritative (torn-flip case pinned in IndexMaintenanceSpec)
+        // adoption is a COMMITTED pointer flip (an IndexLog entry
+        // naming the live dir), not a caller convention: a crash between
+        // compact-return and this line commits no entry, so resolveLive
+        // keeps the predecessor authoritative (pinned in IndexCrashSpec)
         graft.llm.IndexMaintenance.commitLivePointer(s, dir, s"$dir/idx2")
         val live = graft.llm.IndexMaintenance.resolveLive(s, dir, s"$dir/idx")
         val p2 = EmbeddingLshIndex.incrementalNearDupPairs(
@@ -7081,13 +7081,12 @@ object LlmQueries {
     // postings chain is the one member of the persisted-index family
     // whose EVERY committed version stays live — search unions them
     // all — so a streamed ingest accumulates a shuffle-partition-count
-    // of small files per microbatch AND an O(versions) listing per
-    // search, and the in-place vacuum the copy-on-write chains get
-    // (q224) can't run here (df dirs double as the postings' commit
-    // markers). Compact folds the whole chain into a one-version
-    // successor directory; superseded df/stats versions simply don't
-    // carry over, and dropping the predecessor directory afterwards IS
-    // this index's vacuum. The query is the parity proof: build → add
+    // of small files per microbatch, and the in-place vacuum the delta
+    // chains get (q224) can't run here (search(asOf) still reads old
+    // df/stats). Compact folds the whole chain into a successor index
+    // committed as one log entry; superseded df/stats versions simply
+    // don't carry over, and dropping the predecessor directory
+    // afterwards IS this index's vacuum. The query is the parity proof: build → add
     // → COMPACT → search-the-successor still hash-matches q173's
     // one-shot oracle; n_versions = 1 pins that the search really ran
     // against the compacted chain, not the original.
@@ -7122,13 +7121,14 @@ object LlmQueries {
     // upkeep is ∝ batch — but at streaming cadence the delta tail
     // grows and reads pay O(live deltas). Compaction folds the
     // composed table back into one snapshot WITHOUT advancing the
-    // version (crash-safe: a torn snapshot has no _SUCCESS and
-    // supersedes nothing), and vacuum then reclaims the composed
-    // deltas plus older snapshots IN PLACE — safe without locks
-    // because reads resolve through the latest committed snapshot and
-    // writers target latest+1 (torn in-flight deltas above it survive;
-    // see LineDedupIndexSpec). The query pins all the moving parts:
-    // n_removed = 3 (base/v=1 + deltas v=2,v=3) and live_version = 3
+    // version (its log entry supersedes the base and deltas it
+    // composed; a torn compaction commits no entry and supersedes
+    // nothing), and vacuum then reclaims exactly what committed
+    // entries supersede, IN PLACE — safe without locks because readers
+    // and writers only touch directories the log names (an in-flight
+    // writer's directory survives; see IndexCrashSpec). The query pins
+    // all the moving parts: n_removed = 3 (the v=1 base + the v=2, v=3
+    // deltas) and live_version = 3
     // prove the fold really happened, and cleanWith over the
     // compacted+vacuumed index still hash-matches the one-shot q160
     // boilerplate-removal oracle byte for byte.
@@ -7477,8 +7477,8 @@ object LlmQueries {
     // pair batches fold as snapshot + TWO live deltas (new-id rows and
     // rep-remap rows, composed by in-order substitution at read), the
     // composed assignment is materialized, then compact folds the tail
-    // into a snapshot at the same version, vacuum reclaims base/v=1 +
-    // both deltas (n_removed = 3), and the snapshot-only read is
+    // into a snapshot at the same version, vacuum reclaims the v=1
+    // base + both deltas (n_removed = 3), and the snapshot-only read is
     // REQUIRED to agree row-for-row with the pre-compact composed read
     // before emitting. The oracle stays the one-shot recursive-CTE
     // closure — compaction provably cannot change the assignment.

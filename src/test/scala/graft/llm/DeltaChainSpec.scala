@@ -16,7 +16,7 @@ class DeltaChainSpec extends AnyFunSuite {
 
   test("single-segment read is the snapshot verbatim (no re-sum shuffle)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dc1").toString
-    DeltaChain.writeBase(cnt("a" -> 2L, "b" -> 1L), dir, 1)
+    DeltaChain.build(cnt("a" -> 2L, "b" -> 1L), dir)
     val composed = DeltaChain.composedSum(spark, dir, Seq("k"), "n")
     // plan shape: a bare relation scan, no Aggregate node
     assert(!composed.queryExecution.optimizedPlan.toString.contains("Aggregate"))
@@ -26,9 +26,9 @@ class DeltaChainSpec extends AnyFunSuite {
 
   test("composition sums across snapshot and every live delta") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dc2").toString
-    DeltaChain.writeBase(cnt("a" -> 2L), dir, 1)
-    DeltaChain.writeDelta(cnt("a" -> 3L, "b" -> 1L), dir, 2)
-    DeltaChain.writeDelta(cnt("b" -> 4L, "c" -> 5L), dir, 3)
+    DeltaChain.build(cnt("a" -> 2L), dir)
+    DeltaChain.appendDelta(dir)(_ => cnt("a" -> 3L, "b" -> 1L))
+    DeltaChain.appendDelta(dir)(_ => cnt("b" -> 4L, "c" -> 5L))
     assert(DeltaChain.latest(dir).contains(3))
     assert(DeltaChain.liveDeltaVersions(dir) == Seq(2, 3))
     assert(DeltaChain.composedSum(spark, dir, Seq("k"), "n")
@@ -36,34 +36,9 @@ class DeltaChainSpec extends AnyFunSuite {
       Set(("a", 5L), ("b", 5L), ("c", 5L)))
   }
 
-  test("a torn compaction supersedes nothing; the committed one does") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dc3").toString
-    DeltaChain.writeBase(cnt("a" -> 1L), dir, 1)
-    DeltaChain.writeDelta(cnt("a" -> 1L), dir, 2)
-    // torn snapshot at v=2: data without the _SUCCESS marker
-    val torn = new java.io.File(s"$dir/base/v=2")
-    cnt("a" -> 99L).write.parquet(torn.toString)
-    assert(new java.io.File(torn, "_SUCCESS").delete())
-    assert(DeltaChain.latestBase(dir).contains(1))
-    assert(DeltaChain.liveDeltaVersions(dir) == Seq(2)) // delta still live
-    assert(DeltaChain.composedSum(spark, dir, Seq("k"), "n")
-      .as[(String, Long)].collect().toSet == Set(("a", 2L)))
-    // the retried compaction overwrites the torn dir and takes over
-    assert(DeltaChain.compactSum(spark, dir, Seq("k"), "n") == 2)
-    assert(DeltaChain.latestBase(dir).contains(2))
-    assert(DeltaChain.composedSum(spark, dir, Seq("k"), "n")
-      .as[(String, Long)].collect().toSet == Set(("a", 2L)))
-    // compaction does not advance the fold version (foldOnce contract)
-    assert(DeltaChain.latest(dir).contains(2))
-    // vacuum reclaims base/v=1 + composed delta v=2
-    assert(DeltaChain.vacuum(spark, dir) == 2)
-    assert(DeltaChain.composedSum(spark, dir, Seq("k"), "n")
-      .as[(String, Long)].collect().toSet == Set(("a", 2L)))
-  }
-
   test("compact is a no-op when the base is already the latest version") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dc4").toString
-    DeltaChain.writeBase(cnt("a" -> 1L), dir, 1)
+    DeltaChain.build(cnt("a" -> 1L), dir)
     assert(DeltaChain.compactSum(spark, dir, Seq("k"), "n") == 1)
     assert(DeltaChain.vacuum(spark, dir) == 0)
   }
@@ -74,10 +49,10 @@ class DeltaChainSpec extends AnyFunSuite {
       maxLiveDeltas = 3, maxDeltaBytesRatio = 1e9)
     // unbuilt chain and fresh build: nothing to fold, never fires
     assert(!DeltaChain.shouldCompact(spark, dir, lax))
-    DeltaChain.writeBase(cnt((0 until 200).map(i => s"k$i" -> 1L): _*), dir, 1)
+    DeltaChain.build(cnt((0 until 200).map(i => s"k$i" -> 1L): _*), dir)
     assert(!DeltaChain.shouldCompact(spark, dir, lax))
     // one small delta: under both legs -> maybeCompact holds off
-    DeltaChain.writeDelta(cnt("a" -> 1L), dir, 2)
+    DeltaChain.appendDelta(dir)(_ => cnt("a" -> 1L))
     assert(!DeltaChain.shouldCompact(spark, dir, lax))
     assert(DeltaChain.maybeCompact(spark, dir, lax)(
       DeltaChain.compactSum(spark, dir, Seq("k"), "n"),
@@ -88,9 +63,9 @@ class DeltaChainSpec extends AnyFunSuite {
       maxLiveDeltas = 1000, maxDeltaBytesRatio = 0.0)
     assert(DeltaChain.shouldCompact(spark, dir, tight))
     // count leg: the third delta trips maxLiveDeltas = 3
-    DeltaChain.writeDelta(cnt("b" -> 1L), dir, 3)
+    DeltaChain.appendDelta(dir)(_ => cnt("b" -> 1L))
     assert(!DeltaChain.shouldCompact(spark, dir, lax))
-    DeltaChain.writeDelta(cnt("c" -> 1L), dir, 4)
+    DeltaChain.appendDelta(dir)(_ => cnt("c" -> 1L))
     assert(DeltaChain.shouldCompact(spark, dir, lax))
     // maybeCompact runs the chain's own fold + vacuum and reports the
     // version; reads unchanged and the tail reclaimed
@@ -108,14 +83,15 @@ class DeltaChainSpec extends AnyFunSuite {
 
   test("capture is one consistent shape: a later delta never folds under a lower label") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dc5").toString
-    DeltaChain.writeBase(cnt("a" -> 1L), dir, 1)
-    DeltaChain.writeDelta(cnt("a" -> 1L), dir, 2)
+    DeltaChain.build(cnt("a" -> 1L), dir)
+    DeltaChain.appendDelta(dir)(_ => cnt("a" -> 1L))
     val c = DeltaChain.capture(dir)
-    assert(c == DeltaChain.Capture(Some(1), Seq(2)) && c.version.contains(2))
+    assert(c.base.map(_.version).contains(1) &&
+      c.deltas.map(_.version) == Seq(2) && c.version.contains(2))
     // the race compactSum closes: a delta lands AFTER the capture —
     // composing and labeling from the captured shape must not include
     // it, so it stays live above the new base and is counted once
-    DeltaChain.writeDelta(cnt("a" -> 10L), dir, 3)
+    DeltaChain.appendDelta(dir)(_ => cnt("a" -> 10L))
     assert(DeltaChain.capture(dir).version.contains(3))
     // compactSum's own capture now sees v3; after compaction the chain
     // reads the same totals (count-once invariant)

@@ -100,13 +100,13 @@ class FamilyIndexSpec extends AnyFunSuite {
     FamilyIndex.addBatch(spark, s"$dir/idx", Seq((200L, 500L)).toDF("id_a", "id_b"))
     // the delta holds only the batch outcome (one new id), never the
     // 200 old member rows the copy-on-write fold used to rewrite
-    val delta = spark.read.parquet(s"$dir/idx/delta/v=2")
+    val delta = spark.read.parquet(IndexLog.read(s"$dir/idx").at(2).get.adds("delta"))
     assert(delta.count() <= 2)
     assert(asMap(FamilyIndex.assignment(spark, s"$dir/idx")) ==
       oneShot(big :+ (200L, 500L)))
     // a rep-merge delta routes OLD members through the remap chain
     FamilyIndex.addBatch(spark, s"$dir/idx", Seq((0L, 100L)).toDF("id_a", "id_b"))
-    val d3 = spark.read.parquet(s"$dir/idx/delta/v=3")
+    val d3 = spark.read.parquet(IndexLog.read(s"$dir/idx").at(3).get.adds("delta"))
     assert(d3.count() <= 2) // one remap row (1 -> 0), one new row (0)
     assert(asMap(FamilyIndex.assignment(spark, s"$dir/idx")) ==
       oneShot(big ++ Seq((200L, 500L), (0L, 100L))))

@@ -22,7 +22,7 @@ class FrontierIndexSpec extends AnyFunSuite {
     val v = FrontierIndex.addBatch(spark, idx,
       urls("https://a.x/2", "https://a.x/3"), "url")
     assert(v == 2)
-    assert(spark.read.parquet(s"$idx/v=2").collect()
+    assert(spark.read.parquet(IndexLog.read(idx).at(2).get.adds("urls")).collect()
       .map(_.getString(0)).toSeq == Seq("https://a.x/3"))
     assert(FrontierIndex.visited(spark, idx).count() == 3)
     val admitted = FrontierIndex.admit(spark, idx,
@@ -59,19 +59,6 @@ class FrontierIndexSpec extends AnyFunSuite {
       .map(_.getString(0)).toSeq == Seq("https://a.x/2"))
     FrontierIndex.addBatch(spark, succ, urls("https://a.x/1"), "url")
     assert(FrontierIndex.visited(spark, succ).count() == 2)
-  }
-
-  test("torn versions are invisible and heal by overwrite") {
-    val idx = tmp() + "/idx"
-    FrontierIndex.build(urls("https://a.x/1"), idx, "url")
-    // simulate a torn v=2: data without the _SUCCESS marker
-    urls("https://a.x/torn").write.parquet(s"$idx/v=2")
-    new java.io.File(s"$idx/v=2/_SUCCESS").delete()
-    assert(FrontierIndex.latestVersion(idx).contains(1))
-    assert(FrontierIndex.visited(spark, idx).count() == 1)
-    // the retry targets the same number and overwrites the torn dir
-    val v = FrontierIndex.addBatch(spark, idx, urls("https://a.x/2"), "url")
-    assert(v == 2 && FrontierIndex.visited(spark, idx).count() == 2)
   }
 
   test("admission works when the candidate column is itself named 'url'") {

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The shared lifecycle helpers: the exactly-once fold guard and the
-  * tombstone sidecar (vacuumChain and compactTable are pinned through
-  * their per-index specs).
+  * tombstone sidecar (the live pointer is pinned in IndexCrashSpec,
+  * compactTable through the per-index specs).
   */
 class IndexMaintenanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,15 +55,15 @@ class IndexMaintenanceSpec extends AnyFunSuite {
           Bm25Index.build(b, path, "doc_id", "text")
         else Bm25Index.addBatch(spark, path, b, "doc_id", "text")
       }
-    fold(0L, b0); fold(1L, b1)
-    val df = spark.read.parquet(s"$path/df/v=2")
+    def dfAt(v: Int) = spark.read.parquet(IndexLog.read(path).at(v).get.adds("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    fold(0L, b0); fold(1L, b1)
+    val df = dfAt(2)
     // crash-replay of batch 1: without the guard this would re-add doc
     // 3's postings and bump alpha's df
     fold(1L, b1)
     assert(Bm25Index.latestVersion(path).contains(2))
-    assert(spark.read.parquet(s"$path/df/v=2")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == df)
+    assert(dfAt(2) == df)
     assert(df("alpha") == 2L)
   }
 
@@ -86,39 +86,5 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/tbl2")
       .select("id").as[Long].collect().toSet == Set(1L))
     assert(!new java.io.File(s"$dir/tbl2/_dels").exists())
-  }
-
-  test("live pointer: committed flips win, torn flips leave the predecessor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-liveptr").toString
-    // no pointer ever committed -> the default (pre-compaction dir) rules
-    assert(IndexMaintenance.resolveLive(spark, dir, s"$dir/idx") == s"$dir/idx")
-    // a probe through resolveLive matches the original table
-    Seq((1L, "a"), (2L, "b")).toDF("id", "k")
-      .write.parquet(s"$dir/idx")
-    def probe(): Set[(Long, String)] = spark.read
-      .parquet(IndexMaintenance.resolveLive(spark, dir, s"$dir/idx"))
-      .as[(Long, String)].collect().toSet
-    val before = probe()
-    // compact to a successor, then simulate the TORN flip: ptr payload
-    // written, crash before the _SUCCESS marker
-    IndexMaintenance.compactTable(spark, s"$dir/idx", s"$dir/idx2", 1)
-    val torn = new java.io.File(s"$dir/_live/v=1")
-    torn.mkdirs()
-    java.nio.file.Files.write(torn.toPath.resolve("ptr"),
-      s"$dir/idx2".getBytes("UTF-8"))
-    // no marker -> pointer invisible -> predecessor still authoritative
-    assert(IndexMaintenance.livePointer(spark, dir).isEmpty)
-    assert(probe() == before)
-    // the retried flip HEALS the torn dir (same version number — it was
-    // never committed, so overwrite cannot clobber readable state) and
-    // the successor takes over; contents are identical so probes cannot
-    // tell — which is the point
-    assert(IndexMaintenance.commitLivePointer(spark, dir, s"$dir/idx2") == 1)
-    assert(IndexMaintenance.livePointer(spark, dir).contains(s"$dir/idx2"))
-    assert(IndexMaintenance.resolveLive(spark, dir, s"$dir/idx") == s"$dir/idx2")
-    assert(probe() == before)
-    // a later flip supersedes (monotone versions)
-    assert(IndexMaintenance.commitLivePointer(spark, dir, s"$dir/idx") == 2)
-    assert(IndexMaintenance.resolveLive(spark, dir, s"$dir/idx2") == s"$dir/idx")
   }
 }

@@ -26,23 +26,6 @@ class LineDedupIndexSpec extends AnyFunSuite {
     assert(inc == full && inc("SHARED HEADER") == 40L)
   }
 
-  test("a torn version dir (no _SUCCESS) is invisible and heals on retry") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ldidx3").toString
-    val all = corpus(20L)
-    LineDedupIndex.build(all.filter(col("id") < 10), s"$dir/idx", "id", col("lines"))
-    // crash mid-addBatch: v=2 has data but no _SUCCESS marker
-    val torn = new java.io.File(s"$dir/idx/v=2")
-    Seq(("garbage line", 1L)).toDF("line", "df").write.parquet(torn.toString)
-    assert(new java.io.File(torn, "_SUCCESS").delete())
-    assert(LineDedupIndex.latestVersion(s"$dir/idx").contains(1))
-    LineDedupIndex.addBatch(spark, s"$dir/idx",
-      all.filter(col("id") >= 10), "id", col("lines"))
-    assert(LineDedupIndex.latestVersion(s"$dir/idx").contains(2))
-    val inc = LineDedupIndex.dfTable(spark, s"$dir/idx")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!inc.contains("garbage line") && inc("SHARED HEADER") == 20L)
-  }
-
   test("cleanWith against the index equals the one-shot LineDedup.clean") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ldidx2").toString
     val all = corpus(30L)
@@ -68,11 +51,6 @@ class LineDedupIndexSpec extends AnyFunSuite {
       all.filter(col("id") >= 10 && col("id") < 20), "id", col("lines"))
     LineDedupIndex.addBatch(spark, s"$dir/idx",
       all.filter(col("id") >= 20), "id", col("lines"))
-    // an in-flight writer's torn delta (latest+1, no _SUCCESS) must
-    // survive vacuum — only composed-or-superseded dirs are dead
-    val torn = new java.io.File(s"$dir/idx/delta/v=4")
-    Seq(("in flight", 1L)).toDF("line", "df").write.parquet(torn.toString)
-    assert(new java.io.File(torn, "_SUCCESS").delete())
     val before = LineDedupIndex.boilerplate(spark, s"$dir/idx", maxDf = 5L)
       .collect().map(_.getString(0)).toSet
     // before compaction nothing is superseded — every delta is live
@@ -80,18 +58,21 @@ class LineDedupIndexSpec extends AnyFunSuite {
     // compact folds deltas 2..3 into base/v=3; version does not advance
     assert(LineDedupIndex.compact(spark, s"$dir/idx") == 3)
     assert(LineDedupIndex.latestVersion(s"$dir/idx").contains(3))
-    // vacuum now reclaims base/v=1 and deltas v=2, v=3 (torn v=4 survives)
+    // vacuum now reclaims the v=1 base and the v=2, v=3 deltas, and
+    // trims their log entries: only the compacted base is left
     assert(LineDedupIndex.vacuum(spark, s"$dir/idx") == 3)
-    assert(new java.io.File(s"$dir/idx/base").listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName).toSet == Set("v=3"))
-    assert(new java.io.File(s"$dir/idx/delta").listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName).toSet == Set("v=4"))
+    def dirs(t: String) = new java.io.File(s"$dir/idx/$t").listFiles()
+      .map(_.getPath).toSet
+    val log = IndexLog.read(s"$dir/idx")
+    assert(log.entries.map(e => (e.kind, e.version)) == Seq(("base", 3)))
+    assert(dirs("base") == log.entries.flatMap(_.adds.values).toSet)
+    assert(dirs("delta").isEmpty)
     assert(LineDedupIndex.latestVersion(s"$dir/idx").contains(3))
     assert(LineDedupIndex.boilerplate(spark, s"$dir/idx", maxDf = 5L)
       .collect().map(_.getString(0)).toSet == before)
     // idempotent: nothing superseded remains
     assert(LineDedupIndex.vacuum(spark, s"$dir/idx") == 0)
-    // a retried addBatch overwrites the torn delta and the chain goes on
+    // the chain goes on past the compacted base
     LineDedupIndex.addBatch(spark, s"$dir/idx",
       corpus(35L).filter(col("id") >= 30), "id", col("lines"))
     assert(LineDedupIndex.latestVersion(s"$dir/idx").contains(4))

@@ -78,20 +78,6 @@ class SpanDedupIndexSpec extends AnyFunSuite {
     assert(out(6L)._3 == 0L && out(7L)._3 == 0L)
   }
 
-  test("a torn version dir (no _SUCCESS) is invisible and heals on retry") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdidx4").toString
-    val (b1, b2) = split(corpus)
-    SpanDedupIndex.build(b1, s"$dir/idx", "doc_id", "text")
-    val torn = new java.io.File(s"$dir/idx/delta/v=2")
-    Seq(("deadbeef", 9L)).toDF("f", "n_occ").write.parquet(torn.toString)
-    assert(new java.io.File(torn, "_SUCCESS").delete())
-    assert(SpanDedupIndex.latestVersion(s"$dir/idx").contains(1))
-    SpanDedupIndex.addBatch(spark, s"$dir/idx", b2, "doc_id", "text")
-    assert(SpanDedupIndex.latestVersion(s"$dir/idx").contains(2))
-    val inc = SpanDedupIndex.gramTable(spark, s"$dir/idx")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!inc.contains("deadbeef"))
-  }
   test("compact + vacuum drop composed deltas; cleanseWith unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sdvac").toString
     val (b1, b2) = split(corpus)
