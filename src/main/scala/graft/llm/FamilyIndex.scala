@@ -30,7 +30,7 @@ import graft.operators.Iterate.MaterializeOps
   * in FamilyIndexSpec against random graphs, and by q229's oracle).
   *
   * DELTA-COMPOSED ([[DeltaChain]] layout): a fold writes ONLY the
-  * batch's outcome as `delta/v=N` — rows `(id, family, kind)` where
+  * batch's outcome as its delta — rows `(id, family, kind)` where
   * `kind='new'` assigns a first-seen id and `kind='remap'` records a
   * family-representative merge `(old rep → new rep)`. [[assignment]]
   * composes at read time: remap tables are CHAINED in version order
@@ -40,16 +40,11 @@ import graft.operators.Iterate.MaterializeOps
   * once merged away, can never become a representative again (its
   * component forever contains a smaller id), so remap domains across
   * batches are disjoint after in-order resolution; applying the fully
-  * composed remap to ALL rows is therefore exact. The copy-on-write
-  * form this replaces rewrote the corpus-sized assignment every fold
-  * (measured: the family ingest mode ran at a tenth of the
-  * append-shaped wings' rate, flat but 10× the constant); per-batch
-  * write is now ∝ batch, and [[compact]] folds the composed view back
-  * into a snapshot on the operator's cadence, not the stream's.
-  *
-  * Remap tables are broadcast-sized by construction (≤ families
-  * merged per batch ≤ batch pairs) — the same envelope the
-  * copy-on-write fold's broadcast remap join already assumed.
+  * composed remap to ALL rows is therefore exact. Per-batch write is
+  * ∝ batch, and [[compact]] folds the composed view back into a
+  * snapshot on the operator's cadence, not the stream's. Remap tables
+  * are broadcast-sized by construction (≤ families merged per batch ≤
+  * batch pairs).
   */
 object FamilyIndex {
 

@@ -76,18 +76,14 @@ object FrontierIndex {
   private def visitedOf(spark: SparkSession, path: String,
       log: IndexLog.Log): DataFrame = {
     if (log.entries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("url",
-            org.apache.spark.sql.types.StringType))))
+      return spark.emptyDataset(org.apache.spark.sql.Encoders.STRING).toDF("url")
     val all = log.entries.map(e => spark.read.parquet(e.adds("urls")))
       .reduce(_ unionByName _)
-    val minusUrls = sidecar(spark, s"$path/_dels")
+    val minusUrls = IndexMaintenance.tombstones(spark, path)
       .map(d => all.join(broadcast(d.select(col("url"))), Seq("url"),
         "left_anti"))
       .getOrElse(all)
-    sidecar(spark, s"$path/_host_dels")
+    IndexMaintenance.tombstones(spark, path, "_host_dels")
       .map(h => minusUrls.join(
         broadcast(h.select(col("host").as("__del_host"))),
         UrlFunctions.host(col("url")) === col("__del_host"), "left_anti"))
@@ -138,16 +134,4 @@ object FrontierIndex {
       targetFiles: Int): Unit =
     commitUrls(outPath, seed = true)(_ =>
       visited(spark, inPath).repartition(targetFiles))
-
-  // Deliberately NOT IndexMaintenance.tombstones/appendTombstones:
-  // those hardcode the wing tables' long-`id` column and single
-  // `_dels` sidecar, while this index keys on STRING urls and carries
-  // two tombstone kinds (url + host). Generalizing the shared helpers
-  // would touch every wing caller for two ten-line readers; revisit if
-  // a third string-keyed index appears.
-  private def sidecar(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
-    else Some(spark.read.parquet(path))
-  }
 }

@@ -1,10 +1,11 @@
 package graft.llm
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Paths}
 
 import scala.annotation.tailrec
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The commit log of a versioned index — the one place that numbers
@@ -35,14 +36,20 @@ import org.apache.spark.sql.SparkSession
   * FamilyIndex's assignment, a compaction's capture — is recomputed.
   *
   * '''Crash.''' A writer that dies before its entry lands leaves only
-  * unnamed directories, invisible to readers; the retry writes fresh
-  * ones. An attempt whose job throws deletes its directories first. A
-  * torn compaction or pointer flip thus supersedes nothing.
+  * unnamed directories and perhaps a `.tmp` entry, invisible to
+  * readers; the retry writes fresh ones. An attempt whose job throws
+  * deletes its directories first. A torn compaction or pointer flip
+  * thus supersedes nothing.
   *
-  * '''Vacuum.''' [[vacuum]] deletes what committed entries supersede,
-  * then the entries left with no live directory, bounding the log. It
-  * never touches an unnamed directory: an in-flight writer's data
-  * survives (and so does a crashed writer's, indistinguishable from it).
+  * '''Vacuum.''' [[vacuum]] deletes what committed entries supersede
+  * and `.tmp` entries (a commit that loses its temp file reruns), and
+  * empties entries left with no live directory (never the head) to
+  * zero-byte stubs that readers skip. A stub keeps its sequence number
+  * taken, so a writer holding an older snapshot loses its race instead
+  * of committing below a newer compaction; the log's names thus grow
+  * by one per commit. Vacuum never touches an unnamed directory (an
+  * in-flight writer's, or a crashed one's), but it does remove
+  * superseded ones a reader of an older snapshot may still be scanning.
   */
 object IndexLog {
 
@@ -56,13 +63,13 @@ object IndexLog {
     * commit attempt against it.
     */
   final class Log private[IndexLog] (val root: String,
-      val entries: Seq[Entry]) {
+      val entries: Seq[Entry], head: Long) {
     def latestVersion: Option[Int] = entries.map(_.version).maxOption
     def nextVersion: Int = latestVersion.getOrElse(0) + 1
     /** The newest entry producing `version`. */
     def at(version: Int): Option[Entry] =
       entries.filter(_.version == version).lastOption
-    private[IndexLog] def nextSeq: Long = entries.lastOption.fold(1L)(_.seq + 1)
+    private[IndexLog] def nextSeq: Long = head + 1
     private lazy val token = java.util.UUID.randomUUID.toString.take(8)
     private[IndexLog] val named = scala.collection.mutable.ArrayBuffer.empty[String]
 
@@ -83,10 +90,23 @@ object IndexLog {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration()))
 
+  /** `p` on the local filesystem, for java.nio's atomic primitives. */
+  private def local(fs: FileSystem, p: Path): Option[java.nio.file.Path] =
+    if (fs.getScheme == "file") Some(Paths.get(fs.makeQualified(p).toUri)) else None
+
   private def rmDir(d: String): Boolean = fsOf(new Path(d)).delete(new Path(d), true)
 
+  private def logDir(root: String) = new Path(s"$root/_log")
+
   private def entryPath(root: String, seq: Long) =
-    new Path(s"$root/_log", f"$seq%010d")
+    new Path(logDir(root), f"$seq%010d")
+
+  /** Every file in `_log`: entries, stubs and temp entries. */
+  private def listing(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  private def isEntry(st: FileStatus) = st.getPath.getName.matches("[0-9]+")
 
   private def render(root: String, e: Entry): String = {
     def rel(p: String) = p.stripPrefix(s"$root/")
@@ -111,20 +131,14 @@ object IndexLog {
     */
   def read(path: String): Log = {
     val root = path.stripSuffix("/")
-    val dir = new Path(s"$root/_log")
-    val fs = fsOf(dir)
-    val names =
-      try fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).sorted
-      catch { case _: java.io.FileNotFoundException => Nil }
-    // an entry vacuum trims between the listing and the open was dead
-    new Log(root, names.flatMap { n =>
-      try {
-        val in = fs.open(new Path(dir, n))
-        try Some(parse(root, new String(in.readAllBytes(), UTF_8)))
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    })
+    val fs = fsOf(logDir(root))
+    val names = listing(fs, logDir(root)).filter(isEntry).sortBy(_.getPath.getName)
+    // a stub, or an entry vacuum empties while it is read, reads short
+    new Log(root, names.filter(_.getLen > 0).flatMap { st =>
+      val in = fs.open(st.getPath)
+      val bytes = try in.readAllBytes() finally in.close()
+      if (bytes.length < st.getLen) None else Some(parse(root, new String(bytes, UTF_8)))
+    }, names.lastOption.fold(0L)(_.getPath.getName.toLong))
   }
 
   /** Atomically create entry `e` unless its sequence number is taken. */
@@ -135,18 +149,19 @@ object IndexLog {
     fs.mkdirs(target.getParent)
     val bytes = render(root, e).getBytes(UTF_8)
     val tmpName = s".${target.getName}.${java.util.UUID.randomUUID}.tmp"
-    if (fs.getScheme == "file") {
-      val dst = java.nio.file.Paths.get(fs.makeQualified(target).toUri)
-      val tmp = dst.resolveSibling(tmpName)
-      java.nio.file.Files.write(tmp, bytes)
-      try { java.nio.file.Files.createLink(dst, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      finally java.nio.file.Files.delete(tmp)
-    } else {
-      val tmp = new Path(target.getParent, tmpName)
-      val out = fs.create(tmp, false)
-      try out.write(bytes) finally out.close()
-      try fs.rename(tmp, target) finally fs.delete(tmp, false)
+    local(fs, target) match {
+      case Some(dst) =>
+        val tmp = dst.resolveSibling(tmpName)
+        Files.write(tmp, bytes)
+        // NoSuchFile: vacuum deleted the temp entry; lose and rerun
+        try { Files.createLink(dst, tmp); true }
+        catch { case _: FileAlreadyExistsException | _: NoSuchFileException => false }
+        finally Files.deleteIfExists(tmp)
+      case None =>
+        val tmp = new Path(target.getParent, tmpName)
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
+        try fs.rename(tmp, target) finally fs.delete(tmp, false)
     }
   }
 
@@ -166,18 +181,23 @@ object IndexLog {
     }
   }
 
-  /** Delete every directory a committed entry supersedes, then the
-    * entries whose directories are all superseded (never the head, so
-    * sequence numbers stay monotone). Returns the number of data
-    * directories removed; 0 for a missing index.
+  /** Delete every directory a committed entry supersedes, stub the
+    * entries all of whose directories are gone (never the head) and
+    * delete `.tmp` entries. Returns the number of data directories
+    * removed; 0 for a missing index.
     */
   def vacuum(path: String): Int = {
     val log = read(path)
     val dead = log.entries.flatMap(_.supersedes).toSet
     val removed = dead.count(rmDir)
+    val fs = fsOf(logDir(log.root))
     log.entries.dropRight(1)
       .filter(e => e.adds.nonEmpty && e.adds.values.forall(dead))
-      .foreach(e => fsOf(entryPath(log.root, e.seq)).delete(entryPath(log.root, e.seq), false))
+      .map(e => entryPath(log.root, e.seq)).foreach { p =>
+        local(fs, p).fold(fs.create(p, true).close())(Files.write(_, Array.emptyByteArray))
+      }
+    listing(fs, logDir(log.root)).map(_.getPath)
+      .filter(_.getName.endsWith(".tmp")).foreach(fs.delete(_, false))
     removed
   }
 }

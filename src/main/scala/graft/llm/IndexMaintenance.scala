@@ -109,11 +109,12 @@ object IndexMaintenance {
     IndexLog.read(s"$root/_live").entries.lastOption
       .fold(default)(_.adds("live"))
 
-  /** The `_dels` sidecar of a table, or None when nothing was ever
-    * forgotten.
+  /** A tombstone sidecar (`_dels` unless named) of a table, or None
+    * when nothing was ever forgotten.
     */
-  def tombstones(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/_dels")
+  def tombstones(spark: SparkSession, tablePath: String,
+      sidecar: String = "_dels"): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"$tablePath/$sidecar")
     if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
     else Some(spark.read.parquet(p.toString))
   }

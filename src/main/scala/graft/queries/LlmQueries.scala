@@ -7124,9 +7124,13 @@ object LlmQueries {
     // version (its log entry supersedes the base and deltas it
     // composed; a torn compaction commits no entry and supersedes
     // nothing), and vacuum then reclaims exactly what committed
-    // entries supersede, IN PLACE — safe without locks because readers
-    // and writers only touch directories the log names (an in-flight
-    // writer's directory survives; see IndexCrashSpec). The query pins
+    // entries supersede, IN PLACE. A fold racing it loses no batch:
+    // vacuum never frees a sequence number, so a writer still holding
+    // an older snapshot loses its commit race and reruns, and an
+    // in-flight writer's unnamed directory survives (IndexLogSpec,
+    // IndexCrashSpec). A reader still scanning a superseded directory
+    // is not protected; here nothing reads the pre-compaction chain
+    // after vacuum. The query pins
     // all the moving parts: n_removed = 3 (the v=1 base + the v=2, v=3
     // deltas) and live_version = 3
     // prove the fold really happened, and cleanWith over the

@@ -16,13 +16,16 @@ import graft.TestSpark
   *
   *  - the data job dies midway (its input throws inside a task);
   *  - the data is complete but no entry is committed — the operation
-  *    runs for real against a copy of its target, and every file it
-  *    wrote outside `_log` is copied back into the original.
+  *    runs for real against a copy of its target, every file it wrote
+  *    outside `_log` is copied back into the original, and each entry
+  *    it committed lands only as a temp entry file (the commit died
+  *    before its link).
   *
   * At both, the torn attempt must be invisible (the observable state,
   * versions included, equals the state before), vacuum must spare the
-  * torn attempt's directories and supersede nothing, and a plain retry
-  * must reach exactly the state of a clean run.
+  * torn attempt's directories, supersede nothing and delete its temp
+  * entries, and a plain retry must reach exactly the state of a clean
+  * run.
   */
 class IndexCrashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -192,10 +195,11 @@ class IndexCrashSpec extends AnyFunSuite {
     }
 
   /** Run `op` for real against a copy of its target, then copy every
-    * file it wrote outside `_log` back: complete data, no entry.
-    * Returns the top-level directories the torn attempt added.
+    * file it wrote outside `_log` back, and each entry it committed as
+    * a temp entry file: complete data, no entry. Returns the top-level
+    * directories and the temp entries the torn attempt added.
     */
-  private def tornRun(op: Op, root: String): Set[File] = {
+  private def tornRun(op: Op, root: String): (Set[File], Set[File]) = {
     val target = new File(op.target(root)).toPath
     val shadow = new File(tmp(), "shadow").toPath
     files(target).foreach { f =>
@@ -204,10 +208,10 @@ class IndexCrashSpec extends AnyFunSuite {
       else Files.copy(f, to)
     }
     op.run(root, shadow.toString, identity)
-    files(shadow).map(shadow.relativize).filter { rel =>
-      !rel.iterator.asScala.exists(_.toString == "_log") &&
-        !Files.exists(target.resolve(rel))
-    }.flatMap { rel =>
+    val (log, data) = files(shadow).map(shadow.relativize)
+      .filter(rel => !Files.exists(target.resolve(rel)))
+      .partition(_.iterator.asScala.exists(_.toString == "_log"))
+    val dirs = data.flatMap { rel =>
       val to = target.resolve(rel)
       if (Files.isDirectory(shadow.resolve(rel))) Files.createDirectories(to)
       else Files.copy(shadow.resolve(rel), to)
@@ -215,6 +219,13 @@ class IndexCrashSpec extends AnyFunSuite {
       if (rel.getNameCount >= 2) Some(target.resolve(rel.subpath(0, 2)).toFile)
       else None
     }.toSet
+    val entries = log.filter(rel => Files.isRegularFile(shadow.resolve(rel))).map { rel =>
+      val to = target.resolve(rel)
+      Files.createDirectories(to.getParent)
+      Files.copy(shadow.resolve(rel),
+        to.resolveSibling(s".${to.getFileName}.torn.tmp")).toFile
+    }.toSet
+    (dirs, entries)
   }
 
   private def cleanRun(op: Op): String = {
@@ -252,15 +263,22 @@ class IndexCrashSpec extends AnyFunSuite {
       val root = tmp()
       op.fixture(root)
       val before = op.read(root)
-      val torn = tornRun(op, root)
+      val (torn, tornEntries) = tornRun(op, root)
       // every member but the pointer writes data before its entry
       assert(torn.nonEmpty || op.name == "live pointer flip")
+      assert(tornEntries.nonEmpty)
       assert(op.read(root) == before)
       op.vacuum.foreach { v =>
         assert(v(root) == 0)
         assert(op.read(root) == before)
         torn.foreach(d => assert(d.exists(), s"vacuum removed in-flight $d"))
       }
+      // the log's own vacuum deletes the crashed commit's temp entries
+      tornEntries.foreach { f =>
+        assert(IndexLog.vacuum(f.getParentFile.getParent) == 0)
+        assert(!f.exists(), s"vacuum left temp entry $f")
+      }
+      assert(op.read(root) == before)
       retryHeals(op, root)
     }
   }

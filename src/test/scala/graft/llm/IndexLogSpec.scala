@@ -97,6 +97,32 @@ class IndexLogSpec extends AnyFunSuite {
     assert(DeltaChain.latest(path).contains(5))
   }
 
+  test("a stale snapshot loses to a compaction and vacuum: no sequence number is reused") {
+    val path = tmp()
+    val cnt = Seq(("a", 1L)).toDF("k", "n")
+    DeltaChain.build(cnt, path)
+    var attempts = 0
+    // the first attempt holds the snapshot at seq 1 while another writer
+    // appends (seq 2), compacts (seq 3, superseding seq 1 and 2) and
+    // vacuums; its proposal at seq 2 must lose, not land below the base
+    DeltaChain.appendDelta(path) { _ =>
+      attempts += 1
+      if (attempts == 1) {
+        DeltaChain.appendDelta(path)(_ => cnt)
+        DeltaChain.compactSum(spark, path, Seq("k"), "n")
+        assert(DeltaChain.vacuum(spark, path) == 2)
+        assert(IndexLog.read(path).entries.map(_.seq) == Seq(3L))
+      }
+      cnt
+    }
+    assert(attempts == 2)
+    val log = IndexLog.read(path)
+    assert(log.entries.map(e => (e.seq, e.kind, e.version)) ==
+      Seq((3L, "base", 2), (4L, "delta", 3)))
+    assert(DeltaChain.composedSum(spark, path, Seq("k"), "n")
+      .as[(String, Long)].collect().toSeq == Seq(("a", 3L)))
+  }
+
   /** Two threads fold disjoint batches into one index at once; the
     * composed result must equal a from-scratch build over every batch,
     * with exactly one log entry per version.
