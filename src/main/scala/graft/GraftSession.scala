@@ -20,6 +20,15 @@ import org.apache.spark.sql.SparkSession
   * builds its session from spark-submit conf rather than through `local`
   * (whose builder setting would win) and re-enables isolation there:
   * `--conf spark.sql.artifact.isolation.enabled=true`.
+  *
+  * The `file:` scheme is graft's [[LocalFs]] for both the `FileSystem`
+  * and the `FileContext` API. Without libhadoop, Hadoop's stock local
+  * filesystem starts a `chmod` for every file and directory it creates
+  * and a `readlink` on every FileContext rename; on the streaming and
+  * index-tier queries those forks were a large share of a pass. Caveat:
+  * Hadoop caches one `FileSystem` per scheme and user for the whole JVM,
+  * so a `file:` filesystem obtained from a plain `Configuration` before
+  * the first session is built stays the stock class for the JVM's life.
   */
 object GraftSession {
   /** `conf` entries are applied after (and so override) the defaults; each
@@ -45,6 +54,8 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       // one executor classloader for every (cloned) session: see above
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // fork-free `file:` filesystem: see above
+      .config(LocalFs.settings)
       .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

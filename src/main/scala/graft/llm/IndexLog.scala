@@ -86,7 +86,7 @@ object IndexLog {
   }
 
   private def fsOf(p: Path): FileSystem =
-    p.getFileSystem(SparkSession.getActiveSession
+    p.getFileSystem(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration()))
 

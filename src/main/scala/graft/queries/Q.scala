@@ -35,6 +35,13 @@ object Scratch {
     Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
     p.toString
   }
+  /** A scratch dir for one bounded use: deleted in-process once `use`
+    * returns, for callers whose result no longer reads it.
+    */
+  def using[A](prefix: String)(use: String => A): A = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    try use(p.toString) finally delete(p.toFile)
+  }
   private def delete(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(delete)

@@ -255,21 +255,12 @@ object StreamOps {
     * paying a 1000-partition state tax forever. Restored afterwards;
     * the returned batch DataFrame plans under the session's normal
     * width.
+    *
+    * The checkpoint goes to a graft scratch dir that is deleted
+    * in-process once the query stops (the memory sink's rows are on the
+    * driver by then), so Spark makes no `temporary-<uuid>` checkpoint
+    * and starts no `rm -rf` to remove it.
     */
-  /** Streaming state width for the stateful `runToBatch` sites: the
-    * session conf `graft.statePartitions` when set (the deployment
-    * knob — a 100 TB/day stream with a wide key space raises it before
-    * the FIRST batch, because state width pins at the first checkpoint
-    * and cannot be widened later without a state rebuild), else
-    * `default`, the per-query key-cardinality sizing measured in
-    * round 12 (stream-stream joins pay 4 store lifecycles per
-    * partition per batch; 8 partitions measured 2-3x faster than the
-    * corpus-wide 32 at gate scale). Partition count cannot change any
-    * declared result — it is layout, not semantics.
-    */
-  def confStatePartitions(spark: SparkSession, default: Int = 8): Option[Int] =
-    Some(spark.conf.get("graft.statePartitions", default.toString).toInt)
-
   def runToBatch(spark: SparkSession, stream: DataFrame, outputMode: String,
       statePartitions: Option[Int] = None,
       availableNow: Boolean = false): DataFrame = {
@@ -277,9 +268,9 @@ object StreamOps {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
+    try graft.queries.Scratch.using("graft-runtobatch-") { checkpoint =>
       val writer = stream.writeStream.outputMode(outputMode)
-        .format("memory").queryName(name)
+        .format("memory").queryName(name).option("checkpointLocation", checkpoint)
       if (availableNow) {
         // Deterministic drain: Trigger.AvailableNow processes every
         // available offset (read limits like maxFilesPerTrigger still
@@ -301,6 +292,20 @@ object StreamOps {
     } finally spark.conf.set(key, prev)
     spark.table(name)
   }
+
+  /** Streaming state width for the stateful `runToBatch` sites: the
+    * session conf `graft.statePartitions` when set (the deployment
+    * knob — a 100 TB/day stream with a wide key space raises it before
+    * the FIRST batch, because state width pins at the first checkpoint
+    * and cannot be widened later without a state rebuild), else
+    * `default`, the per-query key-cardinality sizing measured in
+    * round 12 (stream-stream joins pay 4 store lifecycles per
+    * partition per batch; 8 partitions measured 2-3x faster than the
+    * corpus-wide 32 at gate scale). Partition count cannot change any
+    * declared result — it is layout, not semantics.
+    */
+  def confStatePartitions(spark: SparkSession, default: Int = 8): Option[Int] =
+    Some(spark.conf.get("graft.statePartitions", default.toString).toInt)
 
   /** File-source stream over one parquet table (schema from a batch peek,
     * as file streams require an explicit schema). Works for both directory

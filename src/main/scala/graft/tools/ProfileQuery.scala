@@ -57,6 +57,7 @@ object ProfileQuery {
       val site = p.flatMap(x => Option(x.getProperty("spark.sql.execution.id")))
         .flatMap(id => execSite.get(id.toLong))
         .orElse(p.flatMap(x => Option(x.getProperty("spark.job.description"))))
+        .orElse(j.stageInfos.flatMap(si => graftFrame(si.details)).headOption)
         .getOrElse("?")
       jobStartNs(j.jobId) = (site, System.nanoTime())
       j.stageIds.foreach(sid =>
@@ -68,12 +69,14 @@ object ProfileQuery {
       }
     override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
       submitted(s.stageInfo.stageId) = System.nanoTime()
-      // first graft frame of the stage's creation site = which operator/
-      // protocol action the stage belongs to
-      s.stageInfo.details.split("\n")
-        .find(l => l.contains("graft.") && !l.contains("graft.tools."))
-        .foreach(l => stageSite(s.stageInfo.stageId) = l.trim.take(90))
+      graftFrame(s.stageInfo.details)
+        .foreach(l => stageSite(s.stageInfo.stageId) = l.take(90))
     }
+    // first graft frame of a stage's creation site = which operator/
+    // protocol action the stage (and a job with no SQL execution or
+    // description, e.g. a schema-inference job) belongs to
+    private def graftFrame(details: String): Option[String] =
+      details.split("\n").find(l => l.contains("graft.") && !l.contains("graft.tools.")).map(_.trim)
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
       val a = stages.getOrElseUpdate(si.stageId, StageAgg(si.name))

@@ -618,4 +618,28 @@ class StreamOpsSpec extends AnyFunSuite {
       "append")
     assert(out.count() == 2)
   }
+
+  test("runToBatch checkpoints into a graft scratch dir and deletes it once the stream stops") {
+    val before = StreamOpsSpec.checkpointDirs()
+    // inside the stream's tasks: how many runToBatch checkpoints hold offsets
+    val live = udf(() => StreamOpsSpec.checkpointDirs()
+      .count(d => new java.io.File(d, "offsets").isDirectory)).asNondeterministic()
+    graft.queries.Scratch.using("runtobatch-src") { src =>
+      spark.range(0, 40).selectExpr("id % 7 AS k", "id").write.parquet(s"$src/t")
+      val out = StreamOps.runToBatch(spark,
+        StreamOps.readStream(spark, s"$src/t").withColumn("live", live())
+          .groupBy("k").agg(count(lit(1)).as("n"), min("live").as("live")), "complete")
+      val batch = spark.read.parquet(s"$src/t").groupBy("k").agg(count(lit(1)).as("n"))
+      assert(out.select("k", "n").as[(Long, Long)].collect().sorted
+        sameElements batch.as[(Long, Long)].collect().sorted)
+      assert(out.as[(Long, Long, Int)].collect().forall(_._3 >= 1))
+    }
+    assert(StreamOpsSpec.checkpointDirs() == before)
+  }
+}
+
+object StreamOpsSpec {
+  def checkpointDirs(): Set[java.io.File] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles).toSet.flatten
+      .filter(_.getName.startsWith("graft-runtobatch-"))
 }
