@@ -163,13 +163,12 @@ object StreamBench {
       // probe inside the fold reads the pre-batch index state, and a
       // replay after a committed fold must still land the batch's keys
       cacheBatch = true,
-      after = (s, b, idx, bid) => {
+      after = (s, b, idx) => {
         val t0 = System.nanoTime()
-        // bid == 0, NOT File.exists: the build is an idempotent
-        // overwrite, so a replayed batch 0 (crash mid-build left a
-        // partial dir) re-runs it rather than appending to a
-        // never-committed table and losing batch-0 band keys
-        if (bid == 0L)
+        // the log, NOT File.exists: a crashed first build leaves an
+        // unnamed directory behind but commits no entry, so the replayed
+        // batch builds again
+        if (graft.llm.IndexLog.read(s"$idx/mh").latestVersion.isEmpty)
           graft.llm.MinHashIndex.build(b, s"$idx/mh", "doc_id", "text")
         else graft.llm.MinHashIndex.append(b, s"$idx/mh", "doc_id", "text")
         System.err.println(f"[family] append=${(System.nanoTime() - t0) / 1e9}%.1fs")
@@ -274,12 +273,12 @@ object StreamBench {
         // that radius 8 admits ~4x collision pairs (production stacks
         // pixel-verify after the hash cut; the tight radius keeps this
         // throughput loop's proof count ≈ the twin count)
+        val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
         decisions +=
-          (if (!new java.io.File(idx).exists())
-            PerceptualHash.nearDupPairs(h, "id", radius = 2).count()
+          (if (fresh) PerceptualHash.nearDupPairs(h, "id", radius = 2).count()
           else PHashIndex.incrementalNearDupPairs(spark, idx, h, "id",
             radius = 2).count())
-        if (!new java.io.File(idx).exists()) PHashIndex.build(h, idx)
+        if (fresh) PHashIndex.build(h, idx)
         else PHashIndex.append(h, idx)
       }
       .start()
@@ -347,14 +346,15 @@ object StreamBench {
               when(col("vec_id") % 2 === 1, 2.0).otherwise(1.0))
               .cast("float")).as("embedding")).materialized
         val tp0 = System.nanoTime()
+        val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
         decisions +=
-          (if (!new java.io.File(idx).exists())
+          (if (fresh)
             EmbeddingKnn.nearDupPairsLsh(vecs, threshold = 0.9,
               planesPerTable = planes).count()
           else EmbeddingLshIndex.incrementalNearDupPairs(spark, idx, vecs,
             threshold = 0.9, planesPerTable = planes).count())
         val tp1 = System.nanoTime()
-        if (!new java.io.File(idx).exists())
+        if (fresh)
           EmbeddingLshIndex.build(vecs, idx, planesPerTable = planes)
         else EmbeddingLshIndex.append(vecs, idx, planesPerTable = planes)
         val tp2 = System.nanoTime()
@@ -502,16 +502,10 @@ object StreamBench {
       // band-wing writes that must run OUTSIDE the foldOnce guard: a
       // crash between the versioned fold's commit and this hook replays
       // the batch with the fold skipped, and the hook must still run
-      // (re-appending band keys is recall-harmless per the wing
+      // (re-appending band keys is recall-harmless per IndexLog's retry
       // contract; skipping them loses the batch's keys forever)
-      // (session, batch, idx, batchId) — batchId so the hook can
-      // discriminate build-vs-append on bid == 0 rather than on
-      // directory existence: a crash mid-build leaves the dir present
-      // with only _temporary files, and an existence test would send
-      // the replay down the append branch of a never-committed table,
-      // silently losing batch-0's keys
-      after: (SparkSession, org.apache.spark.sql.DataFrame, String, Long) => Unit =
-        (_, _, _, _) => (),
+      after: (SparkSession, org.apache.spark.sql.DataFrame, String) => Unit =
+        (_, _, _) => (),
       // persist the microbatch across fold + after — ONLY for modes
       // with multiple harness-level consumers (family); single-consumer
       // folds (span) and folds that cache internally (bm25) would pay
@@ -578,7 +572,7 @@ object StreamBench {
             if (versionsOf(idx) == 0) build(cached, idx)
             else add(spark, cached, idx)
           }
-          after(spark, cached, idx, bid)
+          after(spark, cached, idx)
         } finally { if (cacheBatch) { cached.unpersist(); () } }
       }
       .start()

@@ -15,7 +15,8 @@ import graft.operators.Iterate.MaterializeOps
   * join, and history is never re-embedded or re-scanned from the
   * source corpus.
   *
-  * Layout is TWO flat-append tables under `path`:
+  * The index is TWO tables, each build, append, forget and compact one
+  * [[IndexLog]] entry ([[IndexMaintenance]]):
   *   - `bands/` — the signature rows `(id, table, sig)`, one per LSH
   *     table (the join side; 24 bytes/row × tables per vector);
   *   - `vecs/`  — the vectors `(id, v)` stored ONCE (the verification
@@ -27,13 +28,7 @@ import graft.operators.Iterate.MaterializeOps
   * external engine can rebuild them and the incremental result is
   * contractually EQUAL to the one-shot [[EmbeddingKnn.nearDupPairsLsh]]
   * on the accumulated corpus (same planes, same caps, same rounding).
-  *
-  * Crash semantics match the band-key wing: flat append, torn batches
-  * cost recall on the torn vectors only — a band row whose vector is
-  * missing produces a candidate the verification join drops; a vector
-  * whose band rows are missing is never a candidate. Either way
-  * precision is unharmed, so the retry discipline is "re-append on any
-  * doubt". Cross-batch bucket-occupancy divergence is observable via
+  * Cross-batch bucket-occupancy divergence is observable via
   * [[cappedBucketReport]].
   */
 object EmbeddingLshIndex {
@@ -167,13 +162,13 @@ object EmbeddingLshIndex {
       else planesPerTable,
       if (dim == Auto) LegacyGeometry.dim else dim,
       if (seed == AutoSeed) LegacyGeometry.seed else seed)
-    vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    BucketCaps.capBuckets(
+    IndexMaintenance.build(path) {
+      writeGeometry(g, path, batch.sparkSession)
+      Seq("vecs" -> vecs, "bands" -> BucketCaps.capBuckets(
         bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
           g.seed),
-        bucket, maxBucketSize)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    writeGeometry(g, path, batch.sparkSession)
+        bucket, maxBucketSize))
+    }
   }
 
   /** Append a new batch (call AFTER probing it). Geometry resolves
@@ -185,24 +180,19 @@ object EmbeddingLshIndex {
       seed: Long = AutoSeed, maxBucketSize: Long = 100000L): Unit = {
     val g = resolve(batch.sparkSession, path, tables, planesPerTable,
       dim, seed)
-    batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .write.mode("append").parquet(s"$path/vecs")
-    BucketCaps.capBuckets(
+    IndexMaintenance.append(path)(_ => Seq(
+      "vecs" -> batch.select(col(idCol).as("id"), col(vecCol).as("v")),
+      "bands" -> BucketCaps.capBuckets(
         bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
           g.seed),
-        bucket, maxBucketSize)
-      .write.mode("append").parquet(s"$path/bands")
+        bucket, maxBucketSize)))
   }
 
-  /** TOMBSTONE-forget indexed vectors: the ids (`ids`' first column,
-    * as a long) are appended to the `_dels/` sidecar that every probe
-    * anti-joins its history side against, and [[compact]] materializes
-    * — the wing's shared tombstone contract, crash semantics and
-    * re-ingest caveat included ([[IndexMaintenance.appendTombstones]]).
+  /** TOMBSTONE-forget indexed vectors (`ids`' first column, as a long)
+    * — the wing's shared tombstone contract ([[IndexMaintenance.forget]]).
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    IndexMaintenance.appendTombstones(path,
-      ids.select(col(ids.columns.head).cast("long")))
+    IndexMaintenance.forget(path, ids.select(col(ids.columns.head).cast("long")))
 
   /** Buckets whose cross-batch occupancy exceeds the cap — the
     * condition under which incremental results can diverge from a
@@ -211,7 +201,8 @@ object EmbeddingLshIndex {
     */
   def cappedBucketReport(spark: SparkSession, path: String,
       maxBucketSize: Long = 100000L): DataFrame =
-    BucketCaps.overflowBuckets(spark.read.parquet(s"$path/bands"),
+    BucketCaps.overflowBuckets(
+      IndexMaintenance.live(spark, IndexLog.read(path), "bands"),
       bucket, maxBucketSize)
 
   /** Pre-flight divergence report: buckets of `batch` that exceed the
@@ -241,34 +232,14 @@ object EmbeddingLshIndex {
       bucket, maxBucketSize)
   }
 
-  /** Compact a flat-append index into a SUCCESSOR directory: after
+  /** Compact both tables in place ([[IndexMaintenance.compact]]) after
     * many small appends (each streamed microbatch leaves
-    * shuffle-partition-count band files), rewrite both tables into
-    * `targetFiles` files each at `outPath`, contents identical —
-    * probes against the successor must hash-match probes against the
-    * original (pinned in the spec and by q222's oracle). Compaction
-    * deliberately writes a NEW directory instead of swapping in place:
-    * the band-wing crash contract ("re-append on any doubt") survives
-    * torn appends, but a torn in-place swap could lose a whole table.
-    * An immutable successor keeps recovery trivial — a crash mid-write
-    * leaves the original untouched; retry overwrites the successor;
-    * callers flip their index pointer only after this returns (the
-    * lakehouse snapshot philosophy applied to index maintenance).
+    * shuffle-partition-count band files): probes against the compacted
+    * index hash-match probes against the original (pinned in the spec
+    * and by q222's oracle).
     */
-  def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    // materialize tombstones during the rewrite: the successor's
-    // tables physically exclude forgotten ids and carry no _dels/
-    IndexMaintenance
-      .minusTombstones(spark, path, spark.read.parquet(s"$path/vecs"))
-      .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/vecs")
-    IndexMaintenance
-      .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
-      .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/bands")
-    // the successor answers probes with the SAME signatures, so it
-    // carries the same geometry record
-    geometry(spark, path).foreach(writeGeometry(_, outPath, spark))
-  }
+  def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit =
+    IndexMaintenance.compact(spark, path, targetFiles, "vecs", "bands")
 
   /** Admission-time semantic decontamination against a PERSISTED
     * reference index: the rows of `batch` whose vector has NO banded
@@ -292,11 +263,11 @@ object EmbeddingLshIndex {
     val g = resolve(spark, path, tables, planesPerTable, dim, seed)
     val (tablesR, planesPerTableR, dimR, seedR) =
       (g.tables, g.planesPerTable, g.dim, g.seed)
+    val log = IndexLog.read(path)
     val ref = broadcast(
-      IndexMaintenance
-        .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
+      IndexMaintenance.live(spark, log, "bands")
         .as("b")
-        .join(spark.read.parquet(s"$path/vecs").as("v"),
+        .join(IndexMaintenance.scan(spark, log, "vecs").as("v"),
           col("b.id") === col("v.id"))
         .select(col("b.table"), col("b.sig"), col("v.v").as("rv")))
     val contaminated = batch.select(col(idCol).as("cid"), col(vecCol).as("cv"),
@@ -340,8 +311,8 @@ object EmbeddingLshIndex {
     // tombstoned ids leave the candidate space here: pairs only ever
     // form through a band join, so filtering the history bands is
     // sufficient (a forgotten id's stale vecs row can never be probed)
-    val oldBands = IndexMaintenance
-      .minusTombstones(spark, path, spark.read.parquet(s"$path/bands"))
+    val log = IndexLog.read(path)
+    val oldBands = IndexMaintenance.live(spark, log, "bands")
     val newVsOld = broadcast(newBands.as("n"))
       .join(oldBands.as("o"),
         col("n.table") === col("o.table") && col("n.sig") === col("o.sig") &&
@@ -361,7 +332,7 @@ object EmbeddingLshIndex {
     val candIds = pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id"))).distinct()
     val lookup = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .union(spark.read.parquet(s"$path/vecs"))
+      .union(IndexMaintenance.scan(spark, log, "vecs"))
       .join(candIds, Seq("id"), "left_semi")
       .dropDuplicates("id")
     pairs

@@ -22,14 +22,15 @@ import graft.functions.UrlFunctions
   * no window, no all-pairs; at 100 TB the visited table is big but
   * the join stays linear and AQE-splittable.
   *
-  * Re-crawl admission is tombstone-shaped ([[IndexMaintenance]]'s
-  * `_dels` idiom, applied twice): [[forgetUrls]] appends exact URL
-  * tombstones, [[forgetHosts]] appends host tombstones (purge a whole
-  * site for refetch), and [[visited]] subtracts both. Same caveat as
-  * the wing tables: while a tombstone is live, a re-ADDED url stays
-  * hidden from [[visited]] — re-crawl flows should admit → fetch →
-  * [[compact]] (which materializes the subtracted set into a fresh
-  * chain, freeing the tombstones) before re-indexing the url.
+  * Re-crawl admission is tombstone-shaped ([[IndexMaintenance.forget]]'s
+  * idiom, applied twice): [[forgetUrls]] commits exact URL tombstones,
+  * [[forgetHosts]] host tombstones (purge a whole site for refetch),
+  * each an entry that keeps the version, and [[visited]] subtracts
+  * both. Same caveat as the wing tables: while a tombstone is live, a
+  * re-ADDED url stays hidden from [[visited]] — re-crawl flows should
+  * admit → fetch → [[compact]] (which materializes the subtracted set
+  * into a fresh index, freeing the tombstones) before re-indexing the
+  * url.
   *
   * URLs should arrive CANONICALIZED ([[graft.functions.UrlFunctions
   * .normalize]]) — the index stores byte-exact keys and does not
@@ -65,25 +66,23 @@ object FrontierIndex {
   def addBatch(spark: SparkSession, path: String, urls: DataFrame,
       urlCol: String): Int =
     commitUrls(path, seed = false)(log => urlsOf(urls, urlCol)
-      .join(visitedOf(spark, path, log), Seq("url"), "left_anti"))
+      .join(visitedOf(spark, log), Seq("url"), "left_anti"))
 
   /** The live visited set `(url)`: every committed version minus URL
     * and host tombstones.
     */
   def visited(spark: SparkSession, path: String): DataFrame =
-    visitedOf(spark, path, IndexLog.read(path))
+    visitedOf(spark, IndexLog.read(path))
 
-  private def visitedOf(spark: SparkSession, path: String,
-      log: IndexLog.Log): DataFrame = {
-    if (log.entries.isEmpty)
+  private def visitedOf(spark: SparkSession, log: IndexLog.Log): DataFrame = {
+    if (log.live("urls").isEmpty)
       return spark.emptyDataset(org.apache.spark.sql.Encoders.STRING).toDF("url")
-    val all = log.entries.map(e => spark.read.parquet(e.adds("urls")))
-      .reduce(_ unionByName _)
-    val minusUrls = IndexMaintenance.tombstones(spark, path)
+    val all = IndexMaintenance.scan(spark, log, "urls")
+    val minusUrls = IndexMaintenance.tombstones(spark, log)
       .map(d => all.join(broadcast(d.select(col("url"))), Seq("url"),
         "left_anti"))
       .getOrElse(all)
-    IndexMaintenance.tombstones(spark, path, "_host_dels")
+    IndexMaintenance.tombstones(spark, log, HostDels)
       .map(h => minusUrls.join(
         broadcast(h.select(col("host").as("__del_host"))),
         UrlFunctions.host(col("url")) === col("__del_host"), "left_anti"))
@@ -110,25 +109,25 @@ object FrontierIndex {
       .join(seen, candidates(urlCol) === col("__seen_url"), "left_anti")
   }
 
-  /** Tombstone exact URLs for re-crawl (idempotent append; duplicates
-    * absorbed by the anti-join).
+  private val HostDels = "_host_dels"
+
+  /** Tombstone exact URLs for re-crawl (duplicates absorbed by the
+    * anti-join).
     */
   def forgetUrls(urls: DataFrame, path: String, urlCol: String): Unit =
-    urls.select(col(urlCol).as("url")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/_dels")
+    IndexMaintenance.tombstone(path, IndexMaintenance.Dels,
+      urls.select(col(urlCol).as("url")))
 
   /** Tombstone whole hosts (every indexed URL of the host drops from
     * [[visited]] — the purge-a-site re-crawl).
     */
   def forgetHosts(hosts: DataFrame, path: String, hostCol: String): Unit =
-    hosts.select(col(hostCol).as("host")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/_host_dels")
+    IndexMaintenance.tombstone(path, HostDels, hosts.select(col(hostCol).as("host")))
 
-  /** Fold the whole chain (tombstones applied) into a one-version
-    * successor at `outPath` with `targetFiles` files — the small-files
-    * + dead-tombstone reclaim after streamed ingest. The predecessor
-    * is never touched; adopt the successor with
-    * [[IndexMaintenance.commitLivePointer]].
+  /** Fold the whole index (tombstones applied) into a one-version
+    * successor index at `outPath` with `targetFiles` files — the
+    * small-files + dead-tombstone reclaim after streamed ingest. The
+    * predecessor is never touched; callers switch to `outPath`.
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetFiles: Int): Unit =

@@ -8,10 +8,13 @@ import scala.annotation.tailrec
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The commit log of a versioned index — the one place that numbers
-  * versions, for [[DeltaChain]] (so [[LineDedupIndex]], [[CmsIndex]],
-  * [[SpanDedupIndex]], [[FamilyIndex]]), [[Bm25Index]], [[FrontierIndex]]
-  * and [[IndexMaintenance.commitLivePointer]].
+/** The commit log of every persisted index — the one place that numbers
+  * versions: [[DeltaChain]] (so [[LineDedupIndex]], [[CmsIndex]],
+  * [[SpanDedupIndex]], [[FamilyIndex]]), [[Bm25Index]], [[FrontierIndex]],
+  * and through [[IndexMaintenance]] the band-key indexes
+  * ([[MinHashIndex]], [[SimHashIndex]], [[WinnowIndex]],
+  * [[EmbeddingLshIndex]], [[graft.multimodal.PHashIndex]]) and every
+  * tombstone table, [[IvfIndex]]'s included.
   *
   * '''Commit.''' A writer lands its data in directories only it names
   * ([[Log.newDir]]: `<index>/<table>/<seq>-<random>`), then commits ONE
@@ -19,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * it produces, its kind, the directories it adds (by table) and those
   * it supersedes. An index is its committed entries, read with one
   * `_log` listing; a directory no entry names does not exist for
-  * readers.
+  * readers, and a table is its [[Log.live]] directories.
   *
   * '''Put-if-absent.''' The complete entry is written to a temp file
   * and hard-linked to its name (`Files.createLink` fails atomically if
@@ -33,13 +36,25 @@ import org.apache.spark.sql.SparkSession
   * proposes its entry at the next sequence number. The loser of a race
   * deletes its directories and runs again against the new head, so all
   * it derived from the head — the version, Bm25's df/stats merge,
-  * FamilyIndex's assignment, a compaction's capture — is recomputed.
+  * FamilyIndex's assignment, WinnowIndex's indexed ids, a compaction's
+  * snapshot — is recomputed.
   *
   * '''Crash.''' A writer that dies before its entry lands leaves only
   * unnamed directories and perhaps a `.tmp` entry, invisible to
-  * readers; the retry writes fresh ones. An attempt whose job throws
-  * deletes its directories first. A torn compaction or pointer flip
-  * thus supersedes nothing.
+  * readers; an attempt whose job throws deletes its directories first.
+  * A torn build, append, forget or compaction is thus not there at
+  * all, and the one rule for a writer that cannot tell whether its
+  * commit landed is to run it again. A repeat that lands twice is
+  * absorbed where it can occur: duplicate band keys only add
+  * candidate-join work, duplicate tombstones fold into the anti-join,
+  * WinnowIndex skips indexed ids, a second compaction rewrites the same
+  * rows, and the versioned folds run under [[IndexMaintenance.foldOnce]].
+  *
+  * '''Compaction.''' A compaction reads one snapshot and commits an
+  * entry that adds the rewritten tables and supersedes every live
+  * directory it read, tombstones included; anything committed after
+  * its snapshot stays live. It keeps the index's version, as a
+  * tombstone entry does: only builds, appends and folds advance it.
   *
   * '''Vacuum.''' [[vacuum]] deletes what committed entries supersede
   * and `.tmp` entries (a commit that loses its temp file reruns), and
@@ -69,6 +84,11 @@ object IndexLog {
     /** The newest entry producing `version`. */
     def at(version: Int): Option[Entry] =
       entries.filter(_.version == version).lastOption
+    /** The directories of `table` an entry adds and none supersedes. */
+    def live(table: String): Seq[String] = {
+      val dead = entries.flatMap(_.supersedes).toSet
+      entries.flatMap(_.adds.get(table)).filterNot(dead)
+    }
     private[IndexLog] def nextSeq: Long = head + 1
     private lazy val token = java.util.UUID.randomUUID.toString.take(8)
     private[IndexLog] val named = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -3,60 +3,116 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared maintenance for the band-key index wing (minhash, simhash,
-  * winnow, perceptual, embedding): flat-append indexes accumulate a
-  * shuffle-partition-count of small parquet files per batch — a
-  * streamed ingest leaves thousands after a day — and compaction
-  * rewrites a table into a few files WITHOUT touching contents, so
-  * probes through the compacted form are bit-identical (each index's
-  * spec pins this; q222 pins it through the oracle for the embedding
-  * member). Compaction always writes a NEW successor path rather than
-  * swapping in place: the wing's crash contract ("re-append on any
-  * doubt" — torn appends only cost recall on the torn rows) does NOT
-  * extend to a torn in-place swap, which could lose a whole table.
-  * An immutable successor keeps recovery trivial (retry overwrites
-  * it; the original is never written), and callers flip their index
-  * pointer ([[commitLivePointer]]) only after the rewrite returns.
+/** The band-key index wing on the commit log ([[IndexLog]]):
+  * [[MinHashIndex]], [[SimHashIndex]], [[WinnowIndex]] and
+  * [[graft.multimodal.PHashIndex]] keep one table each,
+  * [[EmbeddingLshIndex]] two, and any persisted index may keep a
+  * tombstone table ([[forget]]). A build is the log's first entry and
+  * each append the next version; a forget or a compaction commits an
+  * entry that keeps the version. A reader takes one log snapshot and
+  * scans each table's live directories as one read ([[scan]]), minus
+  * the same snapshot's tombstones ([[live]]).
+  *
+  * Streamed appends leave a shuffle-partition-count of small files per
+  * batch; [[compact]] rewrites the tables in place into a few files
+  * WITHOUT touching contents beyond the tombstones it applies, so
+  * probes through the compacted form are identical (each index's spec
+  * pins this; q222 pins it through the oracle for the embedding
+  * member).
   */
 object IndexMaintenance {
 
-  /** Rewrite one flat parquet table into `targetFiles` files at
-    * `outPath`, contents identical — except that tombstones (see
-    * [[appendTombstones]]) are MATERIALIZED: forgotten ids are
-    * physically filtered out of the rewrite and the successor carries
-    * no `_dels` sidecar (underscore-prefixed dirs are invisible to the
-    * table read, so nothing copies it).
+  /** The tombstone table. Underscore-prefixed, so a partition discovery
+    * over the index root ([[IvfIndex]]'s cells) never sees it.
     */
-  def compactTable(spark: SparkSession, inPath: String, outPath: String,
-      targetFiles: Int): Unit = {
-    require(targetFiles >= 1)
-    minusTombstones(spark, inPath, spark.read.parquet(inPath))
-      .coalesce(targetFiles)
-      .write.mode("overwrite").parquet(outPath)
+  val Dels = "_dels"
+
+  /** Write each of `tables` into a fresh directory of `log`'s attempt
+    * and propose them as one entry.
+    */
+  private def write(log: IndexLog.Log, version: Int, kind: String,
+      tables: Seq[(String, DataFrame)], supersedes: Seq[String] = Nil): IndexLog.Entry =
+    log.propose(version, kind, tables.map { case (t, df) =>
+      val dir = log.newDir(t)
+      df.write.parquet(dir)
+      t -> dir
+    }.toMap, supersedes)
+
+  /** Commit `tables` as the first entry (version 1) of the index at
+    * `path`. They are evaluated once the log is known to be empty, so a
+    * build writes its sidecars there, before its entry commits.
+    */
+  def build(path: String)(tables: => Seq[(String, DataFrame)]): Unit =
+    IndexLog.commit(path) { log =>
+      require(log.entries.isEmpty, s"an index already exists at $path")
+      write(log, 1, "build", tables)
+    }
+
+  /** Commit the tables `batch` derives from a log snapshot as the next
+    * version.
+    */
+  def append(path: String)(batch: IndexLog.Log => Seq[(String, DataFrame)]): Unit =
+    IndexLog.commit(path) { log =>
+      require(log.latestVersion.nonEmpty, s"no index at $path")
+      write(log, log.nextVersion, "append", batch(log))
+    }
+
+  /** TOMBSTONE-forget ids: the takedown path of the band-key wing and
+    * [[IvfIndex]], mirroring [[Bm25Index.deleteDocs]] in the versioned
+    * exact tier. The tables are append-only and at 100 TB a physical
+    * delete would rewrite them, so forgetting commits the ids (`ids`'
+    * first column, type preserved — every wing table keys on `id`) as
+    * a tombstone entry; every probe anti-joins its history side against
+    * them ([[live]], broadcast — the tombstone set is small by
+    * construction) and [[compact]] materializes them. A forgotten id
+    * must not be re-ingested while its tombstone is live (the anti-join
+    * would hide the new rows); after a compact the id is free again.
+    */
+  def forget(path: String, ids: DataFrame): Unit =
+    tombstone(path, Dels, ids.select(col(ids.columns.head).as("id")))
+
+  /** Commit `rows` into the tombstone table `table`, keeping the version. */
+  private[llm] def tombstone(path: String, table: String, rows: DataFrame): Unit =
+    IndexLog.commit(path)(log => write(log, log.latestVersion.getOrElse(0), "forget",
+      Seq(table -> rows.distinct().coalesce(1))))
+
+  /** `table`'s live directories in the snapshot `log`, as one scan. */
+  def scan(spark: SparkSession, log: IndexLog.Log, table: String): DataFrame = {
+    val dirs = log.live(table)
+    require(dirs.nonEmpty, s"no $table table in the index at ${log.root}")
+    spark.read.parquet(dirs: _*)
   }
 
-  /** TOMBSTONE-forget ids from a flat-append index table — the
-    * takedown path for the band-key wing, mirroring
-    * [[Bm25Index.deleteDocs]] in the versioned exact tier. The table
-    * is append-only and at 100 TB a physical delete would rewrite it,
-    * so forgetting APPENDS the ids to a `_dels` sidecar INSIDE the
-    * table directory (the underscore prefix makes it invisible to the
-    * table's own parquet reads — the same convention as SimHashIndex's
-    * `_params`), and every probe anti-joins its history side against
-    * it via [[minusTombstones]] (broadcast — the tombstone set is
-    * small by construction). [[compactTable]] materializes tombstones.
-    *
-    * Crash semantics extend the wing's "re-append on any doubt": a
-    * torn `_dels` append is a partially applied delete; retry
-    * re-appends, and duplicate tombstone rows are absorbed by the
-    * anti-join. A forgotten id must not be re-ingested while its
-    * tombstone is live (the anti-join would hide the new rows); after
-    * a compact the id is free again. `ids`' first column is taken as
-    * the id, type preserved (all wing tables key on a long `id`).
+  /** The tombstone table `table` of the snapshot `log`, or None when
+    * nothing was forgotten.
     */
-  def appendTombstones(tablePath: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$tablePath/_dels")
+  def tombstones(spark: SparkSession, log: IndexLog.Log,
+      table: String = Dels): Option[DataFrame] =
+    Some(log.live(table)).filter(_.nonEmpty).map(spark.read.parquet(_: _*))
+
+  /** [[scan]] of `table` minus the snapshot's tombstoned ids. */
+  def live(spark: SparkSession, log: IndexLog.Log, table: String): DataFrame = {
+    val t = scan(spark, log, table)
+    tombstones(spark, log).fold(t)(dd => t.join(broadcast(dd), Seq("id"), "left_anti"))
+  }
+
+  /** Rewrite `tables` of the index at `path` in place into
+    * `targetFiles` files each, tombstones applied: the entry adds the
+    * rewrites and supersedes every live directory it read, the
+    * tombstones' included. Appends and forgets committed after its
+    * snapshot stay live.
+    */
+  def compact(spark: SparkSession, path: String, targetFiles: Int,
+      tables: String*): Unit = {
+    require(targetFiles >= 1)
+    IndexLog.commit(path) { log =>
+      val v = log.latestVersion.getOrElse(
+        throw new IllegalStateException(s"no index at $path"))
+      write(log, v, "compact",
+        tables.map(t => t -> live(spark, log, t).coalesce(targetFiles)),
+        (tables :+ Dels).flatMap(log.live))
+    }
+  }
 
   /** Exactly-once guard for checkpointed foreachBatch folds into the
     * VERSIONED exact-index tier (Bm25Index, LineDedupIndex, CmsIndex,
@@ -69,9 +125,7 @@ object IndexMaintenance {
     * exploits that every fold bumps the version by exactly one, so with
     * a fresh checkpoint the invariant is `version == batchId + 1` after
     * folding batch `batchId`: a replayed batch finds
-    * `latest >= batchId + 1` already committed and skips. (The band-key wing doesn't need this —
-    * re-appending band keys only adds candidate-join work, its
-    * documented "re-append on any doubt" contract.)
+    * `latest >= batchId + 1` already committed and skips.
     *
     * The invariant requires the CHECKPOINT and the INDEX to share a
     * lifetime. A FRESH checkpoint over a PRE-EXISTING index restarts
@@ -84,47 +138,4 @@ object IndexMaintenance {
   def foldOnce(batchId: Long, latestVersion: Option[Int],
       base: Int = 0)(fold: => Unit): Unit =
     if (!latestVersion.exists(_ >= base + batchId + 1)) fold
-
-  /** COMMIT the live-directory pointer for the logical index rooted at
-    * `root`: successor-directory compaction ([[compactTable]] and the
-    * per-index `compact`s) deliberately never touches the original, so
-    * some on-disk arbiter must say which directory is live — without
-    * one, a crash between compact-return and the caller's pointer flip
-    * leaves two plausible live dirs and nothing to break the tie. The
-    * pointer is an [[IndexLog]] under `root/_live` (underscore ⇒
-    * invisible to any parquet read of `root`) whose entries carry the
-    * live directory: a torn flip commits no entry and the PREDECESSOR
-    * stays authoritative. Returns the committed pointer version.
-    */
-  def commitLivePointer(spark: SparkSession, root: String,
-      dir: String): Int =
-    IndexLog.commit(s"$root/_live")(log =>
-      log.propose(log.nextVersion, "live", Map("live" -> dir))).version
-
-  /** Probe-side resolution: the committed pointer when one exists,
-    * else `default` (the original pre-compaction directory).
-    */
-  def resolveLive(spark: SparkSession, root: String,
-      default: String): String =
-    IndexLog.read(s"$root/_live").entries.lastOption
-      .fold(default)(_.adds("live"))
-
-  /** A tombstone sidecar (`_dels` unless named) of a table, or None
-    * when nothing was ever forgotten.
-    */
-  def tombstones(spark: SparkSession, tablePath: String,
-      sidecar: String = "_dels"): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/$sidecar")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
-    else Some(spark.read.parquet(p.toString))
-  }
-
-  /** `t` (rows of the table at `tablePath`, or any frame carrying its
-    * `id` column) minus tombstoned ids; no-op without a `_dels` sidecar.
-    */
-  def minusTombstones(spark: SparkSession, tablePath: String,
-      t: DataFrame): DataFrame =
-    tombstones(spark, tablePath)
-      .map(dd => t.join(broadcast(dd), Seq("id"), "left_anti"))
-      .getOrElse(t)
 }

@@ -109,7 +109,7 @@ object IvfIndex {
     val index0 = spark.read.parquet(path)
     // tombstoned vectors leave the candidate space (see [[forget]]);
     // the sidecar keys on "id", the index on the caller's idCol
-    val index = IndexMaintenance.tombstones(spark, path)
+    val index = IndexMaintenance.tombstones(spark, IndexLog.read(path))
       .map(dd => index0.join(
         broadcast(dd.withColumnRenamed("id", idCol)), Seq(idCol), "left_anti"))
       .getOrElse(index0)
@@ -125,15 +125,15 @@ object IvfIndex {
   }
 
   /** Tombstone-forget indexed vectors — the takedown path, completing
-    * the wing-wide contract ([[IndexMaintenance.appendTombstones]]):
-    * the cell layout is append-only, so forgetting appends ids to the
-    * `_dels` sidecar (invisible to partition discovery, like `_model`)
-    * and [[search]] anti-joins candidates against it. [[compact]]
-    * materializes. No re-ingest of a forgotten id while its tombstone
-    * is live.
+    * the wing-wide contract ([[IndexMaintenance.forget]]): the cell
+    * layout is append-only, so forgetting commits ids to the index's
+    * log (its `_dels` table is invisible to partition discovery, like
+    * `_model`) and [[search]] anti-joins candidates against them.
+    * [[compact]] materializes. No re-ingest of a forgotten id while its
+    * tombstone is live.
     */
   def forget(path: String, ids: DataFrame): Unit =
-    IndexMaintenance.appendTombstones(path, ids)
+    IndexMaintenance.forget(path, ids)
 
   /** Rewrite the cell layout into a SUCCESSOR directory (the `_model`
     * sidecar rides along), materializing any tombstones — fewer files
@@ -142,7 +142,7 @@ object IvfIndex {
   def compact(spark: SparkSession, path: String, outPath: String,
       idCol: String = "vec_id"): Unit = {
     val t = spark.read.parquet(path)
-    val live = IndexMaintenance.tombstones(spark, path)
+    val live = IndexMaintenance.tombstones(spark, IndexLog.read(path))
       .map(dd => t.join(
         broadcast(dd.withColumnRenamed("id", idCol)), Seq(idCol), "left_anti"))
       .getOrElse(t)

@@ -24,20 +24,12 @@ import graft.operators.Iterate.MaterializeOps
   * Capping is a silent recall trade: [[cappedBucketReport]] makes it
   * observable — run it when parity with a full-corpus pass matters.
   *
-  * Crash semantics of the flat `append` layout: a writer dying before
-  * job commit leaves its files under `_temporary` (invisible to
-  * reads); dying DURING commit can leave a torn batch — a subset of
-  * the batch's band keys visible. Re-appending the same batch after
-  * either crash is SAFE for correctness: duplicate band keys only add
-  * candidate-join work, and the `distinct()` before verification
-  * collapses them — so the retry discipline is "re-append on any
-  * doubt". A torn batch left WITHOUT retry costs recall on the torn
-  * docs only (their keys are partial), never precision. The exact
-  * indexes ([[LineDedupIndex]]/[[CmsIndex]]/[[Bm25Index]]), where a
-  * torn write would corrupt counts rather than recall, commit each
-  * version through a log instead ([[IndexLog]]).
+  * The table is `bands`; build, append, forget and compact each commit
+  * one [[IndexLog]] entry ([[IndexMaintenance]]).
   */
 object MinHashIndex {
+
+  private val Table = "bands"
 
   /** Buckets whose CROSS-BATCH occupancy in the persisted index exceeds
     * `maxBucketSize` — exactly the condition under which incremental
@@ -52,11 +44,11 @@ object MinHashIndex {
       path: String,
       maxBucketSize: Long = 100000L): DataFrame =
     graft.operators.BucketCaps.overflowBuckets(
-      spark.read.parquet(path), Seq(col("band"), col("bkey")), maxBucketSize)
+      IndexMaintenance.live(spark, IndexLog.read(path), Table),
+      Seq(col("band"), col("bkey")), maxBucketSize)
 
   /** The banding geometry an index was BUILT with, persisted as a
-    * `_geom/` sidecar inside the index directory (underscore-prefixed
-    * ⇒ invisible to the band-key parquet reads, the
+    * `_geom/` sidecar inside the index directory (the
     * [[EmbeddingLshIndex]] pattern). Probes and appends derive their
     * geometry FROM the sidecar: band keys joined across mismatched
     * (numHashes, bands) silently produce ~zero candidates — a recall
@@ -135,7 +127,7 @@ object MinHashIndex {
           "any other geometry would match ~nothing")
   }
 
-  /** Write the band-key index for an initial corpus (overwrites),
+  /** Commit the band-key index for an initial corpus (an empty log),
     * `bands = 0` self-calibrating for `calibrateThreshold` via
     * [[MinHashDedup.bandsFor]]. The geometry is persisted in the
     * `_geom/` sidecar; every later append/probe follows it.
@@ -152,11 +144,12 @@ object MinHashIndex {
       calibrateThreshold: Double = 0.5): Unit = {
     val b = if (bands == 0) MinHashDedup.bandsFor(calibrateThreshold, numHashes)
       else bands
-    graft.operators.BucketCaps.capBuckets(
+    IndexMaintenance.build(path) {
+      writeGeometry(docs.sparkSession, path, Geometry(numHashes, b, shingleWords))
+      Seq(Table -> graft.operators.BucketCaps.capBuckets(
         MinHashDedup.bandKeys(docs, idCol, textCol, numHashes, b, shingleWords),
-        Seq(col("band"), col("bkey")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
-    writeGeometry(docs.sparkSession, path, Geometry(numHashes, b, shingleWords))
+        Seq(col("band"), col("bkey")), maxBucketSize))
+    }
   }
 
   /** Append a new batch's band keys to the index (call AFTER the batch
@@ -177,33 +170,23 @@ object MinHashIndex {
     side.foreach(warnIfArgsConflict("append", _, numHashes, bands,
       shingleWords, (DefaultNumHashes, DefaultBands, DefaultShingleWords)))
     val g = side.getOrElse(Geometry(numHashes, bands, shingleWords))
-    graft.operators.BucketCaps.capBuckets(
+    IndexMaintenance.append(path)(_ => Seq(Table ->
+      graft.operators.BucketCaps.capBuckets(
         MinHashDedup.bandKeys(docs, idCol, textCol,
           g.numHashes, g.bands, g.shingleWords),
-        Seq(col("band"), col("bkey")), maxBucketSize)
-      .write.mode("append").parquet(path)
+        Seq(col("band"), col("bkey")), maxBucketSize)))
   }
 
-  /** Compact the band-key table into a SUCCESSOR directory — see
-    * [[IndexMaintenance]] for why never in place. Probes through the
-    * successor are bit-identical (pinned in MinHashIndexSpec); any
-    * tombstones ([[forget]]) are materialized by the rewrite.
+  /** Compact the band-key table in place ([[IndexMaintenance.compact]]);
+    * probes through it are bit-identical (pinned in MinHashIndexSpec)
+    * and any tombstones ([[forget]]) are materialized by the rewrite.
     */
-  def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
-    // geometry travels with the index: the successor must probe with
-    // the same banding or candidates silently vanish
-    geometry(spark, path).foreach(writeGeometry(spark, outPath, _))
-  }
+  def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit =
+    IndexMaintenance.compact(spark, path, targetFiles, Table)
 
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[IndexMaintenance.appendTombstones]] for the full contract
-    * (probes anti-join history against `_dels`; compact materializes;
-    * no re-ingest while the tombstone is live).
-    */
+  /** Tombstone-forget indexed docs ([[IndexMaintenance.forget]]). */
   def forget(path: String, ids: DataFrame): Unit =
-    IndexMaintenance.appendTombstones(path, ids)
+    IndexMaintenance.forget(path, ids)
 
   /** Near-dup pairs INVOLVING the new batch: new-vs-indexed plus
     * new-vs-new, LSH candidates jaccard-verified at `threshold`
@@ -238,8 +221,7 @@ object MinHashIndex {
           g.numHashes, g.bands, g.shingleWords),
         Seq(col("band"), col("bkey")), maxBucketSize)
       .materialized
-    val oldKeys = IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
+    val oldKeys = IndexMaintenance.live(spark, IndexLog.read(path), Table)
     // broadcast the BATCH side: the persisted index is the corpus-sized
     // table and must stream map-side past the probe, never shuffle —
     // without the hint Spark has no size estimate for the computed

@@ -25,8 +25,13 @@ import graft.operators.Iterate.MaterializeOps
   * (pinned in SimHashIndexSpec). Hot-bucket caps apply per written
   * batch, same caveat as [[MinHashIndex]]: [[cappedBucketReport]]
   * surfaces when cross-batch occupancy breaks that equivalence.
+  *
+  * The table is `bands`; build, append, forget and compact each commit
+  * one [[IndexLog]] entry ([[IndexMaintenance]]).
   */
 object SimHashIndex {
+
+  private val Table = "bands"
 
   /** The banding parameters an index was BUILT with, from its `_params`
     * sidecar (underscore-prefixed, like [[IvfIndex]]'s `_model`:
@@ -56,8 +61,8 @@ object SimHashIndex {
           "generate band keys that never match the stored ones")
     }
 
-  /** Write the banding index for an initial corpus (overwrites), plus
-    * the `_params` sidecar recording (radius, blocks).
+  /** Commit the banding index for an initial corpus (an empty log),
+    * after the `_params` sidecar recording (radius, blocks).
     */
   def build(
       docs: DataFrame,
@@ -67,23 +72,19 @@ object SimHashIndex {
       radius: Int = 3,
       blocks: Int = 6,
       maxBucketSize: Long = 100000L): Unit = {
-    graft.operators.BucketCaps.capBuckets(
-        SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
-        Seq(col("combo"), col("bkey")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
     val spark = docs.sparkSession
     import spark.implicits._
-    Seq((radius, blocks)).toDF("radius", "blocks")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    IndexMaintenance.build(path) {
+      Seq((radius, blocks)).toDF("radius", "blocks")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+      Seq(Table -> graft.operators.BucketCaps.capBuckets(
+        SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
+        Seq(col("combo"), col("bkey")), maxBucketSize))
+    }
   }
 
   /** Append a new batch's band keys (call AFTER deduping the batch
     * against the index). Parameters are validated against the sidecar.
-    *
-    * Crash semantics are [[MinHashIndex]]'s (see its scaladoc): band
-    * keys are presence-only, so re-appending a batch after a torn or
-    * uncertain write is SAFE — duplicates only add candidate-join work
-    * and the downstream distinct/verify collapses them.
     */
   def append(
       docs: DataFrame,
@@ -94,23 +95,17 @@ object SimHashIndex {
       blocks: Int = 6,
       maxBucketSize: Long = 100000L): Unit = {
     requireParamsMatch(docs.sparkSession, path, radius, blocks)
-    graft.operators.BucketCaps.capBuckets(
+    IndexMaintenance.append(path)(_ => Seq(Table ->
+      graft.operators.BucketCaps.capBuckets(
         SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
-        Seq(col("combo"), col("bkey")), maxBucketSize)
-      .write.mode("append").parquet(path)
+        Seq(col("combo"), col("bkey")), maxBucketSize)))
   }
 
-  /** Compact the band-key table into a SUCCESSOR directory (the
-    * `_params` sidecar rides along) — see [[IndexMaintenance]] for why
-    * never in place. Probes through the successor are bit-identical
-    * (pinned in SimHashIndexSpec).
+  /** Compact the band-key table in place ([[IndexMaintenance.compact]]);
+    * probes through it are bit-identical (pinned in SimHashIndexSpec).
     */
-  def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
-    spark.read.parquet(s"$path/_params").coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/_params")
-  }
+  def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit =
+    IndexMaintenance.compact(spark, path, targetFiles, Table)
 
   /** Candidate pairs INVOLVING the new batch, with exact Hamming
     * distances: new-vs-indexed plus new-vs-new. Returns
@@ -134,8 +129,7 @@ object SimHashIndex {
         SimHashDedup.bandKeys(newDocs, idCol, textCol, radius, blocks),
         Seq(col("combo"), col("bkey")), maxBucketSize)
       .materialized
-    val oldKeys = IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
+    val oldKeys = IndexMaintenance.live(spark, IndexLog.read(path), Table)
     val newVsOld = broadcast(newKeys.as("n"))
       .join(oldKeys.as("o"),
         col("n.combo") === col("o.combo") && col("n.bkey") === col("o.bkey") &&
@@ -215,12 +209,10 @@ object SimHashIndex {
       path: String,
       maxBucketSize: Long = 100000L): DataFrame =
     graft.operators.BucketCaps.overflowBuckets(
-      spark.read.parquet(path), Seq(col("combo"), col("bkey")), maxBucketSize)
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full
-    * contract (probes anti-join history against `_dels`; compact
-    * materializes; no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    graft.llm.IndexMaintenance.appendTombstones(path, ids)
+      IndexMaintenance.live(spark, IndexLog.read(path), Table),
+      Seq(col("combo"), col("bkey")), maxBucketSize)
+
+  /** Tombstone-forget indexed docs ([[IndexMaintenance.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit =
+    IndexMaintenance.forget(path, ids)
 }

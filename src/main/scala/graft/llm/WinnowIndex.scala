@@ -25,50 +25,44 @@ import graft.functions.TextFunctions
   * batch, the same cost class as the posting join itself (each scans
   * the index once); at persisted-corpus scale, compact the df counts
   * into a sidecar table and merge per batch instead.
+  *
+  * The table is `postings`; build, append, forget and compact each
+  * commit one [[IndexLog]] entry ([[IndexMaintenance]]).
   */
 object WinnowIndex {
+
+  private val Table = "postings"
 
   private def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
       explode(TextFunctions.winnowedFingerprints(col(textCol))).as("f"))
 
-  /** Write the fingerprint postings for an initial corpus (overwrites). */
+  /** Commit the fingerprint postings for an initial corpus (an empty log). */
   def build(docs: DataFrame, path: String, idCol: String, textCol: String): Unit =
-    postings(docs, idCol, textCol).write.mode("overwrite").parquet(path)
+    IndexMaintenance.build(path)(Seq(Table -> postings(docs, idCol, textCol)))
 
   /** Append a new batch's postings (call AFTER deduping the batch
     * against the index).
     *
     * Idempotent at DOC granularity: postings of batch docs whose id is
-    * already indexed are dropped (same anti-join as
-    * [[incrementalPairs]]' re-delivery guard), because unlike the
-    * band-key indexes these postings feed COUNTS (df, shared_fps) —
-    * re-appending a delivered doc would inflate both and silently
-    * shift the maxDf/minShared thresholds. Crash contract: a torn
-    * append leaves a doc with partial postings AND its id present, so
-    * the retry skips it — recall loss on the torn docs only, never
-    * precision; rebuild from the corpus if that matters.
+    * already indexed (in the snapshot the append commits on) are
+    * dropped (same anti-join as [[incrementalPairs]]' re-delivery
+    * guard), because unlike the band-key indexes these postings feed
+    * COUNTS (df, shared_fps) — re-appending a delivered doc would
+    * inflate both and silently shift the maxDf/minShared thresholds.
     */
   def append(docs: DataFrame, path: String, idCol: String, textCol: String): Unit = {
     val spark = docs.sparkSession
-    val existing =
-      try spark.read.parquet(path).select("id").distinct()
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        return postings(docs, idCol, textCol)
-          .write.mode("append").parquet(path)
-      }
-    postings(docs, idCol, textCol)
-      .join(existing, Seq("id"), "left_anti")
-      .write.mode("append").parquet(path)
+    IndexMaintenance.append(path)(log => Seq(Table -> postings(docs, idCol, textCol)
+      .join(IndexMaintenance.scan(spark, log, Table).select("id").distinct(),
+        Seq("id"), "left_anti")))
   }
 
-  /** Compact the postings table into a SUCCESSOR directory — see
-    * [[IndexMaintenance]] for why never in place. Probes through the
-    * successor are bit-identical (pinned in WinnowIndexSpec).
+  /** Compact the postings table in place ([[IndexMaintenance.compact]]);
+    * probes through it are bit-identical (pinned in WinnowIndexSpec).
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      outPath: String, targetFiles: Int = 8): Unit =
-    IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
+  def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit =
+    IndexMaintenance.compact(spark, path, targetFiles, Table)
 
   /** Fingerprint-sharing pairs INVOLVING the new batch: new-vs-indexed
     * plus new-vs-new, with the df cutoff evaluated over index ∪ batch.
@@ -85,8 +79,7 @@ object WinnowIndex {
     // tombstoned docs leave BOTH the candidate space and the df count
     // here — a from-scratch run over the surviving corpus would never
     // see their postings, and df feeds the maxDf threshold
-    val oldPosts = IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
+    val oldPosts = IndexMaintenance.live(spark, IndexLog.read(path), Table)
     // Re-delivered docs (id already indexed) are dropped, making re-
     // delivery idempotent rather than a silent recall hole: their
     // postings are already in oldPosts, so counting them again from the
@@ -116,11 +109,8 @@ object WinnowIndex {
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
   }
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full
-    * contract (probes anti-join history against `_dels`; compact
-    * materializes; no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    graft.llm.IndexMaintenance.appendTombstones(path, ids)
+
+  /** Tombstone-forget indexed docs ([[IndexMaintenance.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit =
+    IndexMaintenance.forget(path, ids)
 }

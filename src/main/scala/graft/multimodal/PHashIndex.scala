@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.llm.{IndexLog, IndexMaintenance}
 import graft.operators.BucketCaps
 import graft.operators.Iterate.MaterializeOps
 
@@ -22,13 +23,14 @@ import graft.operators.Iterate.MaterializeOps
   * hashing deployable at 100 TB — the media bytes are read once, at
   * ingest.
   *
-  * Crash semantics match the band-key wing: flat append, torn batches
-  * cost recall on the torn docs only (never precision — `distinct()`
-  * collapses duplicate keys), so the retry discipline is "re-append on
-  * any doubt". Caps are per-written-batch plus per-probe; cross-batch
-  * occupancy divergence is observable via [[cappedBucketReport]].
+  * The table is `bands`; build, append, forget and compact each commit
+  * one [[graft.llm.IndexLog]] entry ([[graft.llm.IndexMaintenance]]).
+  * Caps are per-written-batch plus per-probe; cross-batch occupancy
+  * divergence is observable via [[cappedBucketReport]].
   */
 object PHashIndex {
+
+  private val Table = "bands"
 
   private def explodeBands(hashes: DataFrame, idCol: String): DataFrame =
     hashes.select(col(idCol).as("id"), col("h1"), col("h2"),
@@ -43,27 +45,26 @@ object PHashIndex {
       .select(col("id"), col("h1"), col("h2"),
         col("bx.band").as("band"), col("bx.key").as("key"))
 
-  /** Write the band index for an initial hash table `(id, h1, h2)`. */
+  private def bandTable(hashes: DataFrame, idCol: String,
+      maxBucketSize: Long): Seq[(String, DataFrame)] =
+    Seq(Table -> BucketCaps.capBuckets(explodeBands(hashes, idCol),
+      Seq(col("band"), col("key")), maxBucketSize))
+
+  /** Commit the band index for an initial hash table `(id, h1, h2)`. */
   def build(hashes: DataFrame, path: String, idCol: String = "id",
       maxBucketSize: Long = 10000L): Unit =
-    BucketCaps.capBuckets(explodeBands(hashes, idCol),
-        Seq(col("band"), col("key")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
+    IndexMaintenance.build(path)(bandTable(hashes, idCol, maxBucketSize))
 
   /** Append a new batch's band rows (call AFTER probing the batch). */
   def append(hashes: DataFrame, path: String, idCol: String = "id",
       maxBucketSize: Long = 10000L): Unit =
-    BucketCaps.capBuckets(explodeBands(hashes, idCol),
-        Seq(col("band"), col("key")), maxBucketSize)
-      .write.mode("append").parquet(path)
+    IndexMaintenance.append(path)(_ => bandTable(hashes, idCol, maxBucketSize))
 
-  /** Compact the band table into a SUCCESSOR directory — see
-    * [[graft.llm.IndexMaintenance]] for why never in place. Probes
-    * through the successor are bit-identical (pinned in PHashIndexSpec).
+  /** Compact the band table in place ([[IndexMaintenance.compact]]);
+    * probes through it are bit-identical (pinned in PHashIndexSpec).
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      outPath: String, targetFiles: Int = 8): Unit =
-    graft.llm.IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
+  def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit =
+    IndexMaintenance.compact(spark, path, targetFiles, Table)
 
   /** Buckets whose cross-batch occupancy exceeds the cap — the
     * condition under which incremental results can diverge from a
@@ -71,7 +72,7 @@ object PHashIndex {
     */
   def cappedBucketReport(spark: SparkSession, path: String,
       maxBucketSize: Long = 10000L): DataFrame =
-    BucketCaps.overflowBuckets(spark.read.parquet(path),
+    BucketCaps.overflowBuckets(IndexMaintenance.live(spark, IndexLog.read(path), Table),
       Seq(col("band"), col("key")), maxBucketSize)
 
   /** Near-dup pairs of a NEW hash batch against indexed history AND
@@ -90,8 +91,7 @@ object PHashIndex {
     val newKeys = BucketCaps.capBuckets(explodeBands(newHashes, idCol),
         Seq(col("band"), col("key")), maxBucketSize)
       .materialized
-    val oldKeys = graft.llm.IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
+    val oldKeys = IndexMaintenance.live(spark, IndexLog.read(path), Table)
     val newVsOld = broadcast(newKeys.as("n"))
       .join(oldKeys.as("o"),
         col("n.band") === col("o.band") && col("n.key") === col("o.key") &&
@@ -121,11 +121,8 @@ object PHashIndex {
       .filter(col("hamming") <= radius)
       .select("id_a", "id_b", "hamming")
   }
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full
-    * contract (probes anti-join history against `_dels`; compact
-    * materializes; no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    graft.llm.IndexMaintenance.appendTombstones(path, ids)
+
+  /** Tombstone-forget indexed docs ([[IndexMaintenance.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit =
+    IndexMaintenance.forget(path, ids)
 }

@@ -1838,7 +1838,7 @@ object LlmQueries {
           .option("checkpointLocation", s"$root/ck")
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
             val idx = s"$root/idx"
-            if (!new java.io.File(idx).exists()) {
+            if (graft.llm.IndexLog.read(idx).latestVersion.isEmpty) {
               WinnowIndex.build(b, idx, "doc_id", "text")
             } else {
               WinnowIndex.incrementalPairs(s, idx, b, "doc_id", "text")
@@ -3924,13 +3924,13 @@ object LlmQueries {
                   perturbR00 = if (id % 2 == 1) 8 else 0), 16, 12)
               (id, h1, h2)
             }.toDF("id", "h1", "h2").materialized
+            val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
             val found =
-              if (!new java.io.File(idx).exists())
-                PerceptualHash.nearDupPairs(h, "id", radius = 8)
+              if (fresh) PerceptualHash.nearDupPairs(h, "id", radius = 8)
               else PHashIndex.incrementalNearDupPairs(
                 s, idx, h, "id", radius = 8)
             found.write.mode("append").parquet(decisions)
-            if (!new java.io.File(idx).exists()) PHashIndex.build(h, idx)
+            if (fresh) PHashIndex.build(h, idx)
             else PHashIndex.append(h, idx)
           }
           .start().awaitTermination()
@@ -4060,14 +4060,13 @@ object LlmQueries {
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
             nBatches += 1
             val batch = b.materialized
+            val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
             val found =
-              if (!new java.io.File(idx).exists())
-                EmbeddingKnn.nearDupPairsLsh(batch, threshold = 0.4)
+              if (fresh) EmbeddingKnn.nearDupPairsLsh(batch, threshold = 0.4)
               else EmbeddingLshIndex.incrementalNearDupPairs(
                 s, idx, batch, threshold = 0.4)
             found.write.mode("append").parquet(decisions)
-            if (!new java.io.File(idx).exists())
-              EmbeddingLshIndex.build(batch, idx, planesPerTable = 8)
+            if (fresh) EmbeddingLshIndex.build(batch, idx, planesPerTable = 8)
             else EmbeddingLshIndex.append(batch, idx)
           }
           .start().awaitTermination()
@@ -7038,17 +7037,16 @@ object LlmQueries {
              |FROM d LEFT JOIN a USING (doc_id)
              |ORDER BY d.doc_id""".stripMargin)),
 
-    // Index COMPACTION parity: flat-append band indexes accumulate a
+    // Index COMPACTION parity: band indexes accumulate a
     // shuffle-partition-count of small files per streamed microbatch;
-    // compaction rewrites the tables into a few files — in a NEW
-    // successor directory (a torn in-place swap could lose a table;
-    // an immutable successor keeps recovery trivial, the lakehouse
-    // snapshot philosophy applied to index maintenance). The query is
-    // the parity proof: thirds of the corpus fold through build →
-    // probe+append → COMPACT → probe-the-successor, and the union of
-    // probe decisions must still reproduce q31's one-shot oracle
-    // verbatim — compaction changed the file layout, not one bit of
-    // the probe contract.
+    // compaction rewrites the tables in place into a few files, as one
+    // commit-log entry that supersedes the directories it read (a torn
+    // compaction commits nothing, so the index stays as it was). The
+    // query is the parity proof: thirds of the corpus fold through
+    // build → probe+append → COMPACT → probe the same path, and the
+    // union of probe decisions must still reproduce q31's one-shot
+    // oracle verbatim — compaction changed the file layout, not one bit
+    // of the probe contract.
     "q222_embed_index_compaction" -> Q(
       (s, d) => {
         import graft.llm.{EmbeddingKnn, EmbeddingLshIndex}
@@ -7063,16 +7061,9 @@ object LlmQueries {
         val p1 = EmbeddingLshIndex.incrementalNearDupPairs(
           s, s"$dir/idx", b1, threshold = 0.4)
         EmbeddingLshIndex.append(b1, s"$dir/idx")
-        EmbeddingLshIndex.compact(s, s"$dir/idx", s"$dir/idx2",
-          targetFiles = 2)
-        // adoption is a COMMITTED pointer flip (an IndexLog entry
-        // naming the live dir), not a caller convention: a crash between
-        // compact-return and this line commits no entry, so resolveLive
-        // keeps the predecessor authoritative (pinned in IndexCrashSpec)
-        graft.llm.IndexMaintenance.commitLivePointer(s, dir, s"$dir/idx2")
-        val live = graft.llm.IndexMaintenance.resolveLive(s, dir, s"$dir/idx")
+        EmbeddingLshIndex.compact(s, s"$dir/idx", targetFiles = 2)
         val p2 = EmbeddingLshIndex.incrementalNearDupPairs(
-          s, live, b2, threshold = 0.4)
+          s, s"$dir/idx", b2, threshold = 0.4)
         p0.union(p1).union(p2).orderBy("id_a", "id_b")
       },
       Some(embLshOracle)),
@@ -7318,9 +7309,9 @@ object LlmQueries {
              |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)),
 
     // Tombstone FORGET in the band-key index wing — q226's takedown
-    // path for the flat-append family (llm/EmbeddingLshIndex.forget).
+    // path for the band-key family (llm/EmbeddingLshIndex.forget).
     // The bands/vecs tables are append-only and a physical delete
-    // would rewrite them, so forgetting APPENDS the ids to a dels/
+    // would rewrite them, so forgetting COMMITS the ids to a tombstone
     // table that every probe broadcast-anti-joins on its history side;
     // compaction (q222) materializes it. The oracle is the one-shot
     // q31 pair set with every pair touching a forgotten id removed —
@@ -7574,11 +7565,12 @@ object LlmQueries {
             // the fold skipped — the append must still run, or the
             // batch's band keys are lost forever and every later
             // incremental probe silently misses pairs against it. A
-            // replayed append only duplicates band keys (recall-
-            // harmless per the wing's "re-append on any doubt"
-            // contract); a replayed build is an idempotent overwrite.
+            // replayed append only duplicates band keys (IndexLog's
+            // retry contract); a replayed batch 0 whose build committed
+            // finds its keys already there.
             if (bid == 0L) {
-              MinHashIndex.build(b, mh, "doc_id", "text")
+              if (graft.llm.IndexLog.read(mh).latestVersion.isEmpty)
+                MinHashIndex.build(b, mh, "doc_id", "text")
               graft.llm.IndexMaintenance.foldOnce(bid,
                   FamilyIndex.latestVersion(fam)) {
                 FamilyIndex.build(MinHashDedup.nearDupPairs(

@@ -23,16 +23,20 @@ case class Q(
 
 /** Scratch roots for queries that must materialize intermediate tables
   * (persisted indexes, lakehouse state, stream checkpoints): created
-  * under java.io.tmpdir and deleted RECURSIVELY by a JVM shutdown hook,
-  * so repeated suite/bench runs don't accumulate corpus copies in /tmp.
-  * Exit-time (not eager) deletion is the correct point: every query's
-  * result is materialized before the JVM exits, while the DataFrame it
-  * returns may lazily re-read the scratch files until then.
+  * under java.io.tmpdir and deleted RECURSIVELY by one JVM shutdown
+  * hook, so repeated suite/bench runs don't accumulate corpus copies in
+  * /tmp. Exit-time (not eager) deletion is the correct point: every
+  * query's result is materialized before the JVM exits, while the
+  * DataFrame it returns may lazily re-read the scratch files until then.
   */
 object Scratch {
+  private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  private lazy val hook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach(d => delete(d))))
   def dir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
+    hook
+    dirs.add(p.toFile)
     p.toString
   }
   /** A scratch dir for one bounded use: deleted in-process once `use`

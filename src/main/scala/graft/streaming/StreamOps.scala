@@ -241,7 +241,8 @@ object StreamOps {
   private val nameCounter = new AtomicInteger()
 
   /** Run a bounded streaming DataFrame to completion through a memory
-    * sink; returns the sink table as a batch DataFrame.
+    * sink; returns the sink's rows as a batch DataFrame and drops the
+    * sink's temp view, so a long-lived session keeps no view per call.
     *
     * `statePartitions` temporarily narrows `spark.sql.shuffle.partitions`
     * for the stream's lifetime: a stateful query materializes one state
@@ -290,7 +291,10 @@ object StreamOps {
         finally q.stop()
       }
     } finally spark.conf.set(key, prev)
-    spark.table(name)
+    // the frame's plan holds the sink itself, not its name
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   /** Streaming state width for the stateful `runToBatch` sites: the

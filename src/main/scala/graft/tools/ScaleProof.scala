@@ -512,7 +512,8 @@ object ScaleProof {
           ((System.nanoTime() - t0) / 1e9, w, r)
         }
         val (sec, w, r) = passes.minBy(_._1)
-        val occ = spark.read.parquet(s"$lastIdx/bands")
+        val occ = graft.llm.IndexMaintenance
+          .scan(spark, graft.llm.IndexLog.read(lastIdx), "bands")
           .groupBy("table", "sig").count()
           .agg(avg(col("count")), max(col("count"))).collect().head
         val (avgOcc, maxOcc) = (occ.getDouble(0), occ.getLong(1))
@@ -528,16 +529,15 @@ object ScaleProof {
             f"write=${w >> 20}MiB read=${r >> 20}MiB planes=$planes " +
             f"avg_bucket=$avgOcc%.1f max_bucket=$maxOcc " +
             f"hot_buckets=$hotBuckets")
-        // q222's maintenance leg: compact the final index into a
-        // successor and re-probe it — compaction cost is a linear
-        // coalesce rewrite, and the probe against the successor is the
-        // parity the q222 oracle pins at gate scale
+        // q222's maintenance leg: compact the final index in place and
+        // re-probe it — compaction cost is a linear coalesce rewrite,
+        // and the probe against the compacted index is the parity the
+        // q222 oracle pins at gate scale
         val tC0 = System.nanoTime()
         val (_, wc, rc) = meter.measure {
-          graft.llm.EmbeddingLshIndex.compact(spark, lastIdx,
-            s"$lastIdx-compact", targetFiles = 8)
+          graft.llm.EmbeddingLshIndex.compact(spark, lastIdx, targetFiles = 8)
           graft.llm.EmbeddingLshIndex.incrementalNearDupPairs(spark,
-              s"$lastIdx-compact", e.filter(col("vec_id") % 2 === 1),
+              lastIdx, e.filter(col("vec_id") % 2 === 1),
               threshold = 0.4, planesPerTable = planes,
               maxBucketSize = embCap)
             .write.format("noop").mode("overwrite").save()
@@ -552,10 +552,10 @@ object ScaleProof {
         // its history side, so the wall must stay ~the probe's
         val tF0 = System.nanoTime()
         val (_, wf, rf) = meter.measure {
-          graft.llm.EmbeddingLshIndex.forget(spark, s"$lastIdx-compact",
+          graft.llm.EmbeddingLshIndex.forget(spark, lastIdx,
             e.filter(col("vec_id") % 30 === 7).select("vec_id"))
           graft.llm.EmbeddingLshIndex.incrementalNearDupPairs(spark,
-              s"$lastIdx-compact",
+              lastIdx,
               e.filter(col("vec_id") % 2 === 1 && col("vec_id") % 30 =!= 7),
               threshold = 0.4, planesPerTable = planes,
               maxBucketSize = embCap)

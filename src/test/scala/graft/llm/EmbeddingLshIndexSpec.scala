@@ -85,19 +85,18 @@ class EmbeddingLshIndexSpec extends AnyFunSuite {
     (8L until 20L).grouped(3).foreach { g =>
       EmbeddingLshIndex.append(vecs(g.toSeq), s"$dir/idx")
     }
-    def parquetFiles(p: String) =
-      new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-    EmbeddingLshIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    assert(parquetFiles(s"$dir/idx2/bands") == 1)
-    assert(parquetFiles(s"$dir/idx2/bands") < parquetFiles(s"$dir/idx/bands"))
-    // identical probe decisions through the successor, original untouched
+    // identical probe decisions through the compacted index
     val probe = vecs(Seq(0L)).select((col("vec_id") + 500L).as("vec_id"),
       col("embedding"))
-    def pairs(p: String) = EmbeddingLshIndex
-      .incrementalNearDupPairs(spark, p, probe, threshold = 0.9)
+    def pairs() = EmbeddingLshIndex
+      .incrementalNearDupPairs(spark, s"$dir/idx", probe, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(s"$dir/idx2") == pairs(s"$dir/idx"))
-    assert(pairs(s"$dir/idx2") == Set((0L, 500L, 1.0), (1L, 500L, 1.0)))
+    val (files, before) = (IndexSpecs.files(s"$dir/idx", "bands"), pairs())
+    EmbeddingLshIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexSpecs.files(s"$dir/idx", "bands") == 1 && files > 1)
+    assert(IndexSpecs.files(s"$dir/idx", "vecs") == 1)
+    assert(pairs() == before)
+    assert(pairs() == Set((0L, 500L, 1.0), (1L, 500L, 1.0)))
   }
 
   test("forget: tombstoned ids vanish from probes; compact materializes the delete") {
@@ -124,13 +123,14 @@ class EmbeddingLshIndexSpec extends AnyFunSuite {
       col("embedding"))
     assert(EmbeddingLshIndex.cleanseWith(spark, s"$dir/idx", gid1copy,
       threshold = 0.9).count() == 1L)
-    // compact materializes: successor has no _dels/, filtered tables,
+    // compact materializes: no live tombstones, filtered tables,
     // identical probe decisions
-    EmbeddingLshIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    assert(!new java.io.File(s"$dir/idx2/_dels").exists())
-    assert(spark.read.parquet(s"$dir/idx2/vecs")
+    EmbeddingLshIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    val log = IndexLog.read(s"$dir/idx")
+    assert(log.live(IndexMaintenance.Dels).isEmpty)
+    assert(IndexMaintenance.scan(spark, log, "vecs")
       .filter(col("id").isin(1L, 2L, 3L)).isEmpty)
-    assert(pairs(s"$dir/idx2") == Set((0L, 500L)))
+    assert(pairs(s"$dir/idx") == Set((0L, 500L)))
   }
 
   test("defaultPlanesPerTable follows the measured decade law (occupancy ≤ 8)") {
@@ -178,9 +178,12 @@ class EmbeddingLshIndexSpec extends AnyFunSuite {
       EmbeddingLshIndex.cleanseWith(spark, s"$dir/idx", vecs(Seq(1L)),
         seed = 7L)
     }
-    // compact carries the geometry to the successor
-    EmbeddingLshIndex.compact(spark, s"$dir/idx", s"$dir/idx2")
-    assert(EmbeddingLshIndex.geometry(spark, s"$dir/idx2").contains(g))
+    // in-place compaction keeps the geometry
+    EmbeddingLshIndex.compact(spark, s"$dir/idx")
+    assert(EmbeddingLshIndex.geometry(spark, s"$dir/idx").contains(g))
+    assert(probed.subsetOf(EmbeddingLshIndex.incrementalNearDupPairs(spark,
+        s"$dir/idx", vecs((0L until 40L).filter(_ % 2 == 1)), threshold = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
   }
 
   test("legacy index without a sidecar resolves the historical defaults") {

@@ -40,6 +40,8 @@ class FrontierIndexSpec extends AnyFunSuite {
       "https://a.x/1", "https://a.x/2", "https://b.y/1"), idx, "url")
     FrontierIndex.forgetUrls(urls("https://a.x/1"), idx, "url")
     FrontierIndex.forgetHosts(Seq("b.y").toDF("host"), idx, "host")
+    // tombstone entries keep the version
+    assert(FrontierIndex.latestVersion(idx).contains(1))
     val vis = FrontierIndex.visited(spark, idx)
       .collect().map(_.getString(0)).toSeq
     assert(vis == Seq("https://a.x/2"))

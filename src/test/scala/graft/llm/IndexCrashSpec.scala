@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** One kill-point table over every member of the versioned index tier
-  * ([[IndexLog]]'s crash contract). Each row is one operation; each
-  * runs at two kill points:
+/** One kill-point table over every persisted index ([[IndexLog]]'s
+  * crash contract). Each row is one operation; each runs at two kill
+  * points:
   *
-  *  - the data job dies midway (its input throws inside a task);
+  *  - the data job dies midway (its input throws inside a task, or, for
+  *    a compaction, which has no input frame, its task commit throws);
   *  - the data is complete but no entry is committed — the operation
   *    runs for real against a copy of its target, every file it wrote
   *    outside `_log` is copied back into the original, and each entry
@@ -32,8 +33,8 @@ class IndexCrashSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** `fixture(root)` commits the state the operation starts from;
-    * `target(root)` is where the operation commits (the index, a
-    * successor, a pointer root); `run(root, target, input)` performs
+    * `target(root)` is where the operation commits (the index or a
+    * successor); `run(root, target, input)` performs
     * it with its input frame passed through `input`; `read(root)` is
     * the observable state. `poisonable` rows have an input frame a
     * data job consumes; `vacuum` is the member's vacuum, if it has one.
@@ -48,8 +49,19 @@ class IndexCrashSpec extends AnyFunSuite {
     udf(() => sys.error("kill point: the data job dies midway"): Boolean)
       .asNondeterministic()
 
-  private def poison(df: DataFrame): DataFrame =
-    df.repartition(2).filter(killed())
+  private val poison: DataFrame => DataFrame =
+    _.repartition(2).filter(killed())
+
+  /** A session whose parquet task commits die. */
+  private lazy val dying = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.parquet.output.committer.class",
+      classOf[IndexCrashSpec.DyingCommitter].getName)
+    s
+  }
+
+  /** The session a compaction runs in: `dying` at the first kill point. */
+  private def sessionOf(in: DataFrame => DataFrame) = if (in eq poison) dying else spark
 
   private def tmp(): String = Files.createTempDirectory("graft-crash").toString
 
@@ -89,6 +101,14 @@ class IndexCrashSpec extends AnyFunSuite {
   private val queries = Seq((100L, "spark data"), (200L, "xylophone"),
     (300L, "hot memory")).toDF("qid", "qtext")
 
+  private def hashes(ids: Seq[Long]): DataFrame =
+    ids.map(i => (i, i * 0x0101010101010101L, ~i)).toDF("id", "h1", "h2")
+
+  private def vecs(ids: Seq[Long]): DataFrame = ids.map { i =>
+    val r = new scala.util.Random(i / 2)
+    (i, Array.fill(64)(r.nextGaussian().toFloat))
+  }.toDF("vec_id", "embedding")
+
   // ---- reads ----
 
   private def lineRead(root: String) = versioned(
@@ -105,6 +125,42 @@ class IndexCrashSpec extends AnyFunSuite {
       s"live=${DeltaChain.liveDeltaVersions(s"$root/idx")}")
 
   private def idx(root: String) = s"$root/idx"
+
+  /** A log-committed index's state: the kinds of its entries and each
+    * table's live rows, tombstones applied.
+    */
+  private def tables(names: String*)(root: String): Set[String] = {
+    val log = IndexLog.read(idx(root))
+    versioned(log.latestVersion)(names.flatMap(t =>
+      strings(IndexMaintenance.live(spark, log, t)).map(r => s"$t:$r")).toSet +
+      s"entries=${log.entries.map(_.kind)}")
+  }
+
+  private def frontierRead(root: String) =
+    tables()(root) ++ strings(FrontierIndex.visited(spark, idx(root)))
+
+  /** build, append, compact and forget rows for a band-key index. */
+  private def wing(name: String, tableNames: Seq[String], input: Seq[Long] => DataFrame,
+      build: (DataFrame, String) => Unit, append: (DataFrame, String) => Unit,
+      compact: (org.apache.spark.sql.SparkSession, String) => Unit,
+      forget: Option[(String, DataFrame) => Unit]): Seq[Op] = {
+    val read = tables(tableNames: _*) _
+    val vacuum = Some((r: String) => IndexLog.vacuum(idx(r)))
+    def built(r: String) = build(input(Seq(1L, 2L, 3L)), idx(r))
+    Seq(
+      Op(s"$name.build", _ => (), idx, (_, t, in) => build(in(input(Seq(1L, 2L, 3L))), t),
+        read, vacuum = vacuum),
+      Op(s"$name.append", built, idx, (_, t, in) => append(in(input(Seq(4L, 5L))), t),
+        read, vacuum = vacuum),
+      Op(s"$name.compact", { r =>
+          built(r)
+          append(input(Seq(4L)), idx(r))
+          append(input(Seq(5L)), idx(r))
+          IndexMaintenance.forget(idx(r), Seq(2L).toDF("id"))
+        }, idx, (_, t, in) => compact(sessionOf(in), t), read, vacuum = vacuum)) ++
+      forget.map(f => Op(s"$name.forget", built, idx,
+        (_, t, in) => f(t, in(Seq(2L, 3L).toDF("id"))), read, vacuum = vacuum))
+  }
 
   private val ops = Seq(
     Op("LineDedupIndex.build", _ => (), idx,
@@ -174,15 +230,29 @@ class IndexCrashSpec extends AnyFunSuite {
         in(urls("https://a.x/1", "https://a.x/2")), "url"),
       r => versioned(FrontierIndex.latestVersion(idx(r)))(
         strings(FrontierIndex.visited(spark, idx(r))))),
-    Op("live pointer flip", { r =>
-        Seq((1L, "a"), (2L, "b")).toDF("id", "k").write.parquet(idx(r))
-        IndexMaintenance.compactTable(spark, idx(r), s"$r/idx2", 1)
-      }, r => r,
-      (r, t, _) => IndexMaintenance.commitLivePointer(spark, t, s"$r/idx2"),
-      { r =>
-        val live = IndexMaintenance.resolveLive(spark, r, idx(r))
-        strings(spark.read.parquet(live)) + s"live=${live.stripPrefix(r)}"
-      }, poisonable = false))
+    Op("FrontierIndex.forgetUrls",
+      r => FrontierIndex.build(urls("https://a.x/1", "https://b.y/2"), idx(r), "url"), idx,
+      (_, t, in) => FrontierIndex.forgetUrls(in(urls("https://a.x/1")), t, "url"),
+      frontierRead),
+    Op("FrontierIndex.forgetHosts",
+      r => FrontierIndex.build(urls("https://a.x/1", "https://b.y/2"), idx(r), "url"), idx,
+      (_, t, in) => FrontierIndex.forgetHosts(in(Seq("b.y").toDF("host")), t, "host"),
+      frontierRead)) ++
+    wing("MinHashIndex", Seq("bands"), docs,
+      MinHashIndex.build(_, _, "doc_id", "text"), MinHashIndex.append(_, _, "doc_id", "text"),
+      MinHashIndex.compact(_, _, 1), Some(MinHashIndex.forget)) ++
+    wing("SimHashIndex", Seq("bands"), docs,
+      SimHashIndex.build(_, _, "doc_id", "text"), SimHashIndex.append(_, _, "doc_id", "text"),
+      SimHashIndex.compact(_, _, 1), None) ++
+    wing("WinnowIndex", Seq("postings"), docs,
+      WinnowIndex.build(_, _, "doc_id", "text"), WinnowIndex.append(_, _, "doc_id", "text"),
+      WinnowIndex.compact(_, _, 1), None) ++
+    wing("PHashIndex", Seq("bands"), hashes,
+      graft.multimodal.PHashIndex.build(_, _), graft.multimodal.PHashIndex.append(_, _),
+      graft.multimodal.PHashIndex.compact(_, _, 1), None) ++
+    wing("EmbeddingLshIndex", Seq("vecs", "bands"), vecs,
+      EmbeddingLshIndex.build(_, _), EmbeddingLshIndex.append(_, _),
+      EmbeddingLshIndex.compact(_, _, 1), Some(EmbeddingLshIndex.forget(spark, _, _)))
 
   // ---- kill points ----
 
@@ -264,8 +334,7 @@ class IndexCrashSpec extends AnyFunSuite {
       op.fixture(root)
       val before = op.read(root)
       val (torn, tornEntries) = tornRun(op, root)
-      // every member but the pointer writes data before its entry
-      assert(torn.nonEmpty || op.name == "live pointer flip")
+      assert(torn.nonEmpty)
       assert(tornEntries.nonEmpty)
       assert(op.read(root) == before)
       op.vacuum.foreach { v =>
@@ -281,5 +350,15 @@ class IndexCrashSpec extends AnyFunSuite {
       assert(op.read(root) == before)
       retryHeals(op, root)
     }
+  }
+}
+
+object IndexCrashSpec {
+  /** A parquet output committer whose task commit dies. */
+  class DyingCommitter(out: org.apache.hadoop.fs.Path,
+      ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+      extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+    override def commitTask(ctx: org.apache.hadoop.mapreduce.TaskAttemptContext): Unit =
+      sys.error("kill point: the data job dies midway")
   }
 }

@@ -5,14 +5,16 @@ import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The commit log's concurrency contract: the put-if-absent primitive
-  * has exactly one winner per sequence number, and concurrent folds
-  * through [[IndexLog.commit]] lose no update. Crash behaviour is
-  * pinned in IndexCrashSpec.
+  * has exactly one winner per sequence number, and concurrent writers
+  * through [[IndexLog.commit]] — folds, band-key appends, tombstones and
+  * in-place compactions — lose no update. Crash behaviour is pinned in
+  * IndexCrashSpec.
   */
 class IndexLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -71,14 +73,6 @@ class IndexLogSpec extends AnyFunSuite {
       (for (t <- 0 until threads; i <- 1 to each) yield s"$path/w/$t-$i").toSet)
   }
 
-  test("live pointer: a later flip supersedes, versions are monotone") {
-    val root = tmp()
-    assert(IndexMaintenance.resolveLive(spark, root, s"$root/a") == s"$root/a")
-    assert(IndexMaintenance.commitLivePointer(spark, root, s"$root/a") == 1)
-    assert(IndexMaintenance.commitLivePointer(spark, root, s"$root/b") == 2)
-    assert(IndexMaintenance.resolveLive(spark, root, s"$root/a") == s"$root/b")
-  }
-
   test("vacuum bounds the log: superseded entries go, the head stays") {
     val path = tmp()
     val cnt = Seq(("a", 1L)).toDF("k", "n")
@@ -121,6 +115,135 @@ class IndexLogSpec extends AnyFunSuite {
       Seq((3L, "base", 2), (4L, "delta", 3)))
     assert(DeltaChain.composedSum(spark, path, Seq("k"), "n")
       .as[(String, Long)].collect().toSeq == Seq(("a", 3L)))
+  }
+
+  // ---- two writers on the band-key wing, the tombstones and compaction ----
+
+  // each writer's frames are one partition, so one write's tasks never
+  // queue behind the other's
+
+  private def docs(ids: Range): DataFrame =
+    ids.map(i => (i.toLong, s"doc $i shares alpha beta gamma delta tail${i % 7} x$i"))
+      .toDF("doc_id", "text").coalesce(1)
+
+  private def hashes(ids: Range): DataFrame =
+    ids.map(i => (i.toLong, i * 0x0101010101010101L, ~i.toLong)).toDF("id", "h1", "h2").coalesce(1)
+
+  private def vecs(ids: Range): DataFrame = ids.map { i =>
+    val r = new scala.util.Random(i)
+    (i.toLong, Array.fill(64)(r.nextGaussian().toFloat))
+  }.toDF("vec_id", "embedding").coalesce(1)
+
+  private def urls(ids: Range): DataFrame =
+    ids.map(i => s"https://h${i % 3}.x/$i").toDF("url").coalesce(1)
+
+  private val sleepRow = udf { (ms: Int) => Thread.sleep(ms); true }.asNondeterministic()
+
+  /** The two writers' frames: writer 0's rows sleep 15 ms before a
+    * shuffle, writer 1's 30 ms after it, so writer 0's operation commits
+    * while writer 1's write tasks still run.
+    */
+  private def writer(t: Int)(df: DataFrame): DataFrame = {
+    val key = col(df.columns.head)
+    if (t == 0) df.filter(sleepRow(lit(15))).repartition(key)
+    else df.repartition(key).filter(sleepRow(lit(30)))
+  }
+
+  /** Batch `b` of 20 ids: 0 is the index's build, 1 to 6 the writers'. */
+  private def batch(b: Int): Range = b * 20 until b * 20 + 20
+
+  /** The ids of `table`'s live rows (tombstones applied), and the
+    * tombstoned ids.
+    */
+  private def ids(path: String, table: String): Set[String] = {
+    val log = IndexLog.read(path)
+    IndexMaintenance.live(spark, log, table).select("id").distinct()
+      .as[Long].collect().map(i => s"$table:$i").toSet
+  }
+
+  private def dels(path: String): Set[String] =
+    IndexMaintenance.tombstones(spark, IndexLog.read(path)).toSeq
+      .flatMap(_.collect().map(r => s"del:${r.get(0)}")).toSet
+
+  /** One two-writer row: `setup(path)` builds the index; `op(path, t, i)`
+    * is writer t's i-th of three operations; `state(path)` is what the
+    * index holds.
+    */
+  private case class Race(name: String, setup: String => Unit,
+      op: (String, Int, Int) => Unit, state: String => Set[String])
+
+  private def appendRace(name: String, build: (Range, String) => Unit,
+      append: (Range, Int, String) => Unit, tables: String*) =
+    Race(name, p => build(batch(0), p), (p, t, i) => append(batch(1 + 3 * t + i), t, p),
+      p => tables.flatMap(ids(p, _)).toSet)
+
+  private val races = Seq(
+    appendRace("MinHashIndex.append",
+      (r, p) => MinHashIndex.build(docs(r), p, "doc_id", "text"),
+      (r, t, p) => MinHashIndex.append(writer(t)(docs(r)), p, "doc_id", "text",
+        maxBucketSize = 0L), "bands"),
+    appendRace("SimHashIndex.append",
+      (r, p) => SimHashIndex.build(docs(r), p, "doc_id", "text"),
+      (r, t, p) => SimHashIndex.append(writer(t)(docs(r)), p, "doc_id", "text",
+        maxBucketSize = 0L), "bands"),
+    appendRace("WinnowIndex.append",
+      (r, p) => WinnowIndex.build(docs(r), p, "doc_id", "text"),
+      (r, t, p) => WinnowIndex.append(writer(t)(docs(r)), p, "doc_id", "text"), "postings"),
+    appendRace("PHashIndex.append",
+      (r, p) => graft.multimodal.PHashIndex.build(hashes(r), p),
+      (r, t, p) => graft.multimodal.PHashIndex.append(writer(t)(hashes(r)), p,
+        maxBucketSize = 0L), "bands"),
+    appendRace("EmbeddingLshIndex.append",
+      (r, p) => EmbeddingLshIndex.build(vecs(r), p),
+      (r, t, p) => EmbeddingLshIndex.append(writer(t)(vecs(r)), p, maxBucketSize = 0L), "vecs", "bands"),
+    Race("PHashIndex.append and IndexMaintenance.forget",
+      p => graft.multimodal.PHashIndex.build(hashes(batch(0)), p),
+      { (p, t, i) =>
+        val b = batch(1 + 3 * t + i)
+        graft.multimodal.PHashIndex.append(writer(t)(hashes(b)), p, maxBucketSize = 0L)
+        IndexMaintenance.forget(p, writer(t)(b.take(2).map(_.toLong).toDF("id").coalesce(1)))
+      },
+      p => ids(p, "bands") ++ dels(p)),
+    Race("FrontierIndex.forgetUrls",
+      p => FrontierIndex.build(urls(0 until 140), p, "url"),
+      (p, t, i) => FrontierIndex.forgetUrls(writer(t)(urls(3 * t + i until 140 by 6)), p, "url"),
+      p => FrontierIndex.visited(spark, p).as[String].collect().toSet ++ dels(p)),
+    Race("MinHashIndex.append racing compact and vacuum",
+      p => MinHashIndex.build(docs(batch(0)), p, "doc_id", "text"),
+      (p, t, i) =>
+        if (t == 0) MinHashIndex.append(docs(batch(1 + i)), p, "doc_id", "text")
+        else { MinHashIndex.compact(spark, p, 1); IndexLog.vacuum(p) },
+      p => ids(p, "bands")))
+
+  private val rounds = 4
+
+  races.foreach { race =>
+    test(s"two writers: ${race.name} ends with a serial run's ids and tombstones") {
+      def fresh() = {
+        val p = s"${tmp()}/idx"
+        race.setup(p)
+        p
+      }
+      val serial = fresh()
+      for (t <- 0 until 2; i <- 0 until 3) race.op(serial, t, i)
+      val want = race.state(serial)
+      val failed = (1 to rounds).flatMap { round =>
+        val p = fresh()
+        val barrier = new CyclicBarrier(2)
+        // both writers start each of their operations together
+        val errors = inParallel(2) { t =>
+          (0 until 3).flatMap { i =>
+            barrier.await()
+            scala.util.Try(race.op(p, t, i)).failed.toOption
+          }
+        }.flatten
+        val got = race.state(p)
+        if (errors.isEmpty && got == want) None
+        else Some(s"round $round: ${errors.map(_.toString.take(160))} " +
+          s"missing ${(want -- got).size}, extra ${(got -- want).size}")
+      }
+      assert(failed.isEmpty, s"${failed.size}/$rounds rounds failed: ${failed.mkString("; ")}")
+    }
   }
 
   /** Two threads fold disjoint batches into one index at once; the

@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The shared lifecycle helpers: the exactly-once fold guard and the
-  * tombstone sidecar (the live pointer is pinned in IndexCrashSpec,
-  * compactTable through the per-index specs).
+  * tombstone table (compaction is pinned through the per-index specs).
   */
 class IndexMaintenanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -68,23 +67,24 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("tombstone sidecar: append, read back, anti-join, invisible to table reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-imts").toString
-    val t = s"$dir/tbl"
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      .write.parquet(t)
-    assert(IndexMaintenance.tombstones(spark, t).isEmpty)
-    IndexMaintenance.appendTombstones(t, Seq(2L).toDF("whatever_name"))
-    IndexMaintenance.appendTombstones(t, Seq(2L, 3L).toDF("id")) // dup ok
-    val live = IndexMaintenance
-      .minusTombstones(spark, t, spark.read.parquet(t))
-      .select("id").as[Long].collect().toSet
-    assert(live == Set(1L))
-    // the sidecar never leaks into the table's own read
-    assert(spark.read.parquet(t).count() == 3L)
-    // compactTable materializes: successor filtered, no sidecar
-    IndexMaintenance.compactTable(spark, t, s"$dir/tbl2", targetFiles = 1)
-    assert(spark.read.parquet(s"$dir/tbl2")
+    val t = java.nio.file.Files.createTempDirectory("graft-imts").toString
+    IndexMaintenance.build(t)(Seq("rows" -> Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")))
+    assert(IndexMaintenance.tombstones(spark, IndexLog.read(t)).isEmpty)
+    IndexMaintenance.forget(t, Seq(2L).toDF("whatever_name"))
+    IndexMaintenance.forget(t, Seq(2L, 3L).toDF("id")) // dup ok
+    val log = IndexLog.read(t)
+    assert(IndexMaintenance.live(spark, log, "rows")
       .select("id").as[Long].collect().toSet == Set(1L))
-    assert(!new java.io.File(s"$dir/tbl2/_dels").exists())
+    // the tombstones never leak into the table's own scan, and keep the version
+    assert(IndexMaintenance.scan(spark, log, "rows").count() == 3L)
+    assert(log.latestVersion.contains(1))
+    // compact materializes in place: rows filtered, tombstones superseded
+    IndexMaintenance.compact(spark, t, 1, "rows")
+    val after = IndexLog.read(t)
+    assert(IndexMaintenance.scan(spark, after, "rows")
+      .select("id").as[Long].collect().toSet == Set(1L))
+    assert(after.live(IndexMaintenance.Dels).isEmpty && after.latestVersion.contains(1))
+    // vacuum reclaims the build's rows and both tombstone directories
+    assert(IndexLog.vacuum(t) == 3)
   }
 }

@@ -12,6 +12,9 @@ class MinHashIndexSpec extends AnyFunSuite {
   private lazy val oldDocs = docs.filter(col("doc_id") < 400)
   private lazy val newDocs = docs.filter(col("doc_id") >= 400)
 
+  /** The live band-key table, read through the index's log. */
+  private def bands(p: String) = IndexMaintenance.live(spark, IndexLog.read(p), "bands")
+
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -35,7 +38,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-mhidx2").toString
     MinHashIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     MinHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    val indexed = spark.read.parquet(s"$dir/idx").count()
+    val indexed = bands(s"$dir/idx").count()
     // compare against a direct pass under the index's OWN persisted
     // geometry (build self-calibrates bands; append must follow it)
     val g = MinHashIndex.geometry(spark, s"$dir/idx").get
@@ -52,7 +55,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     // append called with MISMATCHED args still writes 16-band keys —
     // the sidecar, not the call site, owns the geometry
     MinHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text", bands = 4)
-    val perDoc = spark.read.parquet(s"$dir/idx")
+    val perDoc = bands(s"$dir/idx")
       .groupBy("id").count().select("count").distinct().collect()
     assert(perDoc.map(_.getLong(0)).toSeq == Seq(16L))
     // probe under the sidecar geometry reproduces the one-shot pairs
@@ -67,10 +70,12 @@ class MinHashIndexSpec extends AnyFunSuite {
       .filter(r => newIds(r.getLong(0)) || newIds(r.getLong(1)))
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(inc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == slice)
-    // compaction carries the sidecar to the successor
-    MinHashIndex.compact(spark, s"$dir/idx", s"$dir/idx2")
-    assert(MinHashIndex.geometry(spark, s"$dir/idx2")
+    // in-place compaction keeps the sidecar, and the probe it feeds
+    MinHashIndex.compact(spark, s"$dir/idx")
+    assert(MinHashIndex.geometry(spark, s"$dir/idx")
       .contains(MinHashIndex.Geometry(32, 16, 3)))
+    assert(pairSet(MinHashIndex.incrementalNearDupPairs(
+      spark, s"$dir/idx", newDocs, docs, "doc_id", "text", threshold = 0.5)) == slice)
   }
 
   test("a rowless _geom sidecar (interrupted build) fails with a diagnosis, not NoSuchElement") {
@@ -133,25 +138,23 @@ class MinHashIndexSpec extends AnyFunSuite {
       s"$rebuilt/idx", "doc_id", "text")
     assert(after == pairSet(MinHashIndex.incrementalNearDupPairs(
       spark, s"$rebuilt/idx", newDocs, docs, "doc_id", "text", threshold = 0.5)))
-    // compact materializes: successor has no _dels sidecar, filtered
-    // rows, identical probes
-    MinHashIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    assert(!new java.io.File(s"$dir/idx2/_dels").exists())
-    assert(spark.read.parquet(s"$dir/idx2")
+    // compact materializes: no live tombstones, filtered rows,
+    // identical probes
+    MinHashIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexLog.read(s"$dir/idx").live(IndexMaintenance.Dels).isEmpty)
+    assert(IndexMaintenance.scan(spark, IndexLog.read(s"$dir/idx"), "bands")
       .filter(col("id").isin(forgotten.toSeq: _*)).isEmpty)
     assert(after == pairSet(MinHashIndex.incrementalNearDupPairs(
-      spark, s"$dir/idx2", newDocs, docs, "doc_id", "text", threshold = 0.5)))
+      spark, s"$dir/idx", newDocs, docs, "doc_id", "text", threshold = 0.5)))
   }
 
   test("compact: successor holds identical band keys in fewer files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mhidx4").toString
     MinHashIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     MinHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    MinHashIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    def nf(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nf(s"$dir/idx2") == 1 && nf(s"$dir/idx2") < nf(s"$dir/idx"))
-    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
-    assert(rows(s"$dir/idx2") == rows(s"$dir/idx"))
+    val (files, rows) = (IndexSpecs.files(s"$dir/idx", "bands"), IndexSpecs.rows(bands(s"$dir/idx")))
+    MinHashIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexSpecs.files(s"$dir/idx", "bands") == 1 && files > 1)
+    assert(IndexSpecs.rows(bands(s"$dir/idx")) == rows)
   }
 }

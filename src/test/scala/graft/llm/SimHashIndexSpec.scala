@@ -52,7 +52,7 @@ class SimHashIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-shidx3").toString
     SimHashIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     SimHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    val indexed = spark.read.parquet(s"$dir/idx").count()
+    val indexed = IndexMaintenance.live(spark, IndexLog.read(s"$dir/idx"), "bands").count()
     val direct = SimHashDedup.bandKeys(docs, "doc_id", "text").count()
     assert(indexed == direct)
     // nothing overflows the default cap here: incremental == full holds
@@ -63,11 +63,14 @@ class SimHashIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-shidx4").toString
     SimHashIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     SimHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    SimHashIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
-    assert(rows(s"$dir/idx2") == rows(s"$dir/idx"))
-    // the params sidecar rides along, so append-after-compact validates
-    assert(SimHashIndex.storedParams(spark, s"$dir/idx2") ==
-      SimHashIndex.storedParams(spark, s"$dir/idx"))
+    def bands() = IndexMaintenance.live(spark, IndexLog.read(s"$dir/idx"), "bands")
+    val (files, rows) = (IndexSpecs.files(s"$dir/idx", "bands"), IndexSpecs.rows(bands()))
+    SimHashIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexSpecs.rows(bands()) == rows)
+    assert(IndexSpecs.files(s"$dir/idx", "bands") == 1 && files > 1)
+    // the params sidecar stays, so append-after-compact validates
+    assert(SimHashIndex.storedParams(spark, s"$dir/idx").contains((3, 6)))
+    intercept[IllegalArgumentException](
+      SimHashIndex.append(newDocs, s"$dir/idx", "doc_id", "text", radius = 5))
   }
 }

@@ -28,6 +28,9 @@ class WinnowIndexSpec extends AnyFunSuite {
       .filter(col("shared_fps") >= minShared)
   }
 
+  private def postings(p: String) =
+    IndexMaintenance.live(spark, IndexLog.read(p), "postings")
+
   private def tripleSet(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b", "shared_fps").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -49,7 +52,7 @@ class WinnowIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-wnidx2").toString
     WinnowIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     WinnowIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    val indexed = spark.read.parquet(s"$dir/idx").count()
+    val indexed = postings(s"$dir/idx").count()
     val direct = docs.select(col("doc_id"),
       explode(TextFunctions.winnowedFingerprints(col("text"))).as("f")).count()
     assert(indexed == direct)
@@ -59,13 +62,13 @@ class WinnowIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-wnidx5").toString
     WinnowIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     WinnowIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    val once = spark.read.parquet(s"$dir/idx").count()
+    val once = postings(s"$dir/idx").count()
     // the "on any doubt, re-append" retry: a second append of the SAME
     // batch must drop every already-indexed doc's postings — winnow
     // postings feed counts (df, shared_fps), so duplicates would shift
     // the maxDf/minShared thresholds, unlike the band-key indexes
     WinnowIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    assert(spark.read.parquet(s"$dir/idx").count() == once)
+    assert(postings(s"$dir/idx").count() == once)
   }
 
   test("re-delivered docs cannot skew the df cutoff (idempotent delivery)") {
@@ -98,12 +101,10 @@ class WinnowIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-wnidx4").toString
     WinnowIndex.build(oldDocs, s"$dir/idx", "doc_id", "text")
     WinnowIndex.append(newDocs, s"$dir/idx", "doc_id", "text")
-    WinnowIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    def nf(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nf(s"$dir/idx2") == 1 && nf(s"$dir/idx2") < nf(s"$dir/idx"))
-    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
-    assert(rows(s"$dir/idx2") == rows(s"$dir/idx"))
+    val (files, rows) = (IndexSpecs.files(s"$dir/idx", "postings"), IndexSpecs.rows(postings(s"$dir/idx")))
+    WinnowIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexSpecs.files(s"$dir/idx", "postings") == 1 && files > 1)
+    assert(IndexSpecs.rows(postings(s"$dir/idx")) == rows)
   }
   test("forget: df cutoff and pairs match a from-scratch run over survivors") {
     val dir = java.nio.file.Files.createTempDirectory("graft-wnidx6").toString

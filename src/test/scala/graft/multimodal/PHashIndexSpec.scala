@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.llm.{IndexLog, IndexMaintenance, IndexSpecs}
 
 class PHashIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -83,11 +84,10 @@ class PHashIndexSpec extends AnyFunSuite {
       PHashIndex.append(h.filter(col("id") >= 20L && col("id") % 4 === b),
         s"$dir/idx")
     }
-    PHashIndex.compact(spark, s"$dir/idx", s"$dir/idx2", targetFiles = 1)
-    def nf(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nf(s"$dir/idx2") == 1 && nf(s"$dir/idx2") < nf(s"$dir/idx"))
-    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
-    assert(rows(s"$dir/idx2") == rows(s"$dir/idx"))
+    def bands() = IndexMaintenance.live(spark, IndexLog.read(s"$dir/idx"), "bands")
+    val (files, rows) = (IndexSpecs.files(s"$dir/idx", "bands"), IndexSpecs.rows(bands()))
+    PHashIndex.compact(spark, s"$dir/idx", targetFiles = 1)
+    assert(IndexSpecs.files(s"$dir/idx", "bands") == 1 && files > 1)
+    assert(IndexSpecs.rows(bands()) == rows)
   }
 }

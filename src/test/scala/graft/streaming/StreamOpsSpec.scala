@@ -636,6 +636,22 @@ class StreamOpsSpec extends AnyFunSuite {
     }
     assert(StreamOpsSpec.checkpointDirs() == before)
   }
+
+  test("runToBatch drops its memory-sink view; the returned frame still reads") {
+    def views() = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_")).toSet
+    graft.queries.Scratch.using("runtobatch-view") { src =>
+      spark.range(0, 40).selectExpr("id % 7 AS k", "id").write.parquet(s"$src/t")
+      val out = StreamOps.runToBatch(spark,
+        StreamOps.readStream(spark, s"$src/t").groupBy("k").agg(count(lit(1)).as("n")),
+        "complete")
+      assert(views().isEmpty)
+      val batch = spark.read.parquet(s"$src/t").groupBy("k").agg(count(lit(1)).as("n"))
+      assert(out.as[(Long, Long)].collect().sorted sameElements
+        batch.as[(Long, Long)].collect().sorted)
+      assert(out.filter(col("n") > 5L).count() == 5L)
+    }
+  }
 }
 
 object StreamOpsSpec {
