@@ -7,6 +7,7 @@ import graft.functions.{TextFunctions, VectorFunctions}
 import graft.llm.{EmbeddingKnn, JaccardVerify, MinHashDedup, NGramJaccard, ProductQuantization, SimHashDedup, SpanDedup}
 import graft.operators.{Dedup, Stats, TopK}
 import graft.operators.Iterate.MaterializeOps
+import graft.streaming.StreamOps
 
 /** Training-data-pipeline operator corpus over the `documents`,
   * `embeddings` and `events` tables: dedup, text analysis, similarity
@@ -99,6 +100,15 @@ object LlmQueries {
       chunks,
       array(concat(lit("(c) "), col("source"), lit(" media group"))))
   }
+
+  /** Replays `shards`, one row per `bucket`, as one micro-batch per
+    * shard in bucket order.
+    */
+  private def replayShards(s: SparkSession, shards: DataFrame,
+      dir: String): DataFrame =
+    StreamOps.replayFiles(dir, shards.collect().toSeq
+      .sortBy(_.getAs[Long]("bucket"))
+      .map(row => s.createDataFrame(java.util.Arrays.asList(row), shards.schema)))
 
   /** Mixed-charset crawl shards for the q251/q252 capstones: each
     * document staged as an HTML page inside a full HTTP response
@@ -1801,9 +1811,8 @@ object LlmQueries {
               |ORDER BY id_a, id_b""".stripMargin)),
 
     // STREAMING near-dup ingest — the dedup-at-ingest flagship: the
-    // corpus arrives as two REAL microbatches (file stream, distinct
-    // mtimes, maxFilesPerTrigger=1, AvailableNow) and foreachBatch
-    // maintains the persisted winnow index — batch 1 builds it, batch 2
+    // corpus arrives as two REAL microbatches (StreamOps.replayFiles)
+    // and foreachBatch maintains the persisted winnow index — batch 1 builds it, batch 2
     // probes it (incrementalPairs = new-vs-indexed ∪ new-vs-new) and
     // appends. The output is the ingest decision per arriving doc:
     // partner counts against history and within the batch, plus a kept
@@ -1817,36 +1826,20 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.WinnowIndex
         val root = graft.queries.Scratch.dir("graft-q153-sni")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 250))
-        s.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            val idx = s"$root/idx"
-            if (graft.llm.IndexLog.read(idx).latestVersion.isEmpty) {
-              WinnowIndex.build(b, idx, "doc_id", "text")
-            } else {
-              WinnowIndex.incrementalPairs(s, idx, b, "doc_id", "text")
-                .write.mode("append").parquet(s"$root/pairs")
-              WinnowIndex.append(b, idx, "doc_id", "text")
-            }
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 250)))
+        StreamOps.drain(stream, s"$root/ck") { (b, _) =>
+          val idx = s"$root/idx"
+          if (graft.llm.IndexLog.read(idx).latestVersion.isEmpty) {
+            WinnowIndex.build(b, idx, "doc_id", "text")
+          } else {
+            WinnowIndex.incrementalPairs(s, idx, b, "doc_id", "text")
+              .write.mode("append").parquet(s"$root/pairs")
+            WinnowIndex.append(b, idx, "doc_id", "text")
           }
-          .start().awaitTermination()
+        }
         // a corpus that fits entirely in batch 1 (tiny fixtures) never
         // probes, so the pairs table may not exist
         val pairs =
@@ -2563,38 +2556,22 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.LineDedupIndex
         val root = graft.queries.Scratch.dir("graft-q166-sld")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("source"), col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 250))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 250)))
         val idx = s"$root/idx"
-        s.readStream
-          .schema("doc_id LONG, source STRING, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // exactly-once: a replayed batch (crash between index
-            // commit and checkpoint commit) must not double df counts
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                LineDedupIndex.latestVersion(idx)) {
-              if (LineDedupIndex.latestVersion(idx).isEmpty)
-                LineDedupIndex.build(b, idx, "doc_id", docLines)
-              else
-                LineDedupIndex.addBatch(s, idx, b, "doc_id", docLines)
-            }
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // exactly-once: a replayed batch (crash between index
+          // commit and checkpoint commit) must not double df counts
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              LineDedupIndex.latestVersion(idx)) {
+            if (LineDedupIndex.latestVersion(idx).isEmpty)
+              LineDedupIndex.build(b, idx, "doc_id", docLines)
+            else
+              LineDedupIndex.addBatch(s, idx, b, "doc_id", docLines)
           }
-          .start().awaitTermination()
+        }
         require(LineDedupIndex.latestVersion(idx).contains(2),
           "expected two delivered microbatches")
         LineDedupIndex.cleanWith(s, idx, all, "doc_id", docLines, maxDf = 5L)
@@ -3096,9 +3073,8 @@ object LlmQueries {
 
     // Streaming BM25-index maintenance — q181's operator driven by the
     // REAL streaming engine (q166's delivery shape): two file-stream
-    // microbatches (doc_id < 250 / >= 250, maxFilesPerTrigger=1,
-    // AvailableNow) foreachBatch-folded into the persisted inverted
-    // index — batch 2 never rescans batch 1 — then q173's query set
+    // microbatches (doc_id < 250 / >= 250) foreachBatch-folded into the
+    // persisted inverted index — batch 2 never rescans batch 1 — then q173's query set
     // searches the INDEX. Additive df/stats + the literally-shared
     // scoring join make the result hash-EXACT against the one-shot
     // oracle; n_versions = 2 pins that real batch-by-batch delivery
@@ -3107,38 +3083,22 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.Bm25Index
         val root = graft.queries.Scratch.dir("graft-q192-bmstream")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 250))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 250)))
         val idx = s"$root/idx"
-        s.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // exactly-once: a replayed batch (crash between index
-            // commit and checkpoint commit) must not double postings
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                Bm25Index.latestVersion(idx)) {
-              if (Bm25Index.latestVersion(idx).isEmpty)
-                Bm25Index.build(b, idx, "doc_id", "text")
-              else
-                Bm25Index.addBatch(s, idx, b, "doc_id", "text")
-            }
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // exactly-once: a replayed batch (crash between index
+          // commit and checkpoint commit) must not double postings
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              Bm25Index.latestVersion(idx)) {
+            if (Bm25Index.latestVersion(idx).isEmpty)
+              Bm25Index.build(b, idx, "doc_id", "text")
+            else
+              Bm25Index.addBatch(s, idx, b, "doc_id", "text")
           }
-          .start().awaitTermination()
+        }
         require(Bm25Index.latestVersion(idx).contains(2),
           "expected two delivered microbatches")
         val queries = all.filter(col("doc_id") < 3)
@@ -3467,46 +3427,29 @@ object LlmQueries {
       Some(spanDedupOracle)),
 
     // Streaming span-dedup index maintenance: the q201 fold under the
-    // REAL streaming engine (file source, admission-bounded microbatches,
-    // Trigger.AvailableNow, foreachBatch) — the same protocol as q192's
-    // BM25 ingest, proving the newest exact index is maintainable at
-    // ingest time. The post-drain cleanse over the full corpus must
+    // REAL streaming engine (StreamOps.replayFiles and drain) — the
+    // same protocol as q192's BM25 ingest, proving the newest exact
+    // index is maintainable at ingest time. The post-drain cleanse over the full corpus must
     // still replay q200's one-shot SQL bit-for-bit.
     "q202_stream_span_dedup" -> Q(
       (s, d) => {
         import graft.llm.SpanDedupIndex
         val root = graft.queries.Scratch.dir("graft-q202-sdstream")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 250))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 250)))
         val idx = s"$root/idx"
-        s.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // exactly-once: a replayed batch must not double gram counts
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                SpanDedupIndex.latestVersion(idx)) {
-              if (SpanDedupIndex.latestVersion(idx).isEmpty)
-                SpanDedupIndex.build(b, idx, "doc_id", "text")
-              else
-                SpanDedupIndex.addBatch(s, idx, b, "doc_id", "text")
-            }
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // exactly-once: a replayed batch must not double gram counts
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              SpanDedupIndex.latestVersion(idx)) {
+            if (SpanDedupIndex.latestVersion(idx).isEmpty)
+              SpanDedupIndex.build(b, idx, "doc_id", "text")
+            else
+              SpanDedupIndex.addBatch(s, idx, b, "doc_id", "text")
           }
-          .start().awaitTermination()
+        }
         require(SpanDedupIndex.latestVersion(idx).contains(2),
           "expected two delivered microbatches")
         // the cleanse reads the COMPOSED delta chain directly: for a
@@ -3880,8 +3823,8 @@ object LlmQueries {
       Some(phashOracle)),
 
     // Streaming perceptual ingest: q207's probe-then-append fold under
-    // the REAL engine (file source, admission-bounded microbatches,
-    // Trigger.AvailableNow, foreachBatch — the q192/q202 protocol).
+    // the REAL engine (StreamOps.replayFiles and drain — the q192/q202
+    // protocol).
     // Each arriving batch is hashed once, probed against indexed
     // history AND itself, its dedup DECISIONS written, then its band
     // rows appended — the ingest-time image-dedup loop. Even/odd ids
@@ -3894,46 +3837,28 @@ object LlmQueries {
         import s.implicits._
         import graft.multimodal.{MultimodalOps, PerceptualHash, PHashIndex}
         val root = graft.queries.Scratch.dir("graft-q208-phstream")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val ids = docs(s, d).select(col("doc_id"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, ids.filter(col("doc_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, ids.filter(col("doc_id") % 2 === 1))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          ids.filter(col("doc_id") % 2 === 0),
+          ids.filter(col("doc_id") % 2 === 1)))
         val idx = s"$root/idx"
         val decisions = s"$root/decisions"
-        var nBatches = 0
-        s.readStream
-          .schema("doc_id LONG")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            nBatches += 1
-            val h = b.select(col("doc_id")).as[Long].map { id =>
-              val (h1, h2) = PerceptualHash.dHashKernel(
-                MultimodalOps.synthNoiseBitmap(id / 2, 16, 12,
-                  perturbR00 = if (id % 2 == 1) 8 else 0), 16, 12)
-              (id, h1, h2)
-            }.toDF("id", "h1", "h2").materialized
-            val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
-            val found =
-              if (fresh) PerceptualHash.nearDupPairs(h, "id", radius = 8)
-              else PHashIndex.incrementalNearDupPairs(
-                s, idx, h, "id", radius = 8)
-            found.write.mode("append").parquet(decisions)
-            if (fresh) PHashIndex.build(h, idx)
-            else PHashIndex.append(h, idx)
-          }
-          .start().awaitTermination()
+        val nBatches = StreamOps.drain(stream, s"$root/ck") { (b, _) =>
+          val h = b.select(col("doc_id")).as[Long].map { id =>
+            val (h1, h2) = PerceptualHash.dHashKernel(
+              MultimodalOps.synthNoiseBitmap(id / 2, 16, 12,
+                perturbR00 = if (id % 2 == 1) 8 else 0), 16, 12)
+            (id, h1, h2)
+          }.toDF("id", "h1", "h2").materialized
+          val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
+          val found =
+            if (fresh) PerceptualHash.nearDupPairs(h, "id", radius = 8)
+            else PHashIndex.incrementalNearDupPairs(
+              s, idx, h, "id", radius = 8)
+          found.write.mode("append").parquet(decisions)
+          if (fresh) PHashIndex.build(h, idx)
+          else PHashIndex.append(h, idx)
+        }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
         s.read.parquet(decisions)
           .withColumn("n_batches", lit(2L))
@@ -4022,8 +3947,7 @@ object LlmQueries {
       Some(embLshOracle)),
 
     // Streaming embedding-dedup ingest: q210's probe-then-append fold
-    // under the REAL engine (file source, admission-bounded
-    // microbatches, Trigger.AvailableNow, foreachBatch — the
+    // under the REAL engine (StreamOps.replayFiles and drain — the
     // q192/q202/q208 protocol). Each arriving vector batch is
     // signature-hashed once, probed against indexed history AND
     // itself, its dedup DECISIONS written, then appended — the
@@ -4035,41 +3959,23 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.{EmbeddingKnn, EmbeddingLshIndex}
         val root = graft.queries.Scratch.dir("graft-q211-elstream")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val e = emb(s, d).select("vec_id", "embedding")
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, e.filter(col("vec_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, e.filter(col("vec_id") % 2 === 1))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          e.filter(col("vec_id") % 2 === 0),
+          e.filter(col("vec_id") % 2 === 1)))
         val idx = s"$root/idx"
         val decisions = s"$root/decisions"
-        var nBatches = 0
-        s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            nBatches += 1
-            val batch = b.materialized
-            val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
-            val found =
-              if (fresh) EmbeddingKnn.nearDupPairsLsh(batch, threshold = 0.4)
-              else EmbeddingLshIndex.incrementalNearDupPairs(
-                s, idx, batch, threshold = 0.4)
-            found.write.mode("append").parquet(decisions)
-            if (fresh) EmbeddingLshIndex.build(batch, idx, planesPerTable = 8)
-            else EmbeddingLshIndex.append(batch, idx)
-          }
-          .start().awaitTermination()
+        val nBatches = StreamOps.drain(stream, s"$root/ck") { (b, _) =>
+          val batch = b.materialized
+          val fresh = graft.llm.IndexLog.read(idx).latestVersion.isEmpty
+          val found =
+            if (fresh) EmbeddingKnn.nearDupPairsLsh(batch, threshold = 0.4)
+            else EmbeddingLshIndex.incrementalNearDupPairs(
+              s, idx, batch, threshold = 0.4)
+          found.write.mode("append").parquet(decisions)
+          if (fresh) EmbeddingLshIndex.build(batch, idx, planesPerTable = 8)
+          else EmbeddingLshIndex.append(batch, idx)
+        }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
         s.read.parquet(decisions)
           .withColumn("n_batches", lit(2L))
@@ -4159,39 +4065,21 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.EmbeddingLshIndex
         val root = graft.queries.Scratch.dir("graft-q214-cleanse")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val e = emb(s, d).select("vec_id", "embedding", "label")
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
         val train = e.filter(col("vec_id") % 10 =!= 8)
-        writeBatch("b1.parquet", 1000000L, train.filter(col("vec_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, train.filter(col("vec_id") % 2 === 1))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          train.filter(col("vec_id") % 2 === 0),
+          train.filter(col("vec_id") % 2 === 1)))
         val idx = s"$root/idx"
         EmbeddingLshIndex.build(e.filter(col("vec_id") % 10 === 8), idx,
           planesPerTable = 8)
         val admitted = s"$root/admitted"
-        var nBatches = 0
-        s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            nBatches += 1
-            EmbeddingLshIndex.cleanseWith(s, idx, b.materialized,
-                threshold = 0.35)
-              .select("vec_id", "label")
-              .write.mode("append").parquet(admitted)
-          }
-          .start().awaitTermination()
+        val nBatches = StreamOps.drain(stream, s"$root/ck") { (b, _) =>
+          EmbeddingLshIndex.cleanseWith(s, idx, b.materialized,
+              threshold = 0.35)
+            .select("vec_id", "label")
+            .write.mode("append").parquet(admitted)
+        }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
         s.read.parquet(admitted)
           .withColumn("n_batches", lit(2L))
@@ -4462,25 +4350,13 @@ object LlmQueries {
     "q221_stream_quota_admission" -> Q(
       (s, d) => {
         val root = graft.queries.Scratch.dir("graft-q221-quota")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val dd = docs(s, d).select(col("source"), col("doc_id"),
           graft.functions.TextFunctions.tokenCount(col("text")).as("w"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, dd.filter(col("doc_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, dd.filter(col("doc_id") % 2 === 1))
         val admitted = s"$root/admitted"
-        val q = graft.streaming.StreamOps.tokenQuotaAdmission(
-            s.readStream
-              .schema("source STRING, doc_id LONG, w LONG")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(s"$src/*.parquet"),
+        val q = StreamOps.tokenQuotaAdmission(
+            StreamOps.replayFiles(s"$root/src", Seq(
+              dd.filter(col("doc_id") % 2 === 0),
+              dd.filter(col("doc_id") % 2 === 1))),
             quota = 800L)
           .writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -4524,35 +4400,19 @@ object LlmQueries {
     "q241_stream_quota_telemetry" -> Q(
       (s, d) => {
         val root = graft.queries.Scratch.dir("graft-q241-quotatel")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val dd = docs(s, d).select(col("source"), col("doc_id"),
           graft.functions.TextFunctions.tokenCount(col("text")).as("w"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
+        val telemetry = StreamOps.tokenQuotaAdmissionWithTelemetry(
+          StreamOps.replayFiles(s"$root/src", Seq(
+            dd.filter(col("doc_id") % 2 === 0),
+            dd.filter(col("doc_id") % 2 === 1))),
+          quota = 800L)
+        StreamOps.drain(telemetry, s"$root/ck") { (b, bid) =>
+          b.filter(col("kind") === "state")
+            .select(col("source"), col("n_input"), col("consumed"),
+              col("closed").cast("long").as("closed"))
+            .write.mode("overwrite").parquet(s"$root/state/batch=$bid")
         }
-        writeBatch("b1.parquet", 1000000L, dd.filter(col("doc_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, dd.filter(col("doc_id") % 2 === 1))
-        graft.streaming.StreamOps.tokenQuotaAdmissionWithTelemetry(
-            s.readStream
-              .schema("source STRING, doc_id LONG, w LONG")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(s"$src/*.parquet"),
-            quota = 800L)
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            b.filter(col("kind") === "state")
-              .select(col("source"), col("n_input"), col("consumed"),
-                col("closed").cast("long").as("closed"))
-              .write.mode("overwrite").parquet(s"$root/state/batch=$bid")
-          }
-          .start().awaitTermination()
         val batchDirs = Option(new java.io.File(s"$root/state").listFiles())
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
@@ -5235,8 +5095,6 @@ object LlmQueries {
       (s, d) => {
         graft.plans.GraftExtensions.register(s)
         val root = graft.queries.Scratch.dir("graft-q249-crawl")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val crlf = "chr(13), chr(10)"
         val r1 = s"concat('WARC/1.0', $crlf, " +
           s"'WARC-Type: response', $crlf, " +
@@ -5255,35 +5113,17 @@ object LlmQueries {
           .groupBy(col("bucket"))
           .agg(expr("unhex(concat_ws('', sort_array(collect_list(gzh))))")
             .as("media"))
-        shards.collect().foreach { row =>
-          val b = row.getAs[Long]("bucket")
-          val p = s"$src/shard-$b.parquet"
-          val one = s.createDataFrame(
-            java.util.Arrays.asList(row),
-            shards.schema)
-          one.coalesce(1).write.mode("overwrite").parquet(p)
-          new java.io.File(p).listFiles()
-            .foreach(_.setLastModified(1000000L * (b + 1)))
-          new java.io.File(p).setLastModified(1000000L * (b + 1))
+        val stream = replayShards(s, shards, s"$root/src")
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          b.selectExpr("bucket",
+              "inline(warc_records(gunzip_all(media)))")
+            .selectExpr("bucket",
+              "CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) AS BIGINT)" +
+                " AS doc_id",
+              "warc_type", "target_uri", "content_length",
+              "decode(content, 'utf-8') AS text")
+            .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
         }
-        s.readStream
-          .schema("bucket LONG, media BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            b.selectExpr("bucket",
-                "inline(warc_records(gunzip_all(media)))")
-              .selectExpr("bucket",
-                "CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) AS BIGINT)" +
-                  " AS doc_id",
-                "warc_type", "target_uri", "content_length",
-                "decode(content, 'utf-8') AS text")
-              .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-          }
-          .start().awaitTermination()
         val batches = Option(new java.io.File(s"$root/out").listFiles())
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
@@ -5637,39 +5477,20 @@ object LlmQueries {
         import graft.functions.HtmlFunctions
         graft.plans.GraftExtensions.register(s)
         val root = graft.queries.Scratch.dir("graft-q252-capstone")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         // same mixed-charset staging as q251 ([[crawlCapstoneShards]])
         val shards = crawlCapstoneShards(s, d, buckets = 4)
-        shards.collect().foreach { row =>
-          val b = row.getAs[Long]("bucket")
-          val p = s"$src/shard-$b.parquet"
-          val one = s.createDataFrame(
-            java.util.Arrays.asList(row), shards.schema)
-          one.coalesce(1).write.mode("overwrite").parquet(p)
-          new java.io.File(p).listFiles()
-            .foreach(_.setLastModified(1000000L * (b + 1)))
-          new java.io.File(p).setLastModified(1000000L * (b + 1))
+        val stream = replayShards(s, shards, s"$root/src")
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          b.select(expr("inline(warc_records(gunzip_all(media)))"))
+            .withColumn("h", expr("http_parts(content)"))
+            .select(
+              expr("CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) " +
+                "AS BIGINT)").as("doc_id"),
+              HtmlFunctions.mainBlock(expr(
+                "decode_charset(h.body, element_at(h.headers, " +
+                  "'content-type')).text")).as("text"))
+            .write.mode("overwrite").parquet(s"$root/corpus/batch=$bid")
         }
-        s.readStream
-          .schema("bucket LONG, media BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            b.select(expr("inline(warc_records(gunzip_all(media)))"))
-              .withColumn("h", expr("http_parts(content)"))
-              .select(
-                expr("CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) " +
-                  "AS BIGINT)").as("doc_id"),
-                HtmlFunctions.mainBlock(expr(
-                  "decode_charset(h.body, element_at(h.headers, " +
-                    "'content-type')).text")).as("text"))
-              .write.mode("overwrite").parquet(s"$root/corpus/batch=$bid")
-          }
-          .start().awaitTermination()
         val batches = Option(new java.io.File(s"$root/corpus").listFiles())
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
@@ -6125,8 +5946,6 @@ object LlmQueries {
         import graft.crawl.ContentRoute
         graft.plans.GraftExtensions.register(s)
         val root = graft.queries.Scratch.dir("graft-q256-mime")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val msgHex = expr(
           "CASE CAST(doc_id % 4 AS INT) " +
             // KOI8-R HTML: ' да' (C4C1) staged inside the main <p>
@@ -6164,38 +5983,21 @@ object LlmQueries {
           .groupBy(col("bucket"))
           .agg(expr("unhex(concat_ws('', sort_array(collect_list(gzh))))")
             .as("media"))
-        shards.collect().foreach { row =>
-          val b = row.getAs[Long]("bucket")
-          val p = s"$src/shard-$b.parquet"
-          val one = s.createDataFrame(
-            java.util.Arrays.asList(row), shards.schema)
-          one.coalesce(1).write.mode("overwrite").parquet(p)
-          new java.io.File(p).listFiles()
-            .foreach(_.setLastModified(1000000L * (b + 1)))
-          new java.io.File(p).setLastModified(1000000L * (b + 1))
+        val stream = replayShards(s, shards, s"$root/src")
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          b.select(expr("inline(warc_records(gunzip_all(media)))"))
+            .withColumn("h", expr("http_parts(content)"))
+            .withColumn("ct", expr("element_at(h.headers, 'content-type')"))
+            .select(
+              expr("CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) " +
+                "AS BIGINT)").as("doc_id"),
+              ContentRoute.essence(col("ct")).as("mime"),
+              ContentRoute.route(col("ct")).as("route"),
+              ContentRoute.extractedText(col("h.body"), col("ct"))
+                .as("text_out"),
+              ContentRoute.skipReason(col("ct")).as("skip_reason"))
+            .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
         }
-        s.readStream
-          .schema("bucket LONG, media BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            b.select(expr("inline(warc_records(gunzip_all(media)))"))
-              .withColumn("h", expr("http_parts(content)"))
-              .withColumn("ct", expr("element_at(h.headers, 'content-type')"))
-              .select(
-                expr("CAST(regexp_extract(record_id, 'doc-(\\\\d+)', 1) " +
-                  "AS BIGINT)").as("doc_id"),
-                ContentRoute.essence(col("ct")).as("mime"),
-                ContentRoute.route(col("ct")).as("route"),
-                ContentRoute.extractedText(col("h.body"), col("ct"))
-                  .as("text_out"),
-                ContentRoute.skipReason(col("ct")).as("skip_reason"))
-              .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-          }
-          .start().awaitTermination()
         val batches = Option(new java.io.File(s"$root/out").listFiles())
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
@@ -6703,45 +6505,29 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.FrontierIndex
         val root = graft.queries.Scratch.dir("graft-q263-frontier")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("source"))
           .withColumn("url", concat(lit("https://"), col("source"),
             lit(".crawl.test/"), col("doc_id")))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 200))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 200)))
         val idx = s"$root/idx"
-        s.readStream
-          .schema("doc_id LONG, source STRING, url STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                FrontierIndex.latestVersion(idx)) {
-              // admit BEFORE the fold (and land inside the guard):
-              // deterministic against the pre-batch index state, so a
-              // replayed batch rewrites the identical admitted set
-              val admitted = FrontierIndex.admit(s, idx, b, "url")
-                .withColumn("bid", lit(bid))
-              admitted.write.mode("overwrite")
-                .parquet(s"$root/admitted/batch=$bid")
-              if (FrontierIndex.latestVersion(idx).isEmpty)
-                FrontierIndex.build(admitted, idx, "url")
-              else FrontierIndex.addBatch(s, idx, admitted, "url")
-              ()
-            }
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              FrontierIndex.latestVersion(idx)) {
+            // admit BEFORE the fold (and land inside the guard):
+            // deterministic against the pre-batch index state, so a
+            // replayed batch rewrites the identical admitted set
+            val admitted = FrontierIndex.admit(s, idx, b, "url")
+              .withColumn("bid", lit(bid))
+            admitted.write.mode("overwrite")
+              .parquet(s"$root/admitted/batch=$bid")
+            if (FrontierIndex.latestVersion(idx).isEmpty)
+              FrontierIndex.build(admitted, idx, "url")
+            else FrontierIndex.addBatch(s, idx, admitted, "url")
+            ()
           }
-          .start().awaitTermination()
+        }
         require(FrontierIndex.latestVersion(idx).contains(2),
           "expected two delivered frontier microbatches")
         val landed = s.read.parquet(s"$root/admitted")
@@ -7200,29 +6986,15 @@ object LlmQueries {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         import s.implicits._
         val root = graft.queries.Scratch.dir("graft-q225-outer")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "event_type", "ts", "value")
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
         def carrier(ts: String) = Seq(
           (-1L, -1L, "click", java.sql.Timestamp.valueOf(ts), 0.0),
           (-2L, -1L, "purchase", java.sql.Timestamp.valueOf(ts), 0.0))
           .toDF("event_id", "user_id", "event_type", "ts", "value")
-        writeBatch("b1.parquet", 1000000L, ev)
-        writeBatch("b2.parquet", 2000000L, carrier("2030-01-01 00:00:00"))
-        writeBatch("b3.parquet", 3000000L, carrier("2030-02-01 00:00:00"))
-        val raw = s.readStream
-          .schema("event_id LONG, user_id LONG, event_type STRING, " +
-            "ts TIMESTAMP, value DOUBLE")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
+        val raw = StreamOps.replayFiles(s"$root/src", Seq(ev,
+          carrier("2030-01-01 00:00:00"),
+          carrier("2030-02-01 00:00:00")))
         val clicks = raw.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
@@ -7363,53 +7135,34 @@ object LlmQueries {
       (s, d) => {
         import graft.llm.Bm25Index
         val root = graft.queries.Scratch.dir("graft-q228-takedown")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d)
         val feed = all.select(lit("add").as("op"), col("doc_id"),
           col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L,
-          feed.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L,
-          feed.filter(col("doc_id") >= 250))
-        writeBatch("b3.parquet", 3000000L,
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          feed.filter(col("doc_id") < 250),
+          feed.filter(col("doc_id") >= 250),
           all.filter(col("doc_id") % 7 === 3)
             .select(lit("del").as("op"), col("doc_id"),
-              lit(null).cast("string").as("text")))
+              lit(null).cast("string").as("text"))))
         val idx = s"$root/idx"
-        s.readStream
-          .schema("op STRING, doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // exactly-once: a replayed add must not double postings,
-            // and a replayed delete must not burn an extra version —
-            // every batch bumps the version once, so the foldOnce
-            // invariant (version == batchId + 1) covers both branches
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                Bm25Index.latestVersion(idx)) {
-              val adds = b.filter(col("op") === "add")
-                .select("doc_id", "text")
-              val dels = b.filter(col("op") === "del").select("doc_id")
-              if (!adds.isEmpty) {
-                if (Bm25Index.latestVersion(idx).isEmpty)
-                  Bm25Index.build(adds, idx, "doc_id", "text")
-                else Bm25Index.addBatch(s, idx, adds, "doc_id", "text")
-              }
-              if (!dels.isEmpty) Bm25Index.deleteDocs(s, idx, dels)
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // exactly-once: a replayed add must not double postings,
+          // and a replayed delete must not burn an extra version —
+          // every batch bumps the version once, so the foldOnce
+          // invariant (version == batchId + 1) covers both branches
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              Bm25Index.latestVersion(idx)) {
+            val adds = b.filter(col("op") === "add")
+              .select("doc_id", "text")
+            val dels = b.filter(col("op") === "del").select("doc_id")
+            if (!adds.isEmpty) {
+              if (Bm25Index.latestVersion(idx).isEmpty)
+                Bm25Index.build(adds, idx, "doc_id", "text")
+              else Bm25Index.addBatch(s, idx, adds, "doc_id", "text")
             }
+            if (!dels.isEmpty) Bm25Index.deleteDocs(s, idx, dels)
           }
-          .start().awaitTermination()
+        }
         require(Bm25Index.latestVersion(idx).contains(3),
           "expected add, add, delete as three committed versions")
         val queries = all.filter(col("doc_id") < 3)
@@ -7539,62 +7292,47 @@ object LlmQueries {
         import graft.llm.{FamilyIndex, MinHashDedup, MinHashIndex}
         val root = graft.queries.Scratch.dir("graft-q230-famstream")
         val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val all = docs(s, d).select(col("doc_id"), col("text"))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, all.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, all.filter(col("doc_id") >= 250))
+        val stream = StreamOps.replayFiles(src, Seq(
+          all.filter(col("doc_id") < 250),
+          all.filter(col("doc_id") >= 250)))
         val (mh, fam) = (s"$root/mh", s"$root/fam")
-        s.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // foldOnce guards ONLY the version-bumping family fold; the
-            // band-wing writes sit OUTSIDE it. A crash between the
-            // family commit and the band append replays the batch with
-            // the fold skipped — the append must still run, or the
-            // batch's band keys are lost forever and every later
-            // incremental probe silently misses pairs against it. A
-            // replayed append only duplicates band keys (IndexLog's
-            // retry contract); a replayed batch 0 whose build committed
-            // finds its keys already there.
-            if (bid == 0L) {
-              if (graft.llm.IndexLog.read(mh).latestVersion.isEmpty)
-                MinHashIndex.build(b, mh, "doc_id", "text")
-              graft.llm.IndexMaintenance.foldOnce(bid,
-                  FamilyIndex.latestVersion(fam)) {
-                FamilyIndex.build(MinHashDedup.nearDupPairs(
-                  b, "doc_id", "text", threshold = 0.5), fam)
-              }
-            } else {
-              // history text is not re-read: verification joins the
-              // batch ∪ already-delivered docs, which at ingest time is
-              // exactly the corpus prefix the band keys cover. The
-              // probe runs INSIDE the foldOnce thunk: it materializes
-              // eagerly (banded join + Jaccard verify), and a replayed
-              // already-committed batch must skip that whole cost, not
-              // just the addBatch write.
-              graft.llm.IndexMaintenance.foldOnce(bid,
-                  FamilyIndex.latestVersion(fam)) {
-                val delivered = s.read.parquet(s"$src/*.parquet")
-                val pairs = MinHashIndex.incrementalNearDupPairs(s, mh, b,
-                  delivered, "doc_id", "text", threshold = 0.5)
-                FamilyIndex.addBatch(s, fam, pairs)
-              }
-              MinHashIndex.append(b, mh, "doc_id", "text")
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // foldOnce guards ONLY the version-bumping family fold; the
+          // band-wing writes sit OUTSIDE it. A crash between the
+          // family commit and the band append replays the batch with
+          // the fold skipped — the append must still run, or the
+          // batch's band keys are lost forever and every later
+          // incremental probe silently misses pairs against it. A
+          // replayed append only duplicates band keys (IndexLog's
+          // retry contract); a replayed batch 0 whose build committed
+          // finds its keys already there.
+          if (bid == 0L) {
+            if (graft.llm.IndexLog.read(mh).latestVersion.isEmpty)
+              MinHashIndex.build(b, mh, "doc_id", "text")
+            graft.llm.IndexMaintenance.foldOnce(bid,
+                FamilyIndex.latestVersion(fam)) {
+              FamilyIndex.build(MinHashDedup.nearDupPairs(
+                b, "doc_id", "text", threshold = 0.5), fam)
             }
+          } else {
+            // history text is not re-read: verification joins the
+            // batch ∪ already-delivered docs, which at ingest time is
+            // exactly the corpus prefix the band keys cover. The
+            // probe runs INSIDE the foldOnce thunk: it materializes
+            // eagerly (banded join + Jaccard verify), and a replayed
+            // already-committed batch must skip that whole cost, not
+            // just the addBatch write.
+            graft.llm.IndexMaintenance.foldOnce(bid,
+                FamilyIndex.latestVersion(fam)) {
+              val delivered = s.read.parquet(s"$src/*.parquet")
+              val pairs = MinHashIndex.incrementalNearDupPairs(s, mh, b,
+                delivered, "doc_id", "text", threshold = 0.5)
+              FamilyIndex.addBatch(s, fam, pairs)
+            }
+            MinHashIndex.append(b, mh, "doc_id", "text")
           }
-          .start().awaitTermination()
+        }
         require(FamilyIndex.latestVersion(fam).contains(2),
           "expected two delivered microbatches")
         val a = FamilyIndex.assignment(s, fam)
@@ -7729,46 +7467,30 @@ object LlmQueries {
           col("ftext"))
         NaiveBayes.save(s"$root/model", c0, t0)
         // ingest: two microbatches scored against the loaded model
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
         val feed = dd.select("doc_id", "text", "lang")
-        writeBatch("b1.parquet", 1000000L, feed.filter(col("doc_id") < 250))
-        writeBatch("b2.parquet", 2000000L, feed.filter(col("doc_id") >= 250))
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          feed.filter(col("doc_id") < 250),
+          feed.filter(col("doc_id") >= 250)))
         val (cl, tb) = NaiveBayes.load(s, s"$root/model")
-        s.readStream
-          .schema("doc_id LONG, text STRING, lang STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // idempotent per batch: foreachBatch is at-least-once, and
-            // a plain append would duplicate a replayed batch's rows.
-            // Scoring is batch-local and deterministic, so OVERWRITING
-            // the batch's own partition dir makes replay a no-op — and
-            // the committed dirs, not a driver counter (which would
-            // count replays), are what the n_batches pin reads.
-            val sc = NaiveBayes.scores(qualityFeatures(b), "doc_id",
-              col("ftext"), cl, tb)
-            sc.filter(col("label") === "cut")
-              .select(col("doc_id"), col("score_bits").as("cut_bits"))
-              .join(sc.filter(col("label") === "keep")
-                .select(col("doc_id"), col("score_bits").as("keep_bits")),
-                Seq("doc_id"))
-              .filter(col("cut_bits") > col("keep_bits"))
-              .select(col("doc_id"),
-                (col("cut_bits") - col("keep_bits")).as("margin_bits"))
-              .write.mode("overwrite").parquet(s"$root/admitted/batch=$bid")
-          }
-          .start().awaitTermination()
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // idempotent per batch: foreachBatch is at-least-once, and
+          // a plain append would duplicate a replayed batch's rows.
+          // Scoring is batch-local and deterministic, so OVERWRITING
+          // the batch's own partition dir makes replay a no-op — and
+          // the committed dirs, not a driver counter (which would
+          // count replays), are what the n_batches pin reads.
+          val sc = NaiveBayes.scores(qualityFeatures(b), "doc_id",
+            col("ftext"), cl, tb)
+          sc.filter(col("label") === "cut")
+            .select(col("doc_id"), col("score_bits").as("cut_bits"))
+            .join(sc.filter(col("label") === "keep")
+              .select(col("doc_id"), col("score_bits").as("keep_bits")),
+              Seq("doc_id"))
+            .filter(col("cut_bits") > col("keep_bits"))
+            .select(col("doc_id"),
+              (col("cut_bits") - col("keep_bits")).as("margin_bits"))
+            .write.mode("overwrite").parquet(s"$root/admitted/batch=$bid")
+        }
         val committedBatches = Option(new java.io.File(s"$root/admitted")
             .listFiles()).map(_.count(f =>
           f.isDirectory && f.getName.startsWith("batch="))).getOrElse(0)
@@ -7859,17 +7581,8 @@ object LlmQueries {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         import s.implicits._
         val root = graft.queries.Scratch.dir("graft-q235-oja")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "event_type", "ts", "value")
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
         def carrier(ts: String) = Seq(
           (-1L, -1L, "click", java.sql.Timestamp.valueOf(ts), 0.0),
           (-2L, -1L, "purchase", java.sql.Timestamp.valueOf(ts), 0.0))
@@ -7882,15 +7595,10 @@ object LlmQueries {
         // emits its closed windows — each stateful stage needs one
         // data batch after its input is complete, and the final
         // no-data flush batch races processAllAvailable
-        writeBatch("b1.parquet", 1000000L, ev)
-        writeBatch("b2.parquet", 2000000L, carrier("2030-01-01 00:00:00"))
-        writeBatch("b3.parquet", 3000000L, carrier("2030-02-01 00:00:00"))
-        writeBatch("b4.parquet", 4000000L, carrier("2030-03-01 00:00:00"))
-        val raw = s.readStream
-          .schema("event_id LONG, user_id LONG, event_type STRING, " +
-            "ts TIMESTAMP, value DOUBLE")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
+        val raw = StreamOps.replayFiles(s"$root/src", Seq(ev,
+          carrier("2030-01-01 00:00:00"),
+          carrier("2030-02-01 00:00:00"),
+          carrier("2030-03-01 00:00:00")))
         val clicks = raw.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))

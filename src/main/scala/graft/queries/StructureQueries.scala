@@ -6,6 +6,7 @@ import graft.Tables
 import graft.functions.TextFunctions
 import graft.operators.{CountMin, LabelPropagation, Skyline}
 import graft.operators.Iterate.MaterializeOps
+import graft.streaming.StreamOps
 
 /** Corpus-structure tier: bounded-memory frequency sketching (count-min),
   * sub-linear corpus-similarity estimation (coordinated bottom-k),
@@ -918,8 +919,8 @@ object StructureQueries {
               |ORDER BY top.exact_cnt DESC, top.w""".stripMargin)),
 
     // STREAMING sketch maintenance: the corpus token stream arrives as
-    // two real microbatches (file source, maxFilesPerTrigger=1,
-    // AvailableNow) and foreachBatch folds each into the persisted CMS
+    // two real microbatches (StreamOps.replayFiles) and foreachBatch
+    // folds each into the persisted CMS
     // index — build on batch 1, addBatch on batch 2. Because CMS merge
     // is exact, the post-stream estimates equal the full-corpus sketch
     // replay, and n_versions = 2 pins that the stream really delivered
@@ -930,42 +931,24 @@ object StructureQueries {
       (s, d) => {
         import graft.llm.CmsIndex
         val root = graft.queries.Scratch.dir("graft-q150-scms")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val toks = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(split(TextFunctions.normalized(col("text")), " "))
               .as("w"))
           .filter(col("w") =!= "")
           .withColumn("h", TextFunctions.polyHash(col("w")))
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L,
-          toks.filter(col("doc_id") % 2 === 0).select("h"))
-        writeBatch("b2.parquet", 2000000L,
-          toks.filter(col("doc_id") % 2 === 1).select("h"))
-        val stream = s.readStream
-          .schema("h LONG")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
-        stream.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$root/ck")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // exactly-once: a replayed batch must not double CMS cells
-            graft.llm.IndexMaintenance.foldOnce(bid,
-                CmsIndex.latestVersion(s"$root/idx")) {
-              if (CmsIndex.latestVersion(s"$root/idx").isEmpty)
-                CmsIndex.build(b, s"$root/idx")
-              else CmsIndex.addBatch(s, s"$root/idx", b)
-            }
+        val stream = StreamOps.replayFiles(s"$root/src", Seq(
+          toks.filter(col("doc_id") % 2 === 0).select("h"),
+          toks.filter(col("doc_id") % 2 === 1).select("h")))
+        StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+          // exactly-once: a replayed batch must not double CMS cells
+          graft.llm.IndexMaintenance.foldOnce(bid,
+              CmsIndex.latestVersion(s"$root/idx")) {
+            if (CmsIndex.latestVersion(s"$root/idx").isEmpty)
+              CmsIndex.build(b, s"$root/idx")
+            else CmsIndex.addBatch(s, s"$root/idx", b)
           }
-          .start().awaitTermination()
+        }
         val nv = CmsIndex.latestVersion(s"$root/idx").getOrElse(0).toLong
         val top = toks.groupBy("w").agg(count(lit(1)).as("exact_cnt"))
           .orderBy(col("exact_cnt").desc, col("w")).limit(20)
@@ -1236,25 +1219,13 @@ object StructureQueries {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         import s.implicits._
         val root = graft.queries.Scratch.dir("graft-q234-swq")
-        val src = s"$root/src"
-        new java.io.File(src).mkdirs()
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("ts"),
             expr("CAST(round(value * 100) AS BIGINT)").as("v"))
           .filter(col("v") >= 0)
-        def writeBatch(name: String, mtime: Long,
-            df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = s"$src/$name"
-          df.coalesce(1).write.parquet(p)
-          new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-          new java.io.File(p).setLastModified(mtime)
-        }
-        writeBatch("b1.parquet", 1000000L, ev.filter(col("event_id") % 2 === 0))
-        writeBatch("b2.parquet", 2000000L, ev.filter(col("event_id") % 2 =!= 0))
-        val counts = s.readStream
-          .schema("event_id LONG, ts TIMESTAMP, v LONG")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$src/*.parquet")
+        val counts = StreamOps.replayFiles(s"$root/src", Seq(
+            ev.filter(col("event_id") % 2 === 0),
+            ev.filter(col("event_id") % 2 =!= 0)))
           .select(window(col("ts"), "1 day").getField("start")
             .cast("long").as("ws"), col("v"))
           .withColumn("bucket", expr(
@@ -1267,10 +1238,8 @@ object StructureQueries {
         // buckets) and the quantile walk self-joins it — materializing
         // also detaches the plan from the memory-sink view, whose
         // attribute reuse breaks the self-join's reference dedup
-        val sketch = graft.streaming.StreamOps
-          .runToBatch(s, counts, "complete",
-            statePartitions =
-              graft.streaming.StreamOps.confStatePartitions(s))
+        val sketch = StreamOps.runToBatch(s, counts, "complete",
+            statePartitions = StreamOps.confStatePartitions(s))
           .materialized
         val est = graft.operators.QuantileSketch
           .quantilesBy(sketch, Seq("ws"), Seq(50, 95, 99))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Iterate.MaterializeOps
@@ -11,7 +12,8 @@ import graft.operators.Iterate.MaterializeOps
   * anti-joins the sidecar back out.
   *
   * Layout: parquet data files under `<table>/`, plus sidecars under
-  * `<table>/_dv/` with columns (file_path, row_index). The `_dv` dir is
+  * `<table>/_dv/`, one directory per delete call, with columns
+  * (file_path, row_index). The `_dv` dir is
   * invisible to a plain `spark.read.parquet(table)` because Spark's file
   * index hides underscore-prefixed paths — same convention as the
   * `_zonemap` sidecar (sources/ZoneMap.scala).
@@ -29,10 +31,16 @@ import graft.operators.Iterate.MaterializeOps
   * `stats` drives the rewrite decision; `materialize` is the compaction
   * that folds DVs into new files.
   *
-  * Generations compose: each delete call appends one more sidecar file;
-  * the live set is data MINUS the union of all sidecars. Deleting rows
-  * already dead is a no-op (delete evaluates its predicate on the LIVE
-  * view), so re-delivered delete predicates are idempotent.
+  * Generations compose: each delete call writes one more sidecar
+  * directory; the live set is data MINUS the union of all sidecars.
+  * Deleting rows already dead is a no-op (delete evaluates its predicate
+  * on the LIVE view), so re-delivered delete predicates are idempotent.
+  *
+  * Concurrent deletes: each call writes its generation under a hidden
+  * name only it uses and renames it into place, so two writers never
+  * share an output directory (and with it Hadoop's `_temporary/0`, where
+  * one job's commit deletes the other's uncommitted files), and a reader
+  * sees a generation whole or not at all.
   */
 object DeletionVectors {
 
@@ -45,13 +53,19 @@ object DeletionVectors {
       col("_metadata.file_path").as("_file"),
       col("_metadata.row_index").as("_pos"))
 
-  /** Union of all deletion sidecars: (_file, _pos), deduped. */
+  /** Union of all deletion sidecars: (_file, _pos), deduped. Reads every
+    * committed generation as one scan.
+    */
   def deletedPositions(spark: SparkSession, table: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dvPath(table))
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p))
-      spark.read.parquet(dvPath(table)).select("_file", "_pos").distinct()
+    val dv = new Path(dvPath(table))
+    val fs = dv.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val generations =
+      if (!fs.exists(dv)) Array.empty[String]
+      else fs.listStatus(dv)
+        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
+        .map(_.getPath.toString)
+    if (generations.nonEmpty)
+      spark.read.parquet(generations: _*).select("_file", "_pos").distinct()
     else
       spark.emptyDataFrame
         .select(lit("").as("_file"), lit(0L).as("_pos")).limit(0)
@@ -63,7 +77,7 @@ object DeletionVectors {
       .join(deletedPositions(spark, table), Seq("_file", "_pos"), "left_anti")
       .drop("_file", "_pos")
 
-  /** Mark live rows matching `predicate` deleted by appending one sidecar
+  /** Mark live rows matching `predicate` deleted by writing one sidecar
     * generation. Returns the number of rows deleted by THIS call.
     */
   def delete(spark: SparkSession, table: String, predicate: Column): Long = {
@@ -75,8 +89,15 @@ object DeletionVectors {
     // the set is small (it's a delete's output), localCheckpoint bounds it.
     val mat = doomed.materialized
     val n = mat.count()
-    if (n > 0)
-      mat.write.mode(SaveMode.Append).parquet(dvPath(table))
+    if (n > 0) {
+      val gen = java.util.UUID.randomUUID()
+      val staged = new Path(s"${dvPath(table)}/.g-$gen")
+      mat.write.parquet(staged.toString)
+      val committed = new Path(s"${dvPath(table)}/g-$gen")
+      val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(fs.rename(staged, committed),
+        s"could not commit deletion vector $committed")
+    }
     n
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.ChangeCapture
 
 /** Streaming MERGE sink — the foreachBatch upsert pattern that table
@@ -54,18 +53,13 @@ object StreamMerge {
     @volatile var latest =
       if (existing.nonEmpty) existing.max
       else { targetInit.write.mode("overwrite").parquet(s"$dir/v0"); 0L }
-    val q = changes.writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val target = s.read.parquet(s"$dir/v$latest")
-        val merged = ChangeCapture.merge(target, prepare(batch), keys, opCol)
-        merged.write.mode("overwrite").parquet(s"$dir/v${batchId + 1}")
-        latest = batchId + 1
-      }
-      .start()
-    q.awaitTermination()
+    StreamOps.drain(changes, s"$dir/_checkpoint") { (batch, batchId) =>
+      val s = batch.sparkSession
+      val target = s.read.parquet(s"$dir/v$latest")
+      val merged = ChangeCapture.merge(target, prepare(batch), keys, opCol)
+      merged.write.mode("overwrite").parquet(s"$dir/v${batchId + 1}")
+      latest = batchId + 1
+    }
     spark.read.parquet(s"$dir/v$latest")
   }
 
@@ -139,38 +133,33 @@ object StreamMerge {
     val fs = dataPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dataPath))
       bucketed(targetInit).write.partitionBy("__bucket").parquet(data)
-    val q = changes.writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val changeset = bucketed(prepare(batch))
-        val touched = changeset.select("__bucket").distinct()
-          .collect().map(_.getLong(0))
-        if (touched.nonEmpty) {
-          val slice = s.read.parquet(data)
-            .filter(col("__bucket").isin(touched: _*))
-            .drop("__bucket")
-          val merged = ChangeCapture.merge(
-            slice, changeset.drop("__bucket"), Seq(key), opCol)
-          val mergedB = bucketed(merged).persist()
-          mergedB.write
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").partitionBy("__bucket").parquet(data)
-          // Dynamic overwrite only replaces partitions PRESENT in the
-          // output: a bucket whose rows were all deleted must be
-          // removed explicitly or its stale files would survive.
-          val kept = mergedB.select("__bucket").distinct()
-            .collect().map(_.getLong(0)).toSet
-          mergedB.unpersist()
-          touched.filterNot(kept).foreach { b =>
-            fs.delete(
-              new org.apache.hadoop.fs.Path(s"$data/__bucket=$b"), true)
-          }
+    StreamOps.drain(changes, s"$dir/_checkpoint") { (batch, _) =>
+      val s = batch.sparkSession
+      val changeset = bucketed(prepare(batch))
+      val touched = changeset.select("__bucket").distinct()
+        .collect().map(_.getLong(0))
+      if (touched.nonEmpty) {
+        val slice = s.read.parquet(data)
+          .filter(col("__bucket").isin(touched: _*))
+          .drop("__bucket")
+        val merged = ChangeCapture.merge(
+          slice, changeset.drop("__bucket"), Seq(key), opCol)
+        val mergedB = bucketed(merged).persist()
+        mergedB.write
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").partitionBy("__bucket").parquet(data)
+        // Dynamic overwrite only replaces partitions PRESENT in the
+        // output: a bucket whose rows were all deleted must be
+        // removed explicitly or its stale files would survive.
+        val kept = mergedB.select("__bucket").distinct()
+          .collect().map(_.getLong(0)).toSet
+        mergedB.unpersist()
+        touched.filterNot(kept).foreach { b =>
+          fs.delete(
+            new org.apache.hadoop.fs.Path(s"$data/__bucket=$b"), true)
         }
       }
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(data).drop("__bucket")
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming variants of the engine's operators — the
@@ -280,9 +281,7 @@ object StreamOps {
         // batch, which on chained stateful queries (outer join → agg)
         // sometimes cost one whole extra drain cycle and made wall
         // time bimodal (measured 12.5 s vs 21.8 s on q235's protocol).
-        val q = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val q = writer.trigger(Trigger.AvailableNow()).start()
         try q.awaitTermination()
         finally q.stop()
       } else {
@@ -328,6 +327,58 @@ object StreamOps {
     val streamPath =
       if (f.isFile) s"${f.getParent}/{${f.getName}}" else path
     spark.readStream.schema(schema).parquet(streamPath)
+  }
+
+  /** Replays `batches` as a file stream that delivers frame `i` as
+    * micro-batch `i`: the feed of every file-fed streaming query.
+    *
+    * Each frame lands as one parquet file in its own `dir/b<i>.parquet`,
+    * and that directory and every file in it get the modification time
+    * `1000000 * (i + 1)` ms. FileStreamSource admits files in
+    * modification-time order, and `maxFilesPerTrigger = 1` admits one
+    * file per trigger, so the frames arrive one per micro-batch in the
+    * order given. The times lie in January 1970, yet `maxFileAge` (7 days
+    * by default) drops none of them: the source ages a file against the
+    * newest file it has seen, not against the clock, and these lie
+    * seconds apart.
+    *
+    * The stream's schema is the first frame's, taken from its plan, so
+    * building the stream runs no job beyond the writes (file streams make
+    * every field nullable).
+    */
+  def replayFiles(dir: String, batches: Seq[DataFrame]): DataFrame = {
+    require(batches.nonEmpty, "replayFiles needs at least one batch")
+    require(!new java.io.File(dir).exists(), s"replay dir $dir already exists")
+    batches.zipWithIndex.foreach { case (df, i) =>
+      val p = new java.io.File(s"$dir/b$i.parquet")
+      df.coalesce(1).write.parquet(p.getPath)
+      val mtime = 1000000L * (i + 1)
+      p.listFiles().foreach(_.setLastModified(mtime))
+      p.setLastModified(mtime)
+    }
+    batches.head.sparkSession.readStream.schema(batches.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$dir/*.parquet")
+  }
+
+  /** Runs `stream` to the end of its available input with
+    * `Trigger.AvailableNow`, calling `fold` on each micro-batch and its
+    * batch id, with the stream's offsets checkpointed at `checkpoint`.
+    * Returns how many micro-batches `fold` was called on.
+    */
+  def drain(stream: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): Int = {
+    val calls = new AtomicInteger()
+    val q = stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (b: DataFrame, bid: Long) =>
+        calls.incrementAndGet()
+        fold(b, bid)
+      }
+      .start()
+    try q.awaitTermination()
+    finally q.stop()
+    calls.get
   }
 
   /** Tumbling-window counts + exact decimal sums per event type. */

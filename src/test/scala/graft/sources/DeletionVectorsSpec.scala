@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -58,6 +59,30 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(out.count() == 50)
     assert(out.columns.sorted.sameElements(Array("bucket", "id", "payload")))
     assert(DeletionVectors.deletedPositions(spark, dest).count() == 0)
+  }
+
+  test("two writers deleting disjoint predicates at once both land") {
+    // both start each round together; a shared sidecar directory made
+    // them share Hadoop's _temporary/0, where one job's commit removes
+    // the other's uncommitted output
+    val preds = Seq(col("bucket") === 1, col("bucket") === 2)
+    val serial = mkTable()
+    preds.foreach(DeletionVectors.delete(spark, serial, _))
+    val want = liveIds(serial)
+    val rounds = 24
+    val pool = Executors.newFixedThreadPool(2)
+    val failed = try (1 to rounds).flatMap { round =>
+      val t = mkTable()
+      val barrier = new CyclicBarrier(2)
+      val deleted = preds.map(p => pool.submit(new Callable[Long] {
+        def call(): Long = { barrier.await(); DeletionVectors.delete(spark, t, p) }
+      })).map(f => scala.util.Try(f.get(5, TimeUnit.MINUTES)))
+      val got = liveIds(t)
+      if (deleted.forall(_.toOption.contains(25L)) && got == want) None
+      else Some(s"round $round: ${deleted.map(_.fold(_.toString.take(160), _.toString))} " +
+        s"missing ${(want -- got).size}, extra ${(got -- want).size}")
+    } finally pool.shutdownNow()
+    assert(failed.isEmpty, s"${failed.size}/$rounds rounds failed: ${failed.mkString("; ")}")
   }
 
   test("delete on a table with no DVs yet, and a no-match predicate") {

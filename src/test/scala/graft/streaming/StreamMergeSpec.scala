@@ -15,28 +15,16 @@ class StreamMergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def writeBatch(dir: String, name: String, mtime: Long,
-      rows: Seq[(Long, String, String)]): Unit = {
-    val path = s"$dir/$name"
-    rows.toDF("k", "v", "op").coalesce(1).write.parquet(path)
-    // FileStreamSource orders files by modification time; pin distinct
-    // mtimes so batch order is deterministic.
-    new File(path).listFiles().foreach(_.setLastModified(mtime))
-    new File(path).setLastModified(mtime)
-  }
+  /** One micro-batch of (k, v, op) changes per element, in order. */
+  private def replay(dir: String, batches: Seq[(Long, String, String)]*) =
+    StreamOps.replayFiles(dir, batches.map(_.toDF("k", "v", "op")))
 
   test("two microbatches apply in sequence; versioned snapshots record each step") {
     val root = java.nio.file.Files.createTempDirectory("sm-seq").toString
-    val src = s"$root/src"
-    new File(src).mkdirs()
-    writeBatch(src, "b1.parquet", 1000000L,
-      Seq((2L, "b2", "U"), (3L, "c", "I")))
-    writeBatch(src, "b2.parquet", 2000000L,
+    val changes = replay(s"$root/src",
+      Seq((2L, "b2", "U"), (3L, "c", "I")),
       Seq((1L, "-", "D"), (3L, "c2", "U")))
     val target = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val schema = target.withColumn("op", lit("")).schema
-    val changes = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$src/*.parquet")
     val out = StreamMerge.run(spark, changes, target,
         keys = Seq("k"), opCol = "op", dir = s"$root/tbl")
       .orderBy("k").as[(Long, String)].collect().toSeq
@@ -53,19 +41,15 @@ class StreamMergeSpec extends AnyFunSuite {
 
   test("restart with an intact checkpoint resumes from the latest version, not the seed") {
     val root = java.nio.file.Files.createTempDirectory("sm-resume").toString
-    val src = s"$root/src"
-    new File(src).mkdirs()
-    writeBatch(src, "b1.parquet", 1000000L, Seq((1L, "a2", "U")))
+    val changes = replay(s"$root/src", Seq((1L, "a2", "U")))
     val target = Seq((1L, "a")).toDF("k", "v")
-    val schema = target.withColumn("op", lit("")).schema
-    def stream() = spark.readStream.schema(schema).parquet(s"$src/*.parquet")
-    val first = StreamMerge.run(spark, stream(), target,
+    val first = StreamMerge.run(spark, changes, target,
         Seq("k"), "op", s"$root/tbl")
       .as[(Long, String)].collect().toSeq
     assert(first == Seq((1L, "a2")))
     // Second run, same checkpoint: no new files → no batches → the
     // result must still be the post-batch-1 state.
-    val second = StreamMerge.run(spark, stream(), target,
+    val second = StreamMerge.run(spark, changes, target,
         Seq("k"), "op", s"$root/tbl")
       .as[(Long, String)].collect().toSeq
     assert(second == Seq((1L, "a2")),
@@ -74,14 +58,9 @@ class StreamMergeSpec extends AnyFunSuite {
 
   test("time travel reads any retained version; vacuum expires old ones, never the latest") {
     val root = java.nio.file.Files.createTempDirectory("sm-ttl").toString
-    val src = s"$root/src"
-    new File(src).mkdirs()
-    writeBatch(src, "b1.parquet", 1000000L, Seq((2L, "x", "I")))
-    writeBatch(src, "b2.parquet", 2000000L, Seq((2L, "y", "U")))
+    val changes = replay(s"$root/src",
+      Seq((2L, "x", "I")), Seq((2L, "y", "U")))
     val target = Seq((1L, "a")).toDF("k", "v")
-    val schema = target.withColumn("op", lit("")).schema
-    val changes = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$src/*.parquet")
     StreamMerge.run(spark, changes, target, Seq("k"), "op", s"$root/tbl")
     assert(StreamMerge.versions(spark, s"$root/tbl") == Seq(0L, 1L, 2L))
     val atV1 = StreamMerge.snapshotAt(spark, s"$root/tbl", 1L)
@@ -100,17 +79,14 @@ class StreamMergeSpec extends AnyFunSuite {
 
   test("partitioned merge rewrites ONLY touched buckets; untouched partition files stay put") {
     val root = java.nio.file.Files.createTempDirectory("sm-part").toString
-    val src = s"$root/src"
-    new File(src).mkdirs()
     // 4 buckets over k%4; changes touch only bucket 1 (keys 1, 5) and
     // bucket 2 (keys 2, 6: delete EVERY bucket-2 row → bucket dir must
     // vanish).
-    writeBatch(src, "b1.parquet", 1000000L,
+    val changes = replay(s"$root/src",
       Seq((1L, "a2", "U"), (5L, "e", "I"), (2L, "-", "D"), (6L, "-", "D")))
     val target = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (6L, "f"))
       .toDF("k", "v")
     val schema = target.withColumn("op", lit("")).schema
-    val changes = spark.readStream.schema(schema).parquet(s"$src/*.parquet")
     def partFiles(b: Long): Set[(String, Long)] = {
       val d = new File(s"$root/tbl/data/__bucket=$b")
       if (!d.exists()) Set.empty

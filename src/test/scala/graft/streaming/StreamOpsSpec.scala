@@ -248,17 +248,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // second is a data batch in whose execution the closed outer
     // state is evicted and emitted (the final no-data flush batch
     // races processAllAvailable; a data batch does not).
-    val dir = java.nio.file.Files.createTempDirectory("graft-outer-ij").toString
-    def ev(rows: Seq[(Long, Long, String, String, Double)], f: String): Unit = {
-      val p = s"$dir/$f"
+    val dir = java.nio.file.Files.createTempDirectory("graft-outer-ij").toString + "/src"
+    def ev(rows: Seq[(Long, Long, String, String, Double)]) =
       rows.toDF("event_id", "user_id", "event_type", "ts_s", "value")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(p)
-      val mtime = f.stripSuffix(".parquet").last.asDigit * 1000000L
-      new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-      new java.io.File(p).setLastModified(mtime)
-    }
-    ev(Seq(
+    val raw = StreamOps.replayFiles(dir, Seq(ev(Seq(
       (1L, 1L, "click", "2024-01-01 00:00:00", 0.0),
       (2L, 1L, "purchase", "2024-01-01 00:30:00", 5.0),
       (3L, 2L, "click", "2024-01-01 00:00:00", 0.0),
@@ -269,11 +263,11 @@ class StreamOpsSpec extends AnyFunSuite {
       // only if the carrier rows genuinely reach the watermark
       // operators (an in-stream post-join filter would silently kill
       // them at the scan via pushdown; see q225's comment)
-      (6L, 4L, "click", "2024-01-01 02:00:00", 0.0)), "a1.parquet")
-    ev(Seq((-1L, -1L, "click", "2030-01-01 00:00:00", 0.0),
-      (-2L, -1L, "purchase", "2030-01-01 00:00:00", 0.0)), "a2.parquet")
-    ev(Seq((-1L, -1L, "click", "2030-02-01 00:00:00", 0.0),
-      (-2L, -1L, "purchase", "2030-02-01 00:00:00", 0.0)), "a3.parquet")
+      (6L, 4L, "click", "2024-01-01 02:00:00", 0.0))),
+      ev(Seq((-1L, -1L, "click", "2030-01-01 00:00:00", 0.0),
+        (-2L, -1L, "purchase", "2030-01-01 00:00:00", 0.0))),
+      ev(Seq((-1L, -1L, "click", "2030-02-01 00:00:00", 0.0),
+        (-2L, -1L, "purchase", "2030-02-01 00:00:00", 0.0)))))
     def split(raw: org.apache.spark.sql.DataFrame) = (
       raw.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -281,10 +275,6 @@ class StreamOpsSpec extends AnyFunSuite {
       raw.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
           col("ts").as("p_ts")))
-    val raw = spark.readStream
-      .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/*.parquet")
     val (c, p) = split(raw)
     val streamed = StreamOps.runToBatch(spark,
       StreamOps.intervalJoin(
@@ -327,16 +317,10 @@ class StreamOpsSpec extends AnyFunSuite {
     // holds on any engine whose late filter lags eviction by one
     // trigger; this test pins both: the allowance run and the
     // below-allowance run must BOTH land all 11 windows here.
-    val dir = java.nio.file.Files.createTempDirectory("graft-outer-chain").toString
-    def ev(rows: Seq[(Long, Long, String, String, Double)], f: String): Unit = {
-      val p = s"$dir/$f"
+    val dir = java.nio.file.Files.createTempDirectory("graft-outer-chain").toString + "/src"
+    def ev(rows: Seq[(Long, Long, String, String, Double)]) =
       rows.toDF("event_id", "user_id", "event_type", "ts_s", "value")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(p)
-      val mtime = f.stripSuffix(".parquet").last.asDigit * 1000000L
-      new java.io.File(p).listFiles().foreach(_.setLastModified(mtime))
-      new java.io.File(p).setLastModified(mtime)
-    }
     val clicks = (0 until 11).map { i =>
       val m = i * 10
       (i.toLong, 100L + i, "click",
@@ -344,23 +328,17 @@ class StreamOpsSpec extends AnyFunSuite {
     }
     // 2-batch compressed replay + three carriers (join eviction batch,
     // agg eviction batch, final flush race cover — the q235 protocol)
-    ev(clicks.take(6), "b1.parquet")
-    ev(clicks.drop(6), "b2.parquet")
     def carrier(ts: String) = Seq(
       (-1L, -1L, "click", ts, 0.0), (-2L, -1L, "purchase", ts, 0.0))
-    ev(carrier("2030-01-01 00:00:00"), "b3.parquet")
-    ev(carrier("2030-02-01 00:00:00"), "b4.parquet")
-    ev(carrier("2030-03-01 00:00:00"), "b5.parquet")
+    val raw = StreamOps.replayFiles(dir, Seq(clicks.take(6), clicks.drop(6),
+      carrier("2030-01-01 00:00:00"), carrier("2030-02-01 00:00:00"),
+      carrier("2030-03-01 00:00:00")).map(ev))
 
     val joinWithinSec = 20L * 60 // 20-minute attribution window
     val replaySpanSec = 100L * 60 // the backlog's event-time span
     def run(delaySec: Long): Set[(String, Long)] = {
       val ck = java.nio.file.Files
         .createTempDirectory("graft-outer-chain-ck").toString
-      val raw = spark.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/*.parquet")
       val c = raw.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
@@ -650,6 +628,68 @@ class StreamOpsSpec extends AnyFunSuite {
       assert(out.as[(Long, Long)].collect().sorted sameElements
         batch.as[(Long, Long)].collect().sorted)
       assert(out.filter(col("n") > 5L).count() == 5L)
+    }
+  }
+
+  private val replayFrames = Seq(
+    Seq((3L, "c")),
+    Seq((1L, "a"), (2L, "b")),
+    Seq((9L, "z"), (8L, "y"), (7L, "x")))
+
+  test("replayFiles + drain: three frames arrive as three micro-batches in landing order") {
+    graft.queries.Scratch.using("replay-order") { root =>
+      val frames = replayFrames.map(_.toDF("id", "tag"))
+      val stream = StreamOps.replayFiles(s"$root/src", frames)
+      // catalogString leaves nullability out: file streams force nullable
+      assert(stream.schema.catalogString == frames.head.schema.catalogString)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[(Long, String)])]
+      val n = StreamOps.drain(stream, s"$root/ck") { (b, bid) =>
+        seen.add((bid, b.as[(Long, String)].collect().toSet))
+      }
+      assert(n == 3)
+      assert(seen.toArray.toSeq ==
+        replayFrames.map(_.toSet).zipWithIndex.map { case (rows, i) => (i.toLong, rows) })
+    }
+  }
+
+  test("replayFiles runs no job beyond writing its frames") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(jobs.add)
+    }
+    def described(d: String)(body: => Unit): Unit = {
+      sc.setJobDescription(d)
+      try body finally sc.setJobDescription(null)
+    }
+    graft.queries.Scratch.using("replay-jobs") { root =>
+      val frames = replayFrames.map(_.toDF("id", "tag"))
+      sc.addSparkListener(listener)
+      try {
+        described("replay-direct")(frames.zipWithIndex.foreach { case (f, i) =>
+          f.coalesce(1).write.parquet(s"$root/direct/$i")
+        })
+        described("replay-stream")(StreamOps.replayFiles(s"$root/src", frames))
+        // the listener queue delivers in post order: once the marker job
+        // is seen, every job before it has been counted
+        described("replay-marker")(spark.range(1).count())
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!jobs.contains("replay-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(jobs.contains("replay-marker"))
+      } finally sc.removeSparkListener(listener)
+      def count(d: String) = jobs.toArray.count(_ == d)
+      assert(count("replay-direct") == frames.size)
+      assert(count("replay-stream") == count("replay-direct"))
+    }
+  }
+
+  test("replayFiles rejects an empty batch list and an existing directory") {
+    graft.queries.Scratch.using("replay-reject") { root =>
+      intercept[IllegalArgumentException](StreamOps.replayFiles(s"$root/src", Seq.empty))
+      intercept[IllegalArgumentException](
+        StreamOps.replayFiles(root, Seq(Seq(1L).toDF("id"))))
     }
   }
 }
