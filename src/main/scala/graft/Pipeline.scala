@@ -37,8 +37,8 @@ object Pipeline {
       outputPath: String,
       topX: Int = 5,
       logSamples: Boolean = false): DataFrame = {
-    val dataA = spark.read.parquet(dataAPath)
-    val dataB = spark.read.parquet(dataBPath)
+    val dataA = Parquet.read(spark, dataAPath)
+    val dataB = Parquet.read(spark, dataBPath)
     val params = Map[String, Any]("topX" -> topX)
 
     val top = AggregationRegistry.create(AggregationRegistry.TopItems)(dataA, dataB, params)
@@ -54,7 +54,7 @@ object Pipeline {
       .mode("overwrite")
       .option("compression", "snappy")
       .parquet(outputPath)
-    spark.read.parquet(outputPath)
+    Parquet.read(spark, outputPath)
   }
 
   def main(args: Array[String]): Unit = {

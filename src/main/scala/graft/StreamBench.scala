@@ -91,7 +91,7 @@ object StreamBench {
     streaming.StreamOps.withRocksDbStateStore(spark) {
       val t0 = System.nanoTime()
       val src = spark.readStream
-        .schema(spark.read.parquet(s"$work/in").schema)
+        .schema(Parquet.schema(spark, s"$work/in"))
         .option("maxFilesPerTrigger", math.max(1, nFiles / batches))
         .parquet(s"$work/in")
         .withWatermark("ts", "10 minutes")
@@ -143,7 +143,7 @@ object StreamBench {
       (s, b, idx) => {
         // verification needs candidate text; the staged corpus is a
         // superset of delivered history, which is all the verify joins
-        val allDocs = s.read.parquet(
+        val allDocs = Parquet.read(s,
           new java.io.File(idx).getParent + "/in")
         val t0 = System.nanoTime()
         val pairs = graft.llm.MinHashIndex.incrementalNearDupPairs(s,
@@ -466,7 +466,7 @@ object StreamBench {
     val wall = (System.nanoTime() - t0) / 1e9
     val progress = q.recentProgress.toSeq
     val inputRows = progress.map(_.numInputRows).sum
-    val admitted = spark.read.parquet(s"$work/admitted")
+    val admitted = Parquet.read(spark, s"$work/admitted")
       .drop("batch").count()
     require(admitted > 0 && admitted < inputRows,
       s"quota gate did no work: admitted=$admitted of $inputRows")
@@ -528,7 +528,7 @@ object StreamBench {
     val total = if (corpusMode == "zipf") {
       graft.tools.ScaleProof.synthesizeZipfDocs(
         spark, s"$work/zipfsrc", targetDocs)
-      spark.read.parquet(s"$work/zipfsrc/documents.parquet")
+      Parquet.read(spark, s"$work/zipfsrc/documents.parquet")
         .select("doc_id", "text")
         .repartition(nFiles).write.mode("overwrite").parquet(s"$work/in")
       targetDocs
@@ -545,7 +545,7 @@ object StreamBench {
     // corpus (family mode's prove only reads the assignment anyway);
     // replica mode keeps the base table (span's cleanse contract)
     val proveDocs = if (corpusMode == "zipf")
-      spark.read.parquet(s"$work/zipfsrc/documents.parquet")
+      Parquet.read(spark, s"$work/zipfsrc/documents.parquet")
         .select("doc_id", "text")
     else baseDocs
     val idx = s"$work/idx"

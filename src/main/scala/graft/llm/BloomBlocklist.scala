@@ -4,6 +4,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+import graft.Parquet
 
 /** Persisted Bloom blocklist — the shippable form of a decontamination
   * list. A benchmark/blocklist corpus is summarized ONCE into a Bloom
@@ -54,7 +55,7 @@ object BloomBlocklist {
       .select(explode(shingleHashes(col(textCol), n)).as("h"))
       .distinct()
     hashes.write.mode("overwrite").parquet(s"$path/hashes")
-    val bf = spark.read.parquet(s"$path/hashes").stat
+    val bf = Parquet.read(spark, s"$path/hashes").stat
       .bloomFilter("h", expectedItems, fpp)
     val p = new org.apache.hadoop.fs.Path(s"$path/bloom.bin")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -95,7 +96,7 @@ object BloomBlocklist {
     val flagged = withHits.filter(size(col("__hits")) > 0)
       .select(col(idCol), explode(col("__hits")).as("h"))
     val confirmed = flagged
-      .join(spark.read.parquet(s"$path/hashes"), Seq("h"), "left_semi")
+      .join(Parquet.read(spark, s"$path/hashes"), Seq("h"), "left_semi")
       .groupBy(idCol)
       .agg(count(lit(1)).as("__n_confirmed"))
     withHits

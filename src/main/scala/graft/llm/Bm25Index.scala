@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 
 /** Persisted incremental inverted index for [[Bm25]] retrieval — the
   * lexical-search member of the persisted-index tier
@@ -51,7 +52,7 @@ object Bm25Index {
   private def unionThrough(spark: SparkSession, log: IndexLog.Log, v: Int,
       t: String): Option[DataFrame] =
     log.entries.filter(_.version <= v).flatMap(_.adds.get(t))
-      .map(spark.read.parquet(_)).reduceOption(_ unionByName _)
+      .map(Parquet.read(spark, _)).reduceOption(_ unionByName _)
 
   /** The postings and lengths through version `v`, minus the
     * tombstoned dids (the tombstones are read once for both).
@@ -83,8 +84,8 @@ object Bm25Index {
     val dirs = Seq("post", "dlen", "stats", "df").map(t => t -> log.newDir(t)).toMap
     tf.write.parquet(dirs("post"))
     len.write.parquet(dirs("dlen"))
-    val (df, stats) = merge(spark.read.parquet(dirs("post")),
-      spark.read.parquet(dirs("dlen")))
+    val (df, stats) = merge(Parquet.read(spark, dirs("post")),
+      Parquet.read(spark, dirs("dlen")))
     stats.write.parquet(dirs("stats"))
     df.write.parquet(dirs("df"))
     log.propose(log.nextVersion, kind, dirs)
@@ -139,9 +140,9 @@ object Bm25Index {
       val (tf, len) = Bm25.postings(cached, idCol, textCol)
       writeFold(log, "add", tf, len) { (tfW, lenW) =>
         val (df, stats) = batchAggregates(tfW, lenW)
-        (df.unionByName(spark.read.parquet(h.adds("df")))
+        (df.unionByName(Parquet.read(spark, h.adds("df")))
           .groupBy("t").agg(sum("df").as("df")),
-          stats.unionByName(spark.read.parquet(h.adds("stats")))
+          stats.unionByName(Parquet.read(spark, h.adds("stats")))
             .agg(sum("n_docs").as("n_docs"),
               sum("total_len").as("total_len")))
       }
@@ -173,8 +174,8 @@ object Bm25Index {
     // (batches are doc-disjoint); directories no entry names are never
     // read
     val (tf, len) = liveThrough(spark, log, v)
-    Bm25.withEmpty(Bm25.score(tf, len, spark.read.parquet(at.adds("df")),
-        spark.read.parquet(at.adds("stats")), queries, k),
+    Bm25.withEmpty(Bm25.score(tf, len, Parquet.read(spark, at.adds("df")),
+        Parquet.read(spark, at.adds("stats")), queries, k),
       queries, emitEmpty)
   }
 
@@ -215,12 +216,12 @@ object Bm25Index {
         val dfDelta = unionThrough(spark, log, h.version, "post").get
           .join(target, Seq("did"), "semi")
           .groupBy("t").agg(count(lit(1)).as("ddf"))
-        val newDf = spark.read.parquet(h.adds("df"))
+        val newDf = Parquet.read(spark, h.adds("df"))
           .join(dfDelta, Seq("t"), "left")
           .select(col("t"),
             (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
           .filter(col("df") > 0)
-        val newStats = spark.read.parquet(h.adds("stats"))
+        val newStats = Parquet.read(spark, h.adds("stats"))
           .crossJoin(lens.join(target, Seq("did"), "semi")
             .agg(count(lit(1)).as("dn"),
               coalesce(sum("len"), lit(0L)).as("dl")))
@@ -270,8 +271,8 @@ object Bm25Index {
       val dirs = Seq("post", "dlen", "stats", "df").map(t => t -> succ.newDir(t)).toMap
       tf.coalesce(targetFiles).write.parquet(dirs("post"))
       len.coalesce(targetFiles).write.parquet(dirs("dlen"))
-      spark.read.parquet(h.adds("stats")).coalesce(1).write.parquet(dirs("stats"))
-      spark.read.parquet(h.adds("df")).coalesce(targetFiles).write.parquet(dirs("df"))
+      Parquet.read(spark, h.adds("stats")).coalesce(1).write.parquet(dirs("stats"))
+      Parquet.read(spark, h.adds("df")).coalesce(targetFiles).write.parquet(dirs("df"))
       succ.propose(1, "build", dirs)
     }
   }

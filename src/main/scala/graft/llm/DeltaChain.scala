@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 
 /** Delta-composed version chain — the shared layout that replaces the
   * copy-on-write fold for the exact-index family ([[LineDedupIndex]],
@@ -113,7 +114,7 @@ object DeltaChain {
     }.version
 
   private def segmentsOf(spark: SparkSession, c: Capture): Seq[DataFrame] =
-    (c.base.toSeq ++ c.deltas).map(e => spark.read.parquet(e.adds.values.head))
+    (c.base.toSeq ++ c.deltas).map(e => Parquet.read(spark, e.adds.values.head))
 
   private def sumOf(segs: Seq[DataFrame], keys: Seq[String],
       cnt: String): DataFrame = {

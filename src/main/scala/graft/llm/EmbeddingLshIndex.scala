@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Parquet
 import graft.functions.VectorFunctions
 import graft.operators.BucketCaps
 import graft.operators.Iterate.MaterializeOps
@@ -97,7 +98,7 @@ object EmbeddingLshIndex {
       if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
         None
       else {
-        val r = spark.read.parquet(s"$path/_geom").head()
+        val r = Parquet.read(spark, s"$path/_geom").head()
         val g = Geometry(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
         geomCache.put(path, g)
         Some(g)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Persisted incremental duplicate-FAMILY index — the connected-
@@ -138,10 +139,10 @@ object FamilyIndex {
       c: DeltaChain.Capture): DataFrame = {
     val b = c.base.getOrElse(
       throw new IllegalStateException(s"no FamilyIndex at $path"))
-    val base = spark.read.parquet(b.adds("base"))
+    val base = Parquet.read(spark, b.adds("base"))
     if (c.deltas.isEmpty) base
     else {
-      val deltas = c.deltas.map(e => spark.read.parquet(e.adds("delta")))
+      val deltas = c.deltas.map(e => Parquet.read(spark, e.adds("delta")))
       val rows = (base +: deltas.map(_.filter(col("kind") === "new")
         .select("id", "family"))).reduce(_ unionByName _)
       val remaps = deltas.map(_.filter(col("kind") === "remap")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 
 /** The band-key index wing on the commit log ([[IndexLog]]):
   * [[MinHashIndex]], [[SimHashIndex]], [[WinnowIndex]] and
@@ -80,7 +81,7 @@ object IndexMaintenance {
   def scan(spark: SparkSession, log: IndexLog.Log, table: String): DataFrame = {
     val dirs = log.live(table)
     require(dirs.nonEmpty, s"no $table table in the index at ${log.root}")
-    spark.read.parquet(dirs: _*)
+    Parquet.read(spark, dirs: _*)
   }
 
   /** The tombstone table `table` of the snapshot `log`, or None when
@@ -88,7 +89,7 @@ object IndexMaintenance {
     */
   def tombstones(spark: SparkSession, log: IndexLog.Log,
       table: String = Dels): Option[DataFrame] =
-    Some(log.live(table)).filter(_.nonEmpty).map(spark.read.parquet(_: _*))
+    Some(log.live(table)).filter(_.nonEmpty).map(Parquet.read(spark, _: _*))
 
   /** [[scan]] of `table` minus the snapshot's tombstoned ids. */
   def live(spark: SparkSession, log: IndexLog.Log, table: String): DataFrame = {

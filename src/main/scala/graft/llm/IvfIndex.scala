@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.functions.VectorFunctions
 import graft.operators.TopK
 import graft.sources.PartitionedSink
@@ -77,7 +78,7 @@ object IvfIndex {
     * model, not the data).
     */
   def loadCentroids(spark: SparkSession, path: String): Seq[Array[Long]] =
-    spark.read.parquet(s"$path/_model").orderBy("cell").collect()
+    Parquet.read(spark, s"$path/_model").orderBy("cell").collect()
       .map(_.getSeq[Long](1).toArray).toSeq
 
   /** Top-k cosine neighbors for every row of `queries`, probing each
@@ -106,7 +107,7 @@ object IvfIndex {
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
         explode(slice(array_sort(cellArr), 1, nprobe)).as("probe"))
       .select(col("query_id"), col("qv"), col("probe.c").as("cell"))
-    val index0 = spark.read.parquet(path)
+    val index0 = Parquet.read(spark, path)
     // tombstoned vectors leave the candidate space (see [[forget]]);
     // the sidecar keys on "id", the index on the caller's idCol
     val index = IndexMaintenance.tombstones(spark, IndexLog.read(path))
@@ -141,13 +142,13 @@ object IvfIndex {
     */
   def compact(spark: SparkSession, path: String, outPath: String,
       idCol: String = "vec_id"): Unit = {
-    val t = spark.read.parquet(path)
+    val t = Parquet.read(spark, path)
     val live = IndexMaintenance.tombstones(spark, IndexLog.read(path))
       .map(dd => t.join(
         broadcast(dd.withColumnRenamed("id", idCol)), Seq(idCol), "left_anti"))
       .getOrElse(t)
     PartitionedSink.writePartitioned(live, outPath, Seq("cell"))
-    spark.read.parquet(s"$path/_model").coalesce(1)
+    Parquet.read(spark, s"$path/_model").coalesce(1)
       .write.mode("overwrite").parquet(s"$outPath/_model")
   }
 }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Persisted MinHash band-key index — near-dup detection as an
@@ -87,7 +88,7 @@ object MinHashIndex {
       // is a CORRUPT sidecar, and must fail with a diagnosis, not a
       // bare NoSuchElementException (and never a silent fallback to
       // call-site defaults, the recall collapse this sidecar prevents)
-      val r = spark.read.parquet(s"$path/_geom").collect().headOption
+      val r = Parquet.read(spark, s"$path/_geom").collect().headOption
         .getOrElse(throw new IllegalStateException(
           s"corrupt _geom sidecar at $path/_geom: directory exists but " +
             "holds no geometry row (interrupted index build?) — rebuild " +

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Exact-integer multinomial Naive Bayes over whitespace tokens — the
@@ -97,8 +98,8 @@ object NaiveBayes {
   /** Load a persisted model. */
   def load(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/classes"),
-      spark.read.parquet(s"$path/tokens"))
+    (Parquet.read(spark, s"$path/classes"),
+      Parquet.read(spark, s"$path/tokens"))
 
   /** Per-(doc, class) total surprisal: (idCol, label, score_bits) —
     * the raw scoring surface. Two-class callers turn this into a

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Persisted SimHash multi-index — Hamming-radius near-dup detection as
@@ -47,7 +48,7 @@ object SimHashIndex {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
-      val r = spark.read.parquet(p.toString).head()
+      val r = Parquet.read(spark, p.toString).head()
       Some((r.getAs[Int]("radius"), r.getAs[Int]("blocks")))
     }
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.llm.{DatasetSplit, SequencePack}
@@ -713,7 +714,7 @@ object LakehouseQueries {
         val newBatch = dd.filter(col("doc_id") >= 250)
           .groupBy("source")
           .agg(expr("hll_sketch_agg(text)").as("sk"))
-        val merged = s.read.parquet(s"$dir/sketches")
+        val merged = Parquet.read(s, s"$dir/sketches")
           .unionByName(newBatch)
           .groupBy("source")
           .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_merged"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.Tables
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.llm.{EmbeddingKnn, JaccardVerify, MinHashDedup, NGramJaccard, ProductQuantization, SimHashDedup, SpanDedup}
@@ -1844,7 +1845,7 @@ object LlmQueries {
         // probes, so the pairs table may not exist
         val pairs =
           if (new java.io.File(s"$root/pairs").exists())
-            s.read.parquet(s"$root/pairs")
+            Parquet.read(s, s"$root/pairs")
           else s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType.fromDDL(
@@ -3860,7 +3861,7 @@ object LlmQueries {
           else PHashIndex.append(h, idx)
         }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
-        s.read.parquet(decisions)
+        Parquet.read(s, decisions)
           .withColumn("n_batches", lit(2L))
           .orderBy("id_a", "id_b")
       },
@@ -3977,7 +3978,7 @@ object LlmQueries {
           else EmbeddingLshIndex.append(batch, idx)
         }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
-        s.read.parquet(decisions)
+        Parquet.read(s, decisions)
           .withColumn("n_batches", lit(2L))
           .orderBy("id_a", "id_b")
       },
@@ -4081,7 +4082,7 @@ object LlmQueries {
             .write.mode("append").parquet(admitted)
         }
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
-        s.read.parquet(admitted)
+        Parquet.read(s, admitted)
           .withColumn("n_batches", lit(2L))
           .orderBy("vec_id")
       },
@@ -4368,7 +4369,7 @@ object LlmQueries {
         q.awaitTermination()
         val nBatches = q.recentProgress.count(_.numInputRows > 0)
         require(nBatches == 2, s"expected two microbatches, saw $nBatches")
-        s.read.parquet(admitted)
+        Parquet.read(s, admitted)
           .withColumn("n_batches", lit(2L))
           .orderBy("source", "doc_id")
       },
@@ -4417,7 +4418,7 @@ object LlmQueries {
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
         require(batchDirs == 2, s"expected two delivered microbatches")
-        s.read.parquet(s"$root/state")
+        Parquet.read(s, s"$root/state")
           .select(col("source"), col("batch").cast("long").as("batch"),
             col("n_input"), col("consumed"), col("closed"))
           .orderBy("source", "batch")
@@ -5128,7 +5129,7 @@ object LlmQueries {
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
         require(batches == 4, s"expected 4 delivered microbatches, got $batches")
-        s.read.parquet(s"$root/out")
+        Parquet.read(s, s"$root/out")
           .select(col("doc_id"), col("bucket"), col("warc_type"),
             col("target_uri"), col("content_length"), col("text"))
           .orderBy("doc_id")
@@ -5422,7 +5423,7 @@ object LlmQueries {
               "decode_charset(h.body, element_at(h.headers, " +
                 "'content-type')).text")).as("text"))
           .write.mode("overwrite").parquet(s"$root/corpus")
-        val corpus = s.read.parquet(s"$root/corpus")
+        val corpus = Parquet.read(s, s"$root/corpus")
         val gated = graft.llm.TextPipeline.qualityFilter(corpus, "text")
         val exact = Dedup.exactByContent(gated, "doc_id", Seq("text"))
         val pairs = NGramJaccard
@@ -5495,7 +5496,7 @@ object LlmQueries {
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
         require(batches == 4, s"expected 4 delivered microbatches, got $batches")
-        val corpus = s.read.parquet(s"$root/corpus")
+        val corpus = Parquet.read(s, s"$root/corpus")
           .select("doc_id", "text")
         val gated = graft.llm.TextPipeline.qualityFilter(corpus, "text")
         val exact = Dedup.exactByContent(gated, "doc_id", Seq("text"))
@@ -6002,7 +6003,7 @@ object LlmQueries {
           .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
           .getOrElse(0)
         require(batches == 4, s"expected 4 delivered microbatches, got $batches")
-        s.read.parquet(s"$root/out")
+        Parquet.read(s, s"$root/out")
           .select(col("doc_id"), col("mime"), col("route"), col("text_out"),
             col("skip_reason"))
           .orderBy("doc_id")
@@ -6530,7 +6531,7 @@ object LlmQueries {
         }
         require(FrontierIndex.latestVersion(idx).contains(2),
           "expected two delivered frontier microbatches")
-        val landed = s.read.parquet(s"$root/admitted")
+        val landed = Parquet.read(s, s"$root/admitted")
           .select(col("doc_id"), col("bid"))
         // re-crawl tier: forget exact URLs and one whole host
         FrontierIndex.forgetUrls(
@@ -7325,7 +7326,7 @@ object LlmQueries {
             // just the addBatch write.
             graft.llm.IndexMaintenance.foldOnce(bid,
                 FamilyIndex.latestVersion(fam)) {
-              val delivered = s.read.parquet(s"$src/*.parquet")
+              val delivered = Parquet.read(s, s"$src/*.parquet")
               val pairs = MinHashIndex.incrementalNearDupPairs(s, mh, b,
                 delivered, "doc_id", "text", threshold = 0.5)
               FamilyIndex.addBatch(s, fam, pairs)
@@ -7495,7 +7496,7 @@ object LlmQueries {
             .listFiles()).map(_.count(f =>
           f.isDirectory && f.getName.startsWith("batch="))).getOrElse(0)
         require(committedBatches == 2, "expected two delivered microbatches")
-        s.read.parquet(s"$root/admitted").drop("batch")
+        Parquet.read(s, s"$root/admitted").drop("batch")
           .withColumn("n_batches", lit(2L))
           .orderBy("doc_id")
       },

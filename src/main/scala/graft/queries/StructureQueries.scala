@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.operators.{CountMin, LabelPropagation, Skyline}
@@ -171,7 +172,7 @@ object StructureQueries {
           .agg(max("rho").as("max_rho"))
         val segPath = graft.queries.Scratch.dir("graft-q193-sk") + "/seg"
         seg.write.parquet(segPath)
-        val merged = s.read.parquet(segPath)
+        val merged = Parquet.read(s, segPath)
           .groupBy("lang", "register").agg(max("max_rho").as("max_rho"))
         val summary = merged.groupBy("lang").agg(
           count(lit(1)).as("n_occupied"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.util.sketch.BloomFilter
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Per-file Bloom-filter data skipping — the POINT-LOOKUP sibling of
@@ -50,7 +51,7 @@ object BloomSkip {
       expectedItemsPerFile: Long = 1000000L,
       fpp: Double = 0.01): DataFrame = {
     val bits = BloomFilter.optimalNumOfBits(expectedItemsPerFile, fpp)
-    spark.read.parquet(tableDir)
+    Parquet.read(spark, tableDir)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         bloomAgg(col(c), expectedItemsPerFile, bits).as("bloom"))
@@ -63,7 +64,7 @@ object BloomSkip {
       .write.mode("overwrite").parquet(sidecar(tableDir, c))
 
   def manifest(spark: SparkSession, tableDir: String, c: String): DataFrame =
-    spark.read.parquet(sidecar(tableDir, c))
+    Parquet.read(spark, sidecar(tableDir, c))
 
   /** Incremental manifest maintenance — [[ZoneMap.append]]'s contract
     * for the Bloom sidecar: scan ONLY data files missing from the
@@ -86,7 +87,7 @@ object BloomSkip {
       .map(_.getPath.toString)
     if (freshFiles.isEmpty) return 0
     val bits = BloomFilter.optimalNumOfBits(expectedItemsPerFile, fpp)
-    val added = spark.read.parquet(freshFiles: _*)
+    val added = Parquet.read(spark, freshFiles: _*)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         bloomAgg(col(c), expectedItemsPerFile, bits).as("bloom"))
@@ -126,8 +127,8 @@ object BloomSkip {
     val files = candidateFiles(spark, tableDir, c, keys)
     val base =
       if (files.isEmpty)
-        spark.read.parquet(tableDir).limit(0)
-      else spark.read.parquet(files: _*)
+        Parquet.read(spark, tableDir).limit(0)
+      else Parquet.read(spark, files: _*)
     base.filter(col(c).isin(keys: _*))
   }
 }

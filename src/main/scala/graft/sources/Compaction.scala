@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.Parquet
 
 /** Small-file parquet compaction — the reference repo's namesake
   * operation ("Parquet-combiner": read many parquet files, write few;
@@ -72,7 +73,7 @@ object Compaction {
       sortCols: Seq[String] = Seq.empty): Stats = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val (filesBefore, bytesBefore) = inventory(spark, inDir)
-    val df = spark.read.parquet(inDir)
+    val df = Parquet.read(spark, inDir)
     val n = math.max(1L, (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt
     val shaped =
       if (sortCols.nonEmpty)

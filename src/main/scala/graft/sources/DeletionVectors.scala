@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Position-based row-level deletes WITHOUT rewriting data files — the
@@ -48,7 +49,7 @@ object DeletionVectors {
 
   /** Data rows + stable addressing columns (_file, _pos). */
   private def withPos(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(table).select(
+    Parquet.read(spark, table).select(
       col("*"),
       col("_metadata.file_path").as("_file"),
       col("_metadata.row_index").as("_pos"))
@@ -65,7 +66,7 @@ object DeletionVectors {
         .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
         .map(_.getPath.toString)
     if (generations.nonEmpty)
-      spark.read.parquet(generations: _*).select("_file", "_pos").distinct()
+      Parquet.read(spark, generations: _*).select("_file", "_pos").distinct()
     else
       spark.emptyDataFrame
         .select(lit("").as("_file"), lit(0L).as("_pos")).limit(0)

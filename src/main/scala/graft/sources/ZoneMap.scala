@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Manifest-level data skipping — zone maps over a parquet table's
@@ -37,7 +38,7 @@ object ZoneMap {
     require(cols.nonEmpty, "track at least one column")
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(tableDir)
+    Parquet.read(spark, tableDir)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
   }
@@ -48,7 +49,7 @@ object ZoneMap {
       .write.mode("overwrite").parquet(s"$tableDir/_zonemap")
 
   def manifest(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(s"$tableDir/_zonemap")
+    Parquet.read(spark, s"$tableDir/_zonemap")
 
   /** Incremental manifest maintenance: scan ONLY the data files that are
     * not in the manifest yet (an append's new part files) and fold their
@@ -78,7 +79,7 @@ object ZoneMap {
     if (fresh.isEmpty) return 0
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val added = spark.read.parquet(fresh: _*)
+    val added = Parquet.read(spark, fresh: _*)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
     cur.unionByName(added)
@@ -132,8 +133,8 @@ object ZoneMap {
       .map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
       .reduce(_ && _)
     if (files.isEmpty)
-      spark.read.parquet(tableDir).filter(lit(false))
+      Parquet.read(spark, tableDir).filter(lit(false))
     else
-      spark.read.parquet(files: _*).filter(pred)
+      Parquet.read(spark, files: _*).filter(pred)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Parquet
 import graft.operators.ChangeCapture
 
 /** Streaming MERGE sink — the foreachBatch upsert pattern that table
@@ -55,12 +56,12 @@ object StreamMerge {
       else { targetInit.write.mode("overwrite").parquet(s"$dir/v0"); 0L }
     StreamOps.drain(changes, s"$dir/_checkpoint") { (batch, batchId) =>
       val s = batch.sparkSession
-      val target = s.read.parquet(s"$dir/v$latest")
+      val target = Parquet.read(s, s"$dir/v$latest")
       val merged = ChangeCapture.merge(target, prepare(batch), keys, opCol)
       merged.write.mode("overwrite").parquet(s"$dir/v${batchId + 1}")
       latest = batchId + 1
     }
-    spark.read.parquet(s"$dir/v$latest")
+    Parquet.read(spark, s"$dir/v$latest")
   }
 
   /** Versions currently present under `dir`, ascending. */
@@ -81,7 +82,7 @@ object StreamMerge {
     require(vs.nonEmpty, s"no snapshots under $dir")
     val v = if (version < 0) vs.max else version
     require(vs.contains(v), s"version $v not present (have ${vs.mkString(",")})")
-    spark.read.parquet(s"$dir/v$v")
+    Parquet.read(spark, s"$dir/v$v")
   }
 
   /** Expire old snapshots, keeping the `keepLast` most recent (at least
@@ -139,7 +140,7 @@ object StreamMerge {
       val touched = changeset.select("__bucket").distinct()
         .collect().map(_.getLong(0))
       if (touched.nonEmpty) {
-        val slice = s.read.parquet(data)
+        val slice = Parquet.read(s, data)
           .filter(col("__bucket").isin(touched: _*))
           .drop("__bucket")
         val merged = ChangeCapture.merge(
@@ -160,6 +161,6 @@ object StreamMerge {
         }
       }
     }
-    spark.read.parquet(data).drop("__bucket")
+    Parquet.read(spark, data).drop("__bucket")
   }
 }

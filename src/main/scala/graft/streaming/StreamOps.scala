@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
+import graft.Parquet
 
 /** Structured Streaming variants of the engine's operators — the
   * capability surface the reference only designed (`design.pdf` pp.1-2:
@@ -310,7 +311,7 @@ object StreamOps {
   def confStatePartitions(spark: SparkSession, default: Int = 8): Option[Int] =
     Some(spark.conf.get("graft.statePartitions", default.toString).toInt)
 
-  /** File-source stream over one parquet table (schema from a batch peek,
+  /** File-source stream over one parquet table (schema from one footer, [[Parquet.schema]],
     * as file streams require an explicit schema). Works for both directory
     * tables and single-file tables: for a non-glob path FileStreamSource
     * force-sets `basePath` to the path itself and then requires it to be a
@@ -318,7 +319,7 @@ object StreamOps {
     * (same match, but basePath inference falls back to the parent dir).
     */
   def readStream(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = Parquet.schema(spark, path)
     // getAbsoluteFile: a bare relative filename has a null getParent,
     // which would produce a "null/{name}" glob. (Known limitation: Hadoop
     // {} alternation cannot escape commas, so a FILE name containing ','

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Parquet}
 
 /** Synthetic detections/locations generator — capability match for the
   * reference's data tool (reference `tools/GenerateParquet.scala:23-31`:
@@ -111,7 +111,7 @@ object GenerateData {
       val (dataA, dataB) = generate(spark, c)
       dataA.write.mode("overwrite").parquet(s"${c.outputDir}/dataA")
       dataB.write.mode("overwrite").parquet(s"${c.outputDir}/dataB")
-      val written = spark.read.parquet(s"${c.outputDir}/dataA")
+      val written = Parquet.read(spark, s"${c.outputDir}/dataA")
       val n = written.count()
       val distinct = written.select("detection_oid").distinct().count()
       println(s"[generate] dataA rows=$n distinct_detections=$distinct " +

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
-import graft.GraftSession
+import graft.{GraftSession, Parquet}
 import graft.operators.Stats
 
 /** Parquet inspector/profiler — capability match for the reference's
@@ -34,7 +34,7 @@ object InspectParquet {
   }
 
   def profile(spark: SparkSession, path: String, limit: Int = 10): Unit = {
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     println(s"[inspect] $path")
     println(s"rows: ${df.count()}")
     df.printSchema()

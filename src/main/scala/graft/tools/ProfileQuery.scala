@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler._
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-stage measurement harness for one or more declared queries
   * (guide §1: measure first, empirically, at the stage level).
@@ -51,14 +52,19 @@ object ProfileQuery {
     // (jobId, call site, submit ns, end ns) — per-job wall attribution
     val jobLog = mutable.ArrayBuffer.empty[(Int, String, Long, Long)]
     private val jobStartNs = mutable.Map.empty[Int, (String, Long)]
+    // jobs that only read a parquet footer for schema inference
+    var inferJobs = 0
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs += 1
+      if (j.stageInfos.exists(_.details.contains("mergeSchemasInParallel"))) inferJobs += 1
       val p = Option(j.properties)
-      val site = p.flatMap(x => Option(x.getProperty("spark.sql.execution.id")))
+      val label = p.flatMap(x => Option(x.getProperty("spark.sql.execution.id")))
         .flatMap(id => execSite.get(id.toLong))
         .orElse(p.flatMap(x => Option(x.getProperty("spark.job.description"))))
-        .orElse(j.stageInfos.flatMap(si => graftFrame(si.details)).headOption)
-        .getOrElse("?")
+      val site = (label, p.flatMap(x => Option(x.getProperty("sql.streaming.queryId"))).flatMap(streamFrame)) match {
+        case (Some(l), Some(f)) => s"$l @ $f"
+        case _ => label.orElse(j.stageInfos.flatMap(si => graftFrame(si.details)).headOption).getOrElse("?")
+      }
       jobStartNs(j.jobId) = (site, System.nanoTime())
       j.stageIds.foreach(sid =>
         stageSite(sid) = s"job$jobs " + site.replace("\n", " ").take(80))
@@ -72,6 +78,15 @@ object ProfileQuery {
       graftFrame(s.stageInfo.details)
         .foreach(l => stageSite(s.stageInfo.stageId) = l.take(90))
     }
+    // A micro-batch's jobs all carry the stream's description, and their
+    // stages the call site that started the stream. The stream's thread,
+    // normally still inside the action when its job starts, names the call
+    // site within the batch: its innermost graft frame.
+    private def streamFrame(queryId: String): Option[String] =
+      Thread.getAllStackTraces.asScala.collectFirst {
+        case (t, st) if t.getName.startsWith("stream execution thread") && t.getName.contains(s"id = $queryId") =>
+          graftFrame(st.map(f => s"${f.getClassName}.${f.getMethodName}(${f.getFileName}:${f.getLineNumber})").mkString("\n"))
+      }.flatten
     // first graft frame of a stage's creation site = which operator/
     // protocol action the stage (and a job with no SQL execution or
     // description, e.g. a schema-inference job) belongs to
@@ -166,7 +181,7 @@ object ProfileQuery {
         Thread.sleep(300)
         spark.sparkContext.removeSparkListener(agg)
         println(f"[profile] $name pass$pass wall=$wall%.2fs jobs=${agg.jobs} " +
-          f"stages=${agg.stages.size} taskTime=${agg.stages.valuesIterator.map(_.taskMs).sum / 1e3}%.2fs")
+          f"infer=${agg.inferJobs} stages=${agg.stages.size} taskTime=${agg.stages.valuesIterator.map(_.taskMs).sum / 1e3}%.2fs")
       }
       if (sampler != null) { sampler.halted = true; sampler.join(200); sampler.report(name) }
       // per-call-site job rollup: which protocol action owns the jobs
@@ -178,7 +193,7 @@ object ProfileQuery {
         .sortBy(-_._3)
       println(s"[profile] $name jobs by call site (last pass):")
       bySite.take(20).foreach { case (site, n, ms) =>
-        println(f"  jobs=$n%3d wall=${ms / 1e3}%6.2fs  ${site.replace("\n", " ").take(90)}")
+        println(f"  jobs=$n%3d wall=${ms / 1e3}%6.2fs  ${site.replace("\n", " ").take(200)}")
       }
       val top = agg.stages.toSeq.sortBy(-_._2.taskMs).take(25)
       println(f"[profile] $name top stages by task time (last pass):")

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Recall-vs-cost curves for the APPROXIMATE dedup tier — the
@@ -44,7 +45,7 @@ object RecallCurves {
 
     // ---------------- MinHash banding ----------------
     ScaleProof.synthesizeZipfDocs(spark, s"$work/zipf", nDocs)
-    val docs = spark.read.parquet(s"$work/zipf/documents.parquet")
+    val docs = Parquet.read(spark, s"$work/zipf/documents.parquet")
       .materialized
     val plantedIds = spark.range(nDocs)
       .filter(pmod(col("id"), lit(10)) === 9)

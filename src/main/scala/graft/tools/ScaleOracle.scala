@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Parquet
 
 /** sf1.0 ORACLE dataset — a 10× replica of every sf0.1 table with
   * per-copy KEY offsets, written so the driver's own correctness gate
@@ -46,12 +47,12 @@ object ScaleOracle {
     val spark = graft.GraftSession.local("graft-scale-oracle")
 
     def table(name: String): DataFrame =
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      Parquet.read(spark, s"$sfDir/$name.parquet")
     def write(name: String, df: DataFrame): Unit = {
       df.repartition(32).write.mode("overwrite")
         .parquet(s"$out/$name.parquet")
       System.err.println(s"[scaleoracle] $name: " +
-        spark.read.parquet(s"$out/$name.parquet").count() + " rows")
+        Parquet.read(spark, s"$out/$name.parquet").count() + " rows")
     }
 
     // fixed dims verbatim — category spaces, not identity spaces
@@ -77,10 +78,10 @@ object ScaleOracle {
     // while the mutated form keeps the oracle's pair space ∝ corpus.
     ScaleProof.synthesize(spark, sfDir, out, copies)
     System.err.println("[scaleoracle] documents: " +
-      spark.read.parquet(s"$out/documents.parquet").count() + " rows")
+      Parquet.read(spark, s"$out/documents.parquet").count() + " rows")
     ScaleProof.synthesizeEmbeddings(spark, sfDir, out, copies)
     System.err.println("[scaleoracle] embeddings: " +
-      spark.read.parquet(s"$out/embeddings.parquet").count() + " rows")
+      Parquet.read(spark, s"$out/embeddings.parquet").count() + " rows")
     // Zipf-vocabulary PLANTED-pair corpus for the three pair-graph
     // flagships (q27/q42/q229), at the same decade doc count: the
     // mutated word-soup replica above has a ~31-word vocabulary, which
@@ -103,7 +104,7 @@ object ScaleOracle {
     ScaleProof.synthesizeZipfDocs(spark, s"$out/zipf", zipfDocs,
       rewriteDenom = 100)
     System.err.println("[scaleoracle] zipf documents: " +
-      spark.read.parquet(s"$out/zipf/documents.parquet").count() + " rows")
+      Parquet.read(spark, s"$out/zipf/documents.parquet").count() + " rows")
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Parquet
 import graft.operators.Iterate.MaterializeOps
 
 /** Two-decade scaling measurement — runs flagship compositions at
@@ -81,7 +82,7 @@ object ScaleProof {
               .otherwise(w)), " ")).as("text"),
         col("lang"), col("source"), col("n_chars"))
     replicated.repartition(32).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    spark.read.parquet(s"$outDir/documents.parquet").count()
+    Parquet.read(spark, s"$outDir/documents.parquet").count()
   }
 
   /** Zipf-vocabulary corpus for the TF-IDF cosine join (q191): term
@@ -106,7 +107,7 @@ object ScaleProof {
           lit(vocab - 1L)))), " ").as("text"))
     docs.repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
-    spark.read.parquet(s"$outDir/documents.parquet").count()
+    Parquet.read(spark, s"$outDir/documents.parquet").count()
   }
 
   /** Zipf-vocabulary corpus WITH planted near-duplicates, full
@@ -171,7 +172,7 @@ object ScaleProof {
     docs.withColumn("n_chars", length(col("text")).cast("long"))
       .repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
-    spark.read.parquet(s"$outDir/documents.parquet").count()
+    Parquet.read(spark, s"$outDir/documents.parquet").count()
   }
 
   /** Replicated embeddings with per-copy sign-flip mutation: copy 0 is
@@ -198,7 +199,7 @@ object ScaleProof {
         col("label"))
     replicated.repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/embeddings.parquet")
-    spark.read.parquet(s"$outDir/embeddings.parquet").count()
+    Parquet.read(spark, s"$outDir/embeddings.parquet").count()
   }
 
   /** 10x orders + lineitem with per-copy key offsets — disjoint copies
@@ -238,7 +239,7 @@ object ScaleProof {
         col("ts"), col("user_id"), col("event_type"), col("value"))
       .repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/events.parquet")
-    spark.read.parquet(s"$outDir/events.parquet").count()
+    Parquet.read(spark, s"$outDir/events.parquet").count()
   }
 
   def main(args: Array[String]): Unit = {
@@ -374,7 +375,7 @@ object ScaleProof {
           if nDocs / 50000 <= copyCap) yield {
         val dir = s"$work/$tag"
         val rows = synthesizeZipf(spark, dir, nDocs)
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        val docs = Parquet.read(spark, s"$dir/documents.parquet")
         val dfT = docs.select(col("doc_id").as("did"),
             explode(split(col("text"), " ")).as("t"))
           .groupBy("did", "t").agg(count(lit(1)).as("tf"))
