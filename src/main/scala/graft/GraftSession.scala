@@ -29,6 +29,15 @@ import org.apache.spark.sql.SparkSession
   * Hadoop caches one `FileSystem` per scheme and user for the whole JVM,
   * so a `file:` filesystem obtained from a plain `Configuration` before
   * the first session is built stays the stock class for the JVM's life.
+  *
+  * The root Hadoop conf (`sparkContext.hadoopConfiguration`, which every
+  * `newHadoopConf()` of every session, clone and stream copies) keeps no
+  * per-key source records ([[HadoopConf.dropSources]]). Hadoop serializes
+  * each key's record through its own gzip stream and inflates it again on
+  * read, and the conf ships in every file write's task binary and every
+  * parquet scan's broadcast: one gzip stream per key (over a thousand) per
+  * serialization. Keys and values stay as they are; only the diagnostic
+  * `getPropertySources` answers null.
   */
 object GraftSession {
   /** `conf` entries are applied after (and so override) the defaults; each
@@ -62,6 +71,9 @@ object GraftSession {
     // native SQL functions + the null-guard pruning optimizer rule --
     // idempotent, so repeated getOrCreate callers are safe
     graft.plans.GraftExtensions.register(spark)
+    // no per-key source records in any copy of the root conf (see above);
+    // after the shared state, which sets the warehouse key on the root conf
+    HadoopConf.dropSources(spark.sparkContext.hadoopConfiguration)
     spark
   }
 

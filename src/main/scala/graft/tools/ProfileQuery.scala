@@ -54,6 +54,9 @@ object ProfileQuery {
     private val jobStartNs = mutable.Map.empty[Int, (String, Long)]
     // jobs that only read a parquet footer for schema inference
     var inferJobs = 0
+    // summed task executorDeserializeTime: task binaries, closures and the
+    // Hadoop confs they carry
+    var deserMs = 0L
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs += 1
       if (j.stageInfos.exists(_.details.contains("mergeSchemasInParallel"))) inferJobs += 1
@@ -105,6 +108,7 @@ object ProfileQuery {
       val m = t.taskMetrics
       if (m != null) {
         a.tasks += 1
+        deserMs += m.executorDeserializeTime
         a.taskMs += m.executorRunTime
         a.inputBytes += m.inputMetrics.bytesRead
         a.shuffleRead += m.shuffleReadMetrics.totalBytesRead
@@ -181,7 +185,8 @@ object ProfileQuery {
         Thread.sleep(300)
         spark.sparkContext.removeSparkListener(agg)
         println(f"[profile] $name pass$pass wall=$wall%.2fs jobs=${agg.jobs} " +
-          f"infer=${agg.inferJobs} stages=${agg.stages.size} taskTime=${agg.stages.valuesIterator.map(_.taskMs).sum / 1e3}%.2fs")
+          f"infer=${agg.inferJobs} deser=${agg.deserMs / 1e3}%.2fs " +
+          f"stages=${agg.stages.size} taskTime=${agg.stages.valuesIterator.map(_.taskMs).sum / 1e3}%.2fs")
       }
       if (sampler != null) { sampler.halted = true; sampler.join(200); sampler.report(name) }
       // per-call-site job rollup: which protocol action owns the jobs
